@@ -13,46 +13,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.max(4, Runtime.getRuntime.availableProcessors()).toString)
-    // GRAFT_MASTER/GRAFT_JARS mirror graft.Verify's multi-JVM overrides
-    // (e.g. local-cluster[2,8,4096] + the sbt-package jar) so the SAME
-    // harness that times local[32] can time a real two-executor-JVM deploy
-    // — serialization/broadcast costs are invisible in one JVM
-    val master = sys.env.getOrElse("GRAFT_MASTER", s"local[$cpus]")
-    val builder0 = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // let AQE re-optimize CACHED plan materialization too (off by default
-      // for partitioning-compat only): catalog queries persist intermediates
-      // (signature tables, occurrence caches, loop inputs), and without this
-      // every persist materializes at the session width regardless of size —
-      // q_perplexity_tiers 496→29 tasks, q_digest_persist 468→32 at sf0.1,
-      // and at 100 TB the same flag sizes cached partitions to AQE's
-      // advisory bytes instead of a fixed width (guide §2.2/§6). Loop inputs
-      // whose co-partitioning must survive caching pin it explicitly
-      // (Graph.scala repartition(width, col) notes). Oracle re-verified
-      // 252/252 with the flag on (r17 optimization round).
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      // A/B lever for the narrow-input rebalance (operators.Scale.fanOut);
-      // unset = library default (on)
-      .config("graft.fanout.enabled", sys.env.getOrElse("GRAFT_FANOUT", "true"))
-    // GRAFT_CONF="k=v;k2=v2": extra session conf for same-window config
-    // A/Bs (the guide §1 discipline: measure a candidate config against
-    // the unset default in one window, then bake the winner into the code
-    // where the driver's own runs pick it up). The driver never sets it.
-    val builder1 = parseGraftConf(sys.env.get("GRAFT_CONF"))
-      .foldLeft(builder0) { case (b, (k, v)) => b.config(k, v) }
-    val spark = sys.env.get("GRAFT_JARS")
-      .fold(builder1)(j => builder1.config("spark.jars", j))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
 
     // warmup: scan + shuffle + codegen on the biggest table
     Queries.q1_agg(spark, sfDir).count()
@@ -162,31 +123,30 @@ object Bench {
     // longer depends on log formatting at all. The file inherits fullOut's
     // subset/scale redirection: a SPARK_GRAFT_ONLY or off-scale run must
     // not overwrite the committed full-catalog line either.
-    val lineOut =
-      if (fullOut.contains("BENCH_FULL")) fullOut.replace("BENCH_FULL", "BENCH_LINE")
-      else fullOut + ".line.json"
-    java.nio.file.Files.write(
+    // A failed line write only warns: the run is finished and BENCH_FULL
+    // already holds it.
+    val lineOut = linePath(fullOut)
+    try java.nio.file.Files.write(
       java.nio.file.Paths.get(lineOut),
       (stdoutLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    catch { case e: Exception =>
+      System.err.println(s"[bench] WARNING: could not write $lineOut: $e")
+    }
     println(stdoutLine)
     spark.stop()
   }
 
-  /** GRAFT_CONF="k=v;k2=v2" → pairs; malformed tokens (no '=') are warned
-    * about LOUDLY instead of silently dropped — a typo'd A/B lever would
-    * otherwise measure the default config while the operator believes the
-    * candidate applied (r17 advice). Shared by Profile/PlanDump. */
-  def parseGraftConf(env: Option[String]): Seq[(String, String)] =
-    env.map(_.split(";").toSeq).getOrElse(Nil).filter(_.trim.nonEmpty).flatMap { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) if k.trim.nonEmpty => Some((k.trim, v.trim))
-        case _ =>
-          System.err.println(
-            s"[graft] WARNING: GRAFT_CONF token '$kv' is not k=v — IGNORED " +
-              "(the A/B would silently measure the default config)")
-          None
-      }
-    }
+  /** The BENCH_LINE file next to `fullOut`: BENCH_FULL → BENCH_LINE in the
+    * file name only (a directory named BENCH_FULL stays), else
+    * `<name>.line.json`. */
+  def linePath(fullOut: String): String = {
+    val p = java.nio.file.Paths.get(fullOut)
+    val name = p.getFileName.toString
+    val line =
+      if (name.contains("BENCH_FULL")) name.replace("BENCH_FULL", "BENCH_LINE")
+      else name + ".line.json"
+    Option(p.getParent).fold(line)(_.resolve(line).toString)
+  }
 
   /** Renders both bench artifacts from the timing results; pure so the
     * failure-accounting contract is unit-testable (GatesSpec).
@@ -355,11 +315,11 @@ object Bench {
           .filter(k => prevQueries(k) > 0)
           .map(k => byName(k) / prevQueries(k)).sorted
         val controlRatio =
-          if (perCellRatios.isEmpty) -1.0
+          if (perCellRatios.isEmpty) None
           else {
             val n = perCellRatios.size
-            if (n % 2 == 1) perCellRatios(n / 2)
-            else (perCellRatios(n / 2 - 1) + perCellRatios(n / 2)) / 2.0
+            Some(if (n % 2 == 1) perCellRatios(n / 2)
+              else (perCellRatios(n / 2 - 1) + perCellRatios(n / 2)) / 2.0)
           }
         val ctl =
           if (controlPanel.isEmpty) """"controls":null"""
@@ -369,16 +329,16 @@ object Bench {
             val sumRatio = if (cp > 0) cc / cp else -1.0
             val names = controlPanel.map("\"" + _ + "\"")
               .mkString("[", ",", "]")
-            s""""controls":{"cells":$names,"prev_sec":${fmt(cp)},"cur_sec":${fmt(cc)},"ratio":${fmt(sumRatio)},"ratio_median":${fmt(controlRatio)}}"""
+            s""""controls":{"cells":$names,"prev_sec":${fmt(cp)},"cur_sec":${fmt(cc)},"ratio":${fmt(sumRatio)},"ratio_median":${controlRatio.fold("null")(fmt)}}"""
           }
         // drift-NORMALIZED ratio: total ratio divided by the control
         // panel's (median) ratio, so host drift (which moves both alike)
         // cancels and a machine threshold on this one field flags real
         // regressions even on a drifting host (r13 verdict #7)
         val adj =
-          if (controlRatio > 0 && ratio > 0)
-            s""""ratio_drift_adjusted":${fmt(ratio / controlRatio)}"""
-          else """"ratio_drift_adjusted":null"""
+          controlRatio.filter(c => c > 0 && ratio > 0)
+            .fold(""""ratio_drift_adjusted":null""")(c =>
+              s""""ratio_drift_adjusted":${fmt(ratio / c)}""")
         val base = if (baselineId.isEmpty) "" else "," + baselineId
         s""""vs_prev_round":{"common_keys":${common.size},"prev_sec":${fmt(prevSum)},"cur_sec":${fmt(curSum)},"ratio":${fmt(ratio)},$adj,$ctl$base}"""
       }

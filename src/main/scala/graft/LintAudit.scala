@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Catalog-wide scale-lint audit (diagnostic main): runs
   * [[graft.plans.PlanLint]] over every catalog query and prints each
   * finding — the per-round evidence that every cartesian/global-window in
@@ -21,13 +19,7 @@ import org.apache.spark.sql.SparkSession
   */
 object LintAudit {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.ansi.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(defaultCores = 4)
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {

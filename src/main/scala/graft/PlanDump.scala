@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 import java.nio.file.{Files, Paths}
@@ -13,8 +12,8 @@ import java.nio.file.{Files, Paths}
   *
   *   sbt "runMain graft.PlanDump plans/r17 after q_a,q_b [sfDir]"
   *
-  * Session config mirrors [[Bench]]; GRAFT_CONF overrides apply for
-  * capturing "before" plans of a config change.
+  * Same session as [[Bench]] ([[Harness]]); GRAFT_CONF overrides apply
+  * for capturing "before" plans of a config change.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -22,28 +21,12 @@ object PlanDump {
     val tag = args(1)
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = args.lift(3).getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.max(4, Runtime.getRuntime.availableProcessors()).toString)
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true") // cached-plan AQE, the Bench session default (note there)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("graft.fanout.enabled", sys.env.getOrElse("GRAFT_FANOUT", "true"))
-    val builder = Bench.parseGraftConf(sys.env.get("GRAFT_CONF"))
-      .foldLeft(builder0) { case (b, (k, v)) => b.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
       val sb = new StringBuilder
-      sb.append(s"# $name ($tag) — sfDir=$sfDir, master=local[$cpus]\n\n")
+      sb.append(s"# $name ($tag) — sfDir=$sfDir, master=${spark.sparkContext.master}\n\n")
       try {
         val df = fn(spark, sfDir)
         sb.append("## initial plan (explain formatted)\n\n")

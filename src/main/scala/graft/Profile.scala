@@ -2,14 +2,13 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 /** Measurement aid (guide §1): runs selected catalog queries under the
-  * SAME session config as [[Bench]] and reports, per query, the wall time
-  * plus the scheduler-side volume the timed window paid — jobs, stages,
-  * tasks, task-time sum, shuffle bytes — so "where does the time go" is
+  * SAME session as [[Bench]] ([[Harness]]) and reports, per query, the
+  * wall time plus the scheduler-side volume the timed window paid — jobs,
+  * stages, tasks, task-time sum, shuffle bytes — so "where does the time go" is
   * answered with numbers instead of guesses. At bench scale (sf0.1,
   * 17 MB of parquet) most catalog cells are scheduling/planning-bound,
   * so the job/stage/task counts ARE the cost model; a cell whose task
@@ -25,26 +24,7 @@ object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.max(4, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true") // cached-plan AQE, the Bench session default (note there)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("graft.fanout.enabled", sys.env.getOrElse("GRAFT_FANOUT", "true"))
-      .getOrCreate()
-    // GRAFT_CONF="k=v;k2=v2" extra conf, the Bench A/B lever — applied via
-    // runtime conf here (Profile owns no builder-time-only keys); malformed
-    // tokens warn loudly via the shared parser (r17 advice)
-    Bench.parseGraftConf(sys.env.get("GRAFT_CONF"))
-      .foreach { case (k, v) => spark.conf.set(k, v) }
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
 
     val jobs = new AtomicInteger(0)
     val stages = new AtomicInteger(0)
@@ -90,12 +70,13 @@ object Profile {
       // stable across two consecutive reads (a fixed sleep undercounted
       // large-backlog cells — the 400+-task before-runs this tool exists
       // to measure; r17 advice), bounded so a dead bus cannot hang us
-      var prev = (-1, -1, -1L)
+      var prev = (-1, -1, -1L, -1L, -1L)
       var same = 0
       var waited = 0
       while (same < 2 && waited < 5000) {
         Thread.sleep(100); waited += 100
-        val now = (jobs.get + stages.get, tasks.get, taskTimeMs.get)
+        val now = (jobs.get + stages.get, tasks.get, taskTimeMs.get,
+          shufRead.get, shufWrite.get)
         if (now == prev) same += 1 else { same = 0; prev = now }
       }
       println(f"$name%-28s $wall%8.3f ${jobs.get}%5d ${stages.get}%6d " +

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Scale soak: runs the scale-sensitive pipeline families once at a given
   * SF directory and prints per-pipeline wall time + total shuffle-write
@@ -47,20 +46,8 @@ object Soak {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.max(4, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true") // cached-plan AQE, the Bench session default (note there)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
+    val cpus = spark.sparkContext.defaultParallelism
     Queries.portableMode = false // production hash mode
     val acc = new ShuffleAcc
     spark.sparkContext.addSparkListener(acc)
@@ -209,18 +196,16 @@ object Soak {
 
     val out = sys.env.get("SPARK_GRAFT_SOAK_OUT")
     out.foreach { p =>
-      // JSON-escape the free-form fields (the Verify.q discipline): a path
-      // with a quote/backslash, or a non-numeric SPARK_GRAFT_CPUS, would
-      // otherwise make json.load reject the artifact and silently zero the
-      // round's soak evidence
+      // JSON-escape the free-form path (the Verify.q discipline): a quote
+      // or backslash would otherwise make json.load reject the artifact and
+      // silently zero the round's soak evidence
       def esc(s: String): String = s.flatMap {
         case '"'  => "\\\""
         case '\\' => "\\\\"
         case c if c < ' ' => f"\\u${c.toInt}%04x"
         case c => c.toString
       }
-      val cpusJson = if (cpus.matches("[0-9]+")) cpus else "\"" + esc(cpus) + "\""
-      val doc = s"""{"sf_dir":"${esc(dir)}","cpus":$cpusJson,"repeat":$repeat,"failed":$failed,""" +
+      val doc = s"""{"sf_dir":"${esc(dir)}","cpus":$cpus,"repeat":$repeat,"failed":$failed,""" +
         s""""pipelines":[${entries.mkString(",")}]}"""
       java.nio.file.Files.write(java.nio.file.Paths.get(p),
         doc.getBytes(java.nio.charset.StandardCharsets.UTF_8))

@@ -32,41 +32,10 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // GRAFT_MASTER overrides the master URL for the multi-JVM smoke
-    // (e.g. local-cluster[2,4,2048] — separate executor JVMs, so closure
-    // capture / Encoder / broadcast serialization actually crosses a
-    // process boundary); GRAFT_JARS ships the packaged library to those
-    // executors. Unset → the driver's plain local[cpus] contract.
-    val master = sys.env.getOrElse("GRAFT_MASTER", s"local[$cpus]")
-    val builder0 = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      // cached-plan AQE, same as the Bench session (see the note there):
-      // correctness runs under the exact config the bench times, so the
-      // oracle sweep proves the flag result-neutral
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-    // GRAFT_STATE_STORE=rocksdb runs every streaming twin on the RocksDB
-    // state store (the production provider for state that outgrows the
-    // executor heap — the 100 TB shape); default is Spark's HDFS-backed
-    // in-memory provider.
-    val builder1 =
-      if (sys.env.get("GRAFT_STATE_STORE").contains("rocksdb"))
-        builder0.config("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      else builder0
-    val spark = sys.env.get("GRAFT_JARS")
-      .fold(builder1)(j => builder1.config("spark.jars", j))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet carries TIMESTAMP(NANOS); read as epoch-nano longs
-      // and convert exactly in the queries (ts div 1000 → micros).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // wrapping Long arithmetic (minhash permutations) needs non-ANSI semantics
-      .config("spark.sql.ansi.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the exact session the bench times, so the oracle sweep proves the
+    // recipe result-neutral; GRAFT_MASTER/GRAFT_JARS/GRAFT_STATE_STORE give
+    // the multi-JVM and RocksDB legs (see Harness)
+    val spark = Harness.session(defaultCores = 4)
     // correctness runs the portable (md5-derived) hash mode: the oracle SQL
     // recomputes those exact signatures/buckets. Bench leaves the flag false
     // and measures the xxhash64 production paths.

@@ -89,8 +89,8 @@ object Graph {
     // width pinned EXPLICITLY (repartition(width, col), not the advisory
     // repartition(col)): the cached relation's hash partitioning is what
     // lets every round shuffle only the labels side, and with
-    // canChangeCachedPlanOutputPartitioning=true (session default as of
-    // r17 — the cached-materialization coalescing win) AQE may coalesce an
+    // canChangeCachedPlanOutputPartitioning=true (StreamContext.sessionConf
+    // — the cached-materialization coalescing win) AQE may coalesce an
     // advisory keyed repartition inside a cached plan, downgrading its
     // reported partitioning and re-shuffling the edges EVERY round
     // (measured +12% on this cell when left advisory)

@@ -152,20 +152,36 @@ object StreamContext {
     def pumpThread: Thread = pump
   }
 
-  /** Local session with the defaults this engine wants: shuffle partitions
-    * sized for the machine (not 200), AQE on for runtime re-planning (skew
-    * joins, partition coalescing — load-bearing at large scale), UTC. */
-  def localSession(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName("renoirspark")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // wrapping Long arithmetic (minhash permutations) needs non-ANSI semantics
-      .config("spark.sql.ansi.enabled", "false")
+  /** The one session recipe: every main, example and spec builds its
+    * session from this conf. Shuffle partitions sized for the machine (not
+    * 200); AQE on for runtime re-planning (skew joins, partition coalescing
+    * — load-bearing at large scale); AQE may also re-plan CACHED plan
+    * materialization (off by default for partitioning-compat only — without
+    * it every persist materializes at the session width regardless of size;
+    * loop inputs whose co-partitioning must survive caching pin it
+    * explicitly, see the Graph.scala repartition notes); UTC; no UI;
+    * TIMESTAMP(NANOS) parquet read as epoch-nano longs; non-ANSI semantics
+    * for wrapping Long arithmetic (minhash permutations). */
+  def sessionConf(cores: Int): Seq[(String, String)] = Seq(
+    "spark.sql.shuffle.partitions" -> cores.toString,
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.ui.enabled" -> "false",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.sql.ansi.enabled" -> "false")
+
+  /** Local session built from [[sessionConf]]. */
+  def localSession(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession =
+    session(s"local[$cores]", sessionConf(cores))
+
+  /** `getOrCreate` with `conf` on `master`. On an existing session only the
+    * runtime SQL keys of `conf` take effect (Spark's getOrCreate contract). */
+  private[graft] def session(master: String, conf: Seq[(String, String)]): SparkSession = {
+    val spark = conf
+      .foldLeft(SparkSession.builder().master(master).appName("renoirspark")) {
+        case (b, (k, v)) => b.config(k, v)
+      }
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

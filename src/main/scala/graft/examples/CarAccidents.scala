@@ -1,7 +1,6 @@
 package graft.examples
 
 import graft.api.{Stream, StreamContext}
-import org.apache.spark.sql.SparkSession
 
 /** The reference's car-accidents analytics workload (reference:
   * examples/car_accidents.rs) on the typed façade — three queries over an
@@ -78,10 +77,7 @@ object CarAccidents {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = StreamContext.localSession(4)
     import spark.implicits._
     val ctx = new StreamContext(spark)
     val src = ctx.streamIter(sample)

@@ -1,7 +1,7 @@
 package graft.examples
 
 import graft.operators.Iteration
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 
 /** Batch-gradient-descent logistic regression via `replay` — the reference's
   * examples/logistic_regression.rs intent (the reference file is disabled as
@@ -61,10 +61,7 @@ object LogisticRegression {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.api.StreamContext.localSession(4)
     import spark.implicits._
     // deterministic linearly-separable set: y = [2*x1 - x2 + 0.5 > 0]
     val pts = spark.range(1000).map { i =>

@@ -1,7 +1,6 @@
 package graft.examples
 
 import graft.api.{Joins, Stream, StreamContext}
-import org.apache.spark.sql.SparkSession
 
 /** Triangle counting in the reference's fold shape (reference:
   * examples/triangles_fold.rs): normalize each edge to (lo, hi), group by the
@@ -71,10 +70,7 @@ object Triangles {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = StreamContext.localSession(4)
     import spark.implicits._
     val ctx = new StreamContext(spark)
     // two disjoint 4-cliques: C(4,3) * 2 = 8 triangles

@@ -2,7 +2,6 @@ package graft
 
 import graft.functions.{Dedup, Similarity}
 import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
 
 /** ANSI-mode robustness: Spark 4 defaults to spark.sql.ansi.enabled=true,
   * where overflowing Column arithmetic THROWS instead of wrapping. The
@@ -11,13 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * stock Spark 4 defaults must get bit-identical results to the ansi-off
   * sessions Verify/Bench run — pinned here by running the same inputs
   * through both session modes. */
-class AnsiSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.ansi.enabled", "false")
-    .getOrCreate()
+class AnsiSpec extends SparkSpec {
   val dir = "/root/testdata/sf0.001"
 
   /** Runs `f` in a sibling session (same SparkContext) with ANSI ON. */
@@ -40,7 +33,6 @@ class AnsiSpec extends AnyFunSuite {
   }
 
   test("minhash near-dups are identical under ANSI mode (wrapping math is JVM-side)") {
-    spark.sparkContext.setLogLevel("WARN")
     def run(s: SparkSession): Set[(Long, Long, Double)] = {
       val docs = s.read.parquet(s"$dir/documents.parquet")
       val out = Dedup.minhashNearDups(docs, "doc_id", "text", minEstSim = 0.5)

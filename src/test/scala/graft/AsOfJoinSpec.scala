@@ -1,20 +1,12 @@
 package graft
 
 import graft.operators.AsOfJoin
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Closed-form as-of join semantics: backward/forward direction, inclusive
   * equal-ts match, left-outer nulls, tolerance gate, tie-break, and the
   * one-shuffle plan shape (no Cartesian/range-join candidate blow-up). */
-class AsOfJoinSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class AsOfJoinSpec extends SparkSpec {
   private def quotes = {
     val s = spark
     import s.implicits._

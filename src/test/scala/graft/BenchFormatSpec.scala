@@ -99,6 +99,17 @@ class BenchFormatSpec extends AnyFunSuite {
     assert(full.contains(""""ratio_drift_adjusted":2.545"""), full)
   }
 
+  test("ratio_median is null, not a sentinel, when no control has a usable ratio") {
+    // the control is present and green on both sides but its previous time
+    // is 0, so no per-cell ratio exists
+    val prev = Map("a" -> 1.0, "q_triangles" -> 0.0)
+    val cur = Seq("a" -> 2.0, "q_triangles" -> 1.0)
+    val (full, _, _) =
+      Bench.renderArtifacts(cur, 1, "0.1", "BENCH_FULL.json", prev)
+    assert(full.contains(""""ratio_median":null}"""), full)
+    assert(full.contains(""""ratio_drift_adjusted":null"""), full)
+  }
+
   test("controls panel members resolve to catalog queries and none is /tmp-cache-backed") {
     val missing = Bench.controls.filterNot(Queries.all.contains)
     assert(missing.isEmpty, s"control cells not in the catalog: $missing")
@@ -143,9 +154,16 @@ class BenchFormatSpec extends AnyFunSuite {
     assert(staleDeny.isEmpty, s"denylist names not in the catalog: $staleDeny")
   }
 
+  test("BENCH_LINE path rewrites the file name only") {
+    assert(Bench.linePath("BENCH_FULL.json") == "BENCH_LINE.json")
+    assert(Bench.linePath("BENCH_FULL_sf0.001.json") == "BENCH_LINE_sf0.001.json")
+    assert(Bench.linePath("/x/BENCH_FULL/BENCH_FULL.json") == "/x/BENCH_FULL/BENCH_LINE.json")
+    assert(Bench.linePath("/x/BENCH_FULL/out.json") == "/x/BENCH_FULL/out.json.line.json")
+  }
+
   test("parseGraftConf keeps k=v pairs and drops malformed tokens loudly") {
-    assert(Bench.parseGraftConf(None) == Nil)
-    assert(Bench.parseGraftConf(Some("a=1;b = x=y ;;oops;=v")) ==
+    assert(Harness.parseGraftConf(None) == Nil)
+    assert(Harness.parseGraftConf(Some("a=1;b = x=y ;;oops;=v")) ==
       Seq(("a", "1"), ("b", "x=y")))
   }
 

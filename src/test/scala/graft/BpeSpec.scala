@@ -1,24 +1,15 @@
 package graft
 
 import graft.functions.BpeTrainer
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** BPE trainer: the learned merge sequence must match the hand-derived
   * classic-BPE result on a known corpus, merges must be greedy
   * left-to-right on overlapping runs, and tokenize must replay the learned
   * merges exactly. */
-class BpeSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class BpeSpec extends SparkSpec {
   test("learned merges match classic BPE on the low/lower/lowest corpus") {
     val s = spark; import s.implicits._
-    s.sparkContext.setLogLevel("WARN")
     // word freqs: low=20, lower=10, lowest=10
     val docs = Seq.fill(10)("low low lower lowest").toDF("text")
     val got = BpeTrainer.train(docs, "text", merges = 3)

@@ -1,21 +1,8 @@
 package graft
 
 import graft.functions.CacheKey
-import org.scalatest.funsuite.AnyFunSuite
 
-class CacheKeySpec extends AnyFunSuite {
-  // the suites' shared lazy-session pattern (NearDupSpec et al.): when
-  // another suite already built the JVM-wide session these configs are
-  // no-ops by design; building an ad-hoc local[2] session here instead
-  // leaked it into every later suite whenever this one ran first
-  lazy val sharedSpark: org.apache.spark.sql.SparkSession =
-    org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .getOrCreate()
-
+class CacheKeySpec extends SparkSpec {
   test("cache key is parameter-complete: any param change builds a fresh path") {
     val base = CacheKey.path("copurchase", 1, "sf0.01", Seq(20, 2L), "100_42")
     // same inputs -> same path (the build-once/query-many reuse contract)
@@ -62,7 +49,6 @@ class CacheKeySpec extends AnyFunSuite {
     // only, so a corpus whose VECTORS changed under unchanged ids served
     // a stale index from a prior session's /tmp. contentFp is the one
     // shared fingerprint; this pins its coverage and order-independence.
-    val spark = sharedSpark
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     def df(shift: Float) =

@@ -1,20 +1,12 @@
 package graft
 
 import graft.functions.CoOccurrence
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Market-basket co-occurrence: counts dedup within a basket, oversized
   * baskets drop whole, ratios are exact, and the per-item top-k lowers
   * to a WindowGroupLimit. */
-class CoOccurrenceSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class CoOccurrenceSpec extends SparkSpec {
   test("pairs: in-basket duplicates collapse; oversized baskets drop whole") {
     val s = spark; import s.implicits._
     // basket 1: items a,b (b twice — must count once); basket 2: a,b,c;

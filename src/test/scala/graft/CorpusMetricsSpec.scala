@@ -1,20 +1,12 @@
 package graft
 
 import graft.functions.{CorpusMetrics, InvertedIndex, Similarity}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-8 corpus metrics + retrieval/embedding additions: JS divergence
   * bounds, distinct-n closed forms, phrase-search positional semantics,
   * centroid-cosine label agreement. */
-class CorpusMetricsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class CorpusMetricsSpec extends SparkSpec {
   test("jsDivergence: 0 on identical corpora, 1 bit on disjoint, symmetric bound") {
     val s = spark; import s.implicits._
     val a = Seq("x y z", "x x").toDF("text")

@@ -1,21 +1,12 @@
 package graft
 
 import graft.functions.{QualityFilters, Redaction, Sampling, TextAnalysis}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Training-data curation operators: Gopher repetition filters,
   * deterministic hash split / stratified sampling, PII redaction. Every
   * expectation here is closed-form (hand-computed on tiny fixtures). */
-class CurationSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-  def imp = { spark.sparkContext.setLogLevel("WARN"); spark.implicits }
-
+class CurationSpec extends SparkSpec {
   test("duplicate line fractions: hand-computed") {
     val s = imp; import s._
     // 4 non-blank lines, 'aa' repeated once (3 distinct): frac = 1 - 3/4.

@@ -1,23 +1,14 @@
 package graft
 
 import graft.operators.Iteration
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Workset/solution-set iteration (reference:
   * src/operator/iteration/iterate_delta.rs): the defining property is that
   * only keys receiving deltas do work — the workset SHRINKS as keys
   * quiesce — and that early termination fires when no delta passes the
   * condition. */
-class DeltaIterateSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-  def imp = { spark.sparkContext.setLogLevel("WARN"); spark.implicits }
-
+class DeltaIterateSpec extends SparkSpec {
   test("loop/iterate respect a caller-managed cache on the init dataset") {
     val s = imp; import s._
     // a caller-cached input must come out of the loop STILL cached: the

@@ -1,24 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Closed-form semantics for the event-analytics queries: the ordered
   * funnel's stage gating (later-stage events BEFORE the prior stage don't
   * count) and the rolling z-score's strictly-preceding baseline; plus the
   * one-Exchange plan shape both rely on for scale. */
-class EventAnalyticsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
+class EventAnalyticsSpec extends SparkSpec {
   private def funnelOf(rows: Seq[(Long, String, Long)]) = {
     val s = spark; import s.implicits._
-    spark.sparkContext.setLogLevel("WARN")
     val dir = java.nio.file.Files.createTempDirectory("graft-funnel").toString
     rows.map { case (u, et, us) => (us, u, et, us, 0.0, "{}") }
       .toDF("event_id", "user_id", "event_type", "_us", "value", "props")

@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
 /** Schema-drift pin for `Queries.events()` (round-6 verdict task #2).
@@ -19,14 +17,7 @@ import java.nio.file.Files
   * breaks again, this fails in `sbt test` with the fix's location in the
   * name, instead of 20 queries silently vanishing from CORRECTNESS.
   */
-class EventsSchemaSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class EventsSchemaSpec extends SparkSpec {
   private val rows = Seq(
     // (event_id, epoch_micros, user_id, event_type, value, props)
     (1L, 1700000000000000L, 10L, "click", 1.5, """{"k":1}"""),
@@ -37,7 +28,6 @@ class EventsSchemaSpec extends AnyFunSuite {
   /** fixture A: `ts` as epoch-nano BIGINT — the loaded shape of a
     * TIMESTAMP(NANOS) column under nanosAsLong. */
   private def writeNanosLong(dir: String): Unit = {
-    spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     rows.map { case (id, us, u, t, v, p) => (id, us * 1000L, u, t, v, p) }
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")

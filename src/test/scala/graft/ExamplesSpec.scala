@@ -1,21 +1,12 @@
 package graft
 
 import graft.api.StreamContext
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end example workloads with closed-form expectations —
   * triangles_fold (keyed-fold path) and logistic regression (replay path),
   * mirroring reference/examples/triangles_fold.rs and the intent of the
   * (disabled) logistic_regression.rs. */
-class ExamplesSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-  def imp = { spark.sparkContext.setLogLevel("WARN"); spark.implicits }
-
+class ExamplesSpec extends SparkSpec {
   test("triangles_fold: cliques and triangle-free graphs, closed forms") {
     val s = imp; import s._
     val ctx = new StreamContext(spark)

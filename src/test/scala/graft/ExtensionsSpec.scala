@@ -4,20 +4,13 @@ import graft.functions.{Dedup, Similarity}
 import graft.plans.{GraftExtensions, VectorExpressions}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** SQL-function registration of the native expressions: both the
   * already-running-session path (GraftExtensions.register) and the
   * `spark.sql.extensions` construction path must expose functions whose
   * results are identical to the Column API. */
-class ExtensionsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-  def emb = { spark.sparkContext.setLogLevel("WARN")
-    spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet") }
+class ExtensionsSpec extends SparkSpec {
+  def emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
 
   test("plan lint: flags cartesian joins and global windows, passes scalable plans") {
     import graft.plans.PlanLint

@@ -1,22 +1,11 @@
 package graft
 
 import graft.api._
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Closed-form golden tests mirroring the reference's per-operator test style
   * (reference: tests/aggregators.rs:6-52 etc. — sorted-collect equality
   * against hand-computed values). */
-class FacadeSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-  lazy val ctx = new StreamContext(spark)
-  def imp = { spark.sparkContext.setLogLevel("WARN"); spark.implicits }
-
+class FacadeSpec extends SparkSpec {
   test("map / filter / flatMap / filterMap") {
     val s = imp
     import s._

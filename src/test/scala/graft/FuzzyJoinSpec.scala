@@ -1,21 +1,13 @@
 package graft
 
 import graft.functions.FuzzyJoin
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Deletion-neighborhood fuzzy join: must find EXACTLY the pairs the naive
   * O(n²) cross join finds at distance ≤ 1 — substitutions, insertions,
   * deletions, and the distance-2 shared-variant false-candidates ("ab"/"ba")
   * filtered back out by the residual. */
-class FuzzyJoinSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class FuzzyJoinSpec extends SparkSpec {
   def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
     FuzzyJoin.selfJoinWithin1(df, "id", "s")
       .select("a_id", "b_id").collect()
@@ -23,7 +15,6 @@ class FuzzyJoinSpec extends AnyFunSuite {
 
   test("equals the naive cross join on an adversarial alphabet") {
     val s = spark; import s.implicits._
-    spark.sparkContext.setLogLevel("WARN")
     // crafted cases: substitution (abc/abd), deletion (abc/ab), insertion
     // (abc/abcd), transposition at distance 2 (ab/ba — shares variants but
     // must NOT match), duplicates at distance 0, empty and 1-char strings
@@ -46,14 +37,12 @@ class FuzzyJoinSpec extends AnyFunSuite {
   test("plans an equi-join on the variant, not a cartesian") {
     val s = spark; import s.implicits._
     val df = (0 until 50).map(i => (i.toLong, s"name$i")).toDF("id", "s")
-    val bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val plan = FuzzyJoin.selfJoinWithin1(df, "id", "s")
         .queryExecution.executedPlan.toString
       assert(!plan.contains("NestedLoop") && !plan.contains("Cartesian"),
         s"fuzzy join planned a quadratic join:\n$plan")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bc)
+    }
   }
 
   test("Jaro-Winkler matches the reference vectors (DuckDB-probed semantics)") {

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
 /** Loud-failure contract for the two driver gates (round-6 verdict #3):
@@ -10,15 +9,8 @@ import java.nio.file.Files
   * sentinel result) and a `failed` count + name list in the bench JSON —
   * never silently vanish while the artifacts stay "all green".
   */
-class GatesSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class GatesSpec extends SparkSpec {
   test("Verify.runOne writes a sentinel result for an erroring query") {
-    spark.sparkContext.setLogLevel("WARN")
     val out = Files.createTempDirectory("graft-gates").toString
     val broken: (SparkSession, String) => DataFrame =
       (_, _) => throw new IllegalStateException("deliberately broken")

@@ -1,20 +1,12 @@
 package graft
 
 import graft.algorithms.Graph
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-8 graph additions: integer HITS, common-neighbor link
   * prediction, and fixed-point weighted PageRank — closed forms on tiny
   * graphs plus the invariants the fixed-point arithmetic exists for. */
-class GraphExtrasSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class GraphExtrasSpec extends SparkSpec {
   test("hits: 2-round closed form on a star-plus-chain") {
     val s = spark; import s.implicits._
     // 1 -> {10, 11, 12}; 2 -> {10}. a1 = indegree: a1(10)=2, a1(11)=a1(12)=1.

@@ -1,22 +1,14 @@
 package graft
 
 import graft.functions.{InvertedIndex, TextAnalysis}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
 /** Persistent inverted index: build/save/load/query must equal the direct
   * per-call BM25 bit for bit, and querying a saved index must prune the
   * bucket-partitioned postings scan. */
-class InvertedIndexSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-  def docs = { spark.sparkContext.setLogLevel("WARN")
-    spark.read.parquet("/root/testdata/sf0.001/documents.parquet") }
+class InvertedIndexSpec extends SparkSpec {
+  def docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
 
   val terms = Seq("dup", "spark", "vector")
 

@@ -1,20 +1,12 @@
 package graft
 
 import graft.functions.{IvfIndex, Similarity}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Persistent IVF index: save/load round-trip is exact, queries match the
   * per-call ivfTopK, and probing prunes the partitioned list scan. */
-class IvfIndexSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-  def emb = { spark.sparkContext.setLogLevel("WARN")
-    spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet") }
+class IvfIndexSpec extends SparkSpec {
+  def emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
 
   def asSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double, Long)] =
     df.select("q_id", "c_id", "sim", "rank").collect()

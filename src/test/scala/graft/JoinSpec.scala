@@ -1,22 +1,11 @@
 package graft
 
 import graft.api._
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Golden join tests mirroring the reference doctests
   * (reference: src/operator/join/mod.rs:99-113, 149-161, 196-210:
   * streams 0..5 and 0..4 with keyers n%2 — hand-computed pairs). */
-class JoinSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.ansi.enabled", "false")
-    .getOrCreate()
-  lazy val ctx = new StreamContext(spark)
-  def imp = { spark.sparkContext.setLogLevel("WARN"); spark.implicits }
-
+class JoinSpec extends SparkSpec {
   test("inner join with keyers (reference join doctest shape)") {
     val s = imp
     import s._

@@ -2,20 +2,11 @@ package graft
 
 import graft.functions.Multimodal
 import graft.functions.Multimodal.MediaRecord
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Golden tests for the real multimodal decoders (WAV/PPM/BMP are
   * self-describing — no codec libraries needed) and the unknown-format
   * stub fallback, run through the distributed decodeFeatures path. */
-class MultimodalSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-  def imp = { spark.sparkContext.setLogLevel("WARN"); spark.implicits }
-
+class MultimodalSpec extends SparkSpec {
   private def le16(v: Int): Array[Byte] = Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte)
   private def le32(v: Long): Array[Byte] =
     Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte, ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)

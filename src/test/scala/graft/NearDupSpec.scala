@@ -1,23 +1,14 @@
 package graft
 
 import graft.functions.{Dedup, Similarity, TextAnalysis, Multimodal}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Quality tests for the hash-based dedup/ANN paths: the engine-specific
   * hashing has no SQL oracle, so these assert recall/precision against the
   * exact computations on the sf0.001 corpus. */
-class NearDupSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.ansi.enabled", "false")
-    .getOrCreate()
+class NearDupSpec extends SparkSpec {
   val dir = "/root/testdata/sf0.001"
-  def docs = { spark.sparkContext.setLogLevel("WARN")
-    spark.read.parquet(s"$dir/documents.parquet") }
+  def docs = spark.read.parquet(s"$dir/documents.parquet")
 
   /** ground truth: exact 3-gram jaccard >= 0.8 pairs. */
   def truePairs: Set[(Long, Long)] =

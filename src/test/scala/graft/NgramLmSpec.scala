@@ -1,21 +1,13 @@
 package graft
 
 import graft.functions.NgramLm
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, max, min}
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the stupid-backoff trigram scorer (functions.NgramLm): exact level
   * resolution and micro-integer scores on a hand-computed corpus, plus the
   * self-scoring invariant (a split scored against itself never backs off —
   * every one of its trigrams is in the model by construction). */
-class NgramLmSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class NgramLmSpec extends SparkSpec {
   /** Driver-side reimplementation of the score for the expected values —
     * same rounding discipline (6-dp round, ×1e6 to long, sum, /1e6/n). */
   private def micro(x: Double): Long =

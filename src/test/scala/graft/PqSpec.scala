@@ -1,20 +1,12 @@
 package graft
 
 import graft.functions.ProductQuantizer
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Product quantization: encode determinism, training improving distortion,
   * and ADC retrieval recall against exact L2 on the real embeddings. */
-class PqSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-  def emb = { spark.sparkContext.setLogLevel("WARN")
-    spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet") }
+class PqSpec extends SparkSpec {
+  def emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
 
   def exactL2TopK(k: Int, maxQ: Long): Map[Long, Seq[Long]] = {
     val v = emb.select(col("vec_id").cast("long").as("id"),

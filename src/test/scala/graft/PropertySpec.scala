@@ -1,17 +1,15 @@
 package graft
 
 import graft.api._
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, concat, lit, not, pmod}
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Property tests for the algebraic contracts the engine relies on
   * (SURVEY §5: "assoc/partial-agg equivalence") — if these hold, Catalyst's
   * partial/final split and our two-phase folds are semantics-preserving for
   * any partitioning. */
-class PropertySpec extends AnyFunSuite {
+class PropertySpec extends SparkSpec {
   /** deterministic sampling (no scalatest-scalacheck bridge in the offline
     * cache): 20 seeded samples per property */
   def forAll[A](g: Gen[A])(f: A => Unit): Unit =
@@ -25,13 +23,6 @@ class PropertySpec extends AnyFunSuite {
         f(a, b)
     }
   def whenever(c: Boolean)(f: => Unit): Unit = if (c) f
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-  lazy val ctx = new StreamContext(spark)
-  def imp = { spark.sparkContext.setLogLevel("WARN"); spark.implicits }
 
   val smallInts: Gen[List[Int]] = Gen.listOfN(40, Gen.choose(-100, 100))
 

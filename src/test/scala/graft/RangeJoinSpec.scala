@@ -1,23 +1,14 @@
 package graft
 
 import graft.operators.RangeJoin
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Bucketed range join: must equal the naive `between` join on every
   * configuration, never plan a nested-loop/cartesian join, and stay
   * duplicate-free without a distinct. */
-class RangeJoinSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class RangeJoinSpec extends SparkSpec {
   def fixtures(): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
     import spark.implicits._
-    spark.sparkContext.setLogLevel("WARN")
     // points at every 0.5 in [0, 50); intervals of mixed lengths, some
     // empty (hi < lo is generated too via the -3 offset), some negative
     val points = (0 until 100).map(i => (i.toLong, i * 0.5 - 5.0))
@@ -67,9 +58,7 @@ class RangeJoinSpec extends AnyFunSuite {
 
   test("plans an equi-join, not a nested-loop/cartesian join") {
     val (points, intervals) = fixtures()
-    val bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val plan = RangeJoin
         .pointInInterval(points, intervals, "x", "lo", "hi", binWidth = 2.0)
         .queryExecution.executedPlan.toString
@@ -82,7 +71,7 @@ class RangeJoinSpec extends AnyFunSuite {
         .join(intervals, col("x") >= col("lo") && col("x") <= col("hi"))
         .queryExecution.executedPlan.toString
       assert(naivePlan.contains("NestedLoop") || naivePlan.contains("Cartesian"))
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bc)
+    }
   }
 
   test("oversized intervals fail fast instead of exploding") {

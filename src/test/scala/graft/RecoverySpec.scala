@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
 /** Checkpoint-recovery pins for the streaming twins: the catalog's bounded
   * replay runs batches 1..n-1 in one query, HARD-STOPS it, then a fresh
   * query recovers offsets + state store from the shared checkpoint and
@@ -16,15 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * stream-stream join buffers (q_stream_interval_join), plus a
   * flatMapGroupsWithState machine (q_stream_sessionize) since the 18 twins
   * lean on that operator most. */
-class RecoverySpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.ansi.enabled", "false")
-    .getOrCreate()
-
+class RecoverySpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   /** Runs `streamName` through the stop/resume replay and asserts it equals
@@ -61,14 +50,9 @@ class RecoverySpec extends AnyFunSuite {
   }
 
   test("stop/resume on the RocksDB state store: the production provider recovers identically") {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try pinResume("q_stream_session", "q_window_session")
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
+    withConf("spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
+      pinResume("q_stream_session", "q_window_session")
     }
   }
 }

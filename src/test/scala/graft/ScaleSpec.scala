@@ -1,36 +1,17 @@
 package graft
 
 import graft.operators.Scale
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
 /** Skew + bucketing machinery: salted aggregates must equal their unsalted
   * counterparts; bucketed joins must plan WITHOUT a shuffle exchange. */
-class ScaleSpec extends AnyFunSuite {
-  // the suites share one JVM session (getOrCreate) — set the plan-shape
-  // configs at runtime and restore after, instead of builder configs that
-  // are silently ignored if another suite created the session first
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-  def imp = { spark.sparkContext.setLogLevel("WARN"); spark.implicits }
-
-  def withPlanShapeConfs[A](f: => A): A = {
-    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    val bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    // assert the raw plan shape: AQE off so the exchange (or its absence)
-    // is visible; broadcast off so the shuffle sanity-check join shuffles
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try f finally {
-      spark.conf.set("spark.sql.adaptive.enabled", aqe)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bc)
-    }
-  }
+class ScaleSpec extends SparkSpec {
+  // assert the raw plan shape: AQE off so the exchange (or its absence)
+  // is visible; broadcast off so the shuffle sanity-check join shuffles
+  def withPlanShapeConfs[A](f: => A): A = withConf(
+    "spark.sql.adaptive.enabled" -> "false",
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1")(f)
 
   test("saltedSum / saltedCount equal unsalted aggregation") {
     val s = imp; import s._
@@ -130,16 +111,13 @@ class ScaleSpec extends AnyFunSuite {
     val left = (1 to 50000).map(i => (if (i % 50 == 0) i.toLong else 7L, i))
       .toDF("k", "v")
     val right = (1 to 2000).map(i => (i.toLong, s"r$i")).toDF("rk", "w")
-    val confs = Seq(
+    withConf(
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "16384",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16384",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prev = confs.map { case (k, _) => k -> spark.conf.get(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val j = left.join(right, col("k") === col("rk"))
       // execute THIS QueryExecution (count()/foreach plan separate queries
       // and leave j's adaptive plan unfinalized)
@@ -147,7 +125,7 @@ class ScaleSpec extends AnyFunSuite {
       val plan = j.queryExecution.executedPlan.toString
       assert(plan.contains("skew=true"),
         s"AQE must mark the skewed join side:\n$plan")
-    } finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
+    }
   }
 
   test("compactLatest: argmax survivor, partial-agg plan, no window sort") {
@@ -232,9 +210,7 @@ class ScaleSpec extends AnyFunSuite {
     val s = imp; import s._
     // broadcast threshold -1 would defeat the explicit broadcast() hint's
     // point — keep AQE off only, so the raw shape is stable
-    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withConf("spark.sql.adaptive.enabled" -> "false") {
       val train = spark.range(100).select(col("id").as("doc_id"),
         concat(lit("common prefix words here item "), col("id")).as("text"))
       val bench = Seq("common prefix words here item 5").toDF("text")
@@ -245,7 +221,7 @@ class ScaleSpec extends AnyFunSuite {
       // probe (training grams) reaches the broadcast join unexchanged
       val shuffles = "Exchange hashpartitioning".r.findAllIn(plan).length
       assert(shuffles == 1, s"expected 1 shuffle (doc agg), got $shuffles")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    }
   }
 
   test("mixtureSample plans as a zero-shuffle narrow map stage") {

@@ -2,38 +2,22 @@ package graft
 
 import graft.functions.Dedup
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** SCALE.md's shuffle claims, executed: measure actual shuffle-write bytes
   * via a SparkListener and assert the de-amplified formulations really move
   * less data than the amplified ones they replaced. A plan-shape test can't
   * catch a regression that keeps the shape but grows the payload — bytes
   * can. */
-class ShuffleVolumeSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.ansi.enabled", "false")
-    .getOrCreate()
-  def docs = { spark.sparkContext.setLogLevel("WARN")
-    spark.read.parquet("/root/testdata/sf0.001/documents.parquet") }
+class ShuffleVolumeSpec extends SparkSpec {
+  def docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
 
   /** Total shuffle-write bytes across all stages of `f`, with broadcast
     * joins and AQE disabled — at sf0.001 Spark would broadcast every join
     * side and the byte comparison would measure nothing. */
-  def shuffleBytes(f: => Unit): Long = {
-    val bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try shuffleBytesRaw(f) finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bc)
-      spark.conf.set("spark.sql.adaptive.enabled", aqe)
-    }
-  }
+  def shuffleBytes(f: => Unit): Long = withConf(
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+    "spark.sql.adaptive.enabled" -> "false")(shuffleBytesRaw(f))
 
   private def shuffleBytesRaw(f: => Unit): Long = {
     val total = new java.util.concurrent.atomic.AtomicLong(0L)

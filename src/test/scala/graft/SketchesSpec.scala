@@ -1,20 +1,12 @@
 package graft
 
 import graft.functions.Sketches
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Sketch invariants: KMV exactness below k, estimator accuracy, exact
   * mergeability; CMS upper-bound + exactness without collisions, grid-wise
   * merge; Misra-Gries superset guarantee; and the narrow plan shapes. */
-class SketchesSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class SketchesSpec extends SparkSpec {
   private def strs(xs: Seq[String]) = {
     val s = spark
     import s.implicits._

@@ -1,20 +1,11 @@
 package graft
 
 import graft.api._
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
 /** Source/sink round-trips (reference: §2.1/§2.2 — file/csv/parquet sources,
   * write_csv/write_parquet sinks, sequential vs single-file variants). */
-class SourceSinkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-  lazy val ctx = new StreamContext(spark)
-  def imp = { spark.sparkContext.setLogLevel("WARN"); spark.implicits }
+class SourceSinkSpec extends SparkSpec {
   def tmp(): String = Files.createTempDirectory("graft").toString
 
   test("parquet write/read round-trip (write_parquet_seq)") {

@@ -1,24 +1,15 @@
 package graft
 
 import graft.streaming.Streaming
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 import java.sql.Timestamp
 
 /** Structured Streaming semantics tests via MemoryStream — watermark-driven
   * window emission and the stateful window machines. Mirrors the reference's
   * event-time tests (reference: tests/window/event_time.rs) and pins the
   * documented late-data divergence (reference errors; Spark drops). */
-class StreamingSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
+class StreamingSpec extends SparkSpec {
   def ts(sec: Long): Timestamp = new Timestamp(sec * 1000)
 
   test("tumbling windows emit on watermark; late rows are dropped (divergence pin)") {

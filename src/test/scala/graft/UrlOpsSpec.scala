@@ -1,20 +1,12 @@
 package graft
 
 import graft.functions.UrlOps
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** URL canonicalization + domain cap: closed-form canonical cases, the
   * no-dot / unparseable fallbacks, cap determinism under repartition, and
   * the WindowGroupLimit plan shape the cap's scale claim rests on. */
-class UrlOpsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class UrlOpsSpec extends SparkSpec {
   private def canonOf(url: String): String = {
     import spark.implicits._
     Seq(url).toDF("url").select(UrlOps.canonicalizeUrl(col("url"))).head.getString(0)

@@ -2,21 +2,13 @@ package graft
 
 import graft.functions.Similarity
 import graft.plans.VectorExpressions
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Native DotProduct expression: bit-compatibility with the composed
   * aggregate(zip_with) path, codegen + interpreted agreement, and a micro
   * throughput comparison on the embeddings table. */
-class VectorExprSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-  def emb = { spark.sparkContext.setLogLevel("WARN")
-    spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet") }
+class VectorExprSpec extends SparkSpec {
+  def emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
 
   test("native dot equals composed aggregate(zip_with) bitwise") {
     val v = emb.select(col("vec_id"),

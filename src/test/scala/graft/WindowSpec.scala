@@ -2,21 +2,11 @@ package graft
 
 import graft.api._
 import graft.api.WindowDescr._
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Golden tests for the typed window descriptors, mirroring the reference's
   * window tests (reference: tests/window/, src/operator/window/descr/ unit
   * tests — closed-form expected window contents). */
-class WindowSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-  lazy val ctx = new StreamContext(spark)
-  def imp = { spark.sparkContext.setLogLevel("WARN"); spark.implicits }
-
+class WindowSpec extends SparkSpec {
   test("CountWindow.sliding(3,2) exact over 0..10 keyed by %2") {
     val s = imp
     import s._

@@ -1,21 +1,13 @@
 package graft
 
 import graft.operators.ZOrder
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Z-order clustering: the Column interleave must match a reference Scala
   * bit-interleave exactly, and the layout claim — z-clustered partitions
   * have small bounding boxes in ALL clustered dimensions — must hold
   * measurably against a round-robin layout of the same data. */
-class ZOrderSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class ZOrderSpec extends SparkSpec {
   /** Reference interleave: dimension j's bit i → position i*D + j. */
   private def refInterleave(qs: Seq[Long], bits: Int): Long =
     qs.zipWithIndex.map { case (q, j) =>
@@ -24,7 +16,6 @@ class ZOrderSpec extends AnyFunSuite {
 
   test("zvalue matches the reference bit-interleave on a full 2-D grid") {
     import spark.implicits._
-    spark.sparkContext.setLogLevel("WARN")
     // 32x32 grid scaled so min/max quantization at 5 bits is exact:
     // x in {0..31}*7+3, y in {0..31}*11-40 — both affine in the grid index,
     // so quantize recovers the grid index exactly
