@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Benchmark main: times every catalog query at SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line {"metric":...,"queries":{...}}.
@@ -33,9 +33,9 @@ object Bench {
     val repeat =
       math.max(1, sys.env.get("SPARK_GRAFT_REPEAT").map(_.toInt).getOrElse(2))
 
-    def once(name: String, fn: (SparkSession, String) => DataFrame): Double = {
+    def once(name: String, df: => DataFrame): Double = {
       val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true } catch {
+      val ok = try { df.count(); true } catch {
         case e: Throwable =>
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
           false
@@ -55,32 +55,22 @@ object Bench {
       if (ok) elapsed else -1.0
     }
 
-    // SPARK_GRAFT_ONLY=q_a,q_b restricts the run to a subset — an iteration
-    // aid while tuning a single query; the driver never sets it
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    def selected(name: String): Boolean = only.forall(_.contains(name))
-
-    // one catalog pass: production mode first (portableMode false — the
-    // xxhash64 default paths a user ships), then the hash-mode-sensitive
-    // queries again in portable (oracle) mode as distinct `_portable` keys,
-    // so both modes stay observable round-over-round
-    val prodEntries = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => selected(name) }
-    val portEntries = Bench.portableBench
-      .filter(n => selected(n + "_portable"))
-      .map(n => (n + "_portable", SparkEntry.queries(n)))
+    // one catalog pass: production hashing first (the xxhash64 paths a
+    // user ships), then the BenchPortable cells again under portable
+    // (oracle) hashing as distinct `_portable` keys, so both modes stay
+    // observable round-over-round
+    val runs = (Queries.catalog.sortBy(_.name).map(c => (c.name, c, false)) ++
+      Queries.catalog.filter(_.is(Tag.BenchPortable))
+        .map(c => (c.name + "_portable", c, true)))
+      .filter { case (key, _, _) => Harness.selected(key) }
     val acc = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     def record(name: String, t: Double): Unit = acc.get(name) match {
       case Some(prev) if prev < 0 || t < 0 => acc(name) = -1.0
       case Some(prev) => acc(name) = math.min(prev, t)
       case None => acc(name) = t
     }
-    for (_ <- 1 to repeat) {
-      prodEntries.foreach { case (name, fn) => record(name, once(name, fn)) }
-      Queries.portableMode = true
-      portEntries.foreach { case (name, fn) => record(name, once(name, fn)) }
-      Queries.portableMode = false
+    for (_ <- 1 to repeat) runs.foreach { case (key, c, portable) =>
+      record(key, once(key, c.run(spark, sfDir, portable)))
     }
     val results = acc.toSeq
     val sf = sfDir.split("/").last.stripPrefix("sf")
@@ -91,13 +81,13 @@ object Bench {
     // sf0.001 run did exactly that and read as a false 31% speedup)
     val fullOutRaw = sys.env.getOrElse("SPARK_GRAFT_FULL_OUT", "BENCH_FULL.json")
     val fullOut =
-      if (fullOutRaw == "BENCH_FULL.json" && only.nonEmpty) {
-        // a SPARK_GRAFT_ONLY iteration run must never overwrite the
+      if (fullOutRaw == "BENCH_FULL.json" && Harness.only.nonEmpty) {
+        // a GRAFT_ONLY iteration run must never overwrite the
         // committed full-catalog artifact with a partial one — the next
         // full bench's vs_prev_round would compare against 1 key
         val redirected = "BENCH_FULL_subset.json"
         System.err.println(
-          s"[bench] SPARK_GRAFT_ONLY subset run; writing $redirected " +
+          s"[bench] GRAFT_ONLY subset run; writing $redirected " +
             "instead of the committed BENCH_FULL.json")
         redirected
       } else if (fullOutRaw == "BENCH_FULL.json" && sf != "0.1") {
@@ -121,7 +111,7 @@ object Bench {
     // which made the driver's extractor read "parsed": null two rounds
     // running) and a file next to BENCH_FULL.json, so the extractor no
     // longer depends on log formatting at all. The file inherits fullOut's
-    // subset/scale redirection: a SPARK_GRAFT_ONLY or off-scale run must
+    // subset/scale redirection: a GRAFT_ONLY or off-scale run must
     // not overwrite the committed full-catalog line either.
     // A failed line write only warns: the run is finished and BENCH_FULL
     // already holds it.
@@ -232,8 +222,7 @@ object Bench {
   def baselineIdentity(path: String): String = {
     // JSON-escape: an explicit SPARK_GRAFT_PREV path containing a quote or
     // backslash must not render the artifact invalid (r16 advice)
-    val name = java.nio.file.Paths.get(path).getFileName.toString
-      .replace("\\", "\\\\").replace("\"", "\\\"")
+    val name = Harness.jsonString(java.nio.file.Paths.get(path).getFileName.toString)
     val extra = try {
       val txt = new String(
         java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)),
@@ -244,7 +233,7 @@ object Bench {
         .map(m => s""","git":"${m.group(1)}"""").getOrElse("")
       r + g
     } catch { case _: Exception => "" }
-    s""""baseline":{"file":"$name"$extra}"""
+    s""""baseline":{"file":$name$extra}"""
   }
 
   /** Parse the `queries` map out of a prior BENCH_FULL.json (our own flat
@@ -302,7 +291,7 @@ object Bench {
         // method, made mechanical): a fixed panel of long-stable cells; if
         // their ratio moves with the total, the spread is host drift, not
         // code — a genuine regression moves changed cells but not controls
-        val controlPanel = controls.filter(common.contains)
+        val controlPanel = controlCells.filter(common.contains)
         // Per-cell control ratios, aggregated as the MEDIAN rather than the
         // sum-ratio: the r17/r18 adjudication of the nx_* "regressions"
         // proved this host's contention is NON-uniform at minute scale
@@ -344,7 +333,7 @@ object Bench {
       }
     val fullLine =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","repeat":$repeat,"failed":${failedNames.size},"failed_queries":$failedJson,$vsPrev,"queries":$fullJson,"sf":"$sf"}"""
-    val qs = headline.filter(byName.contains)
+    val qs = stdoutKeys.filter(byName.contains)
       .map(k => "\"" + k + "\":" + fmt(byName(k)))
       .mkString("{", ",", "}")
     val stdoutLine =
@@ -352,81 +341,12 @@ object Bench {
     (fullLine, stdoutLine, failedNames)
   }
 
-  /** Drift-controls panel for `vs_prev_round.ratio_drift_adjusted`.
-    *
-    * Selection rule: **no /tmp-cache-backed cell** — a control that can
-    * pay a disk-cache rebuild inside its timed window measures cache
-    * temperature, not host drift. Round 15 proved the blind spot is
-    * active: q_bpe sat in the panel, inflated 2.7× on a cold-/tmp driver
-    * run, and dragged the adjustment to a flattering 0.853 (r15 verdict
-    * #2). That rule excludes q_copurchase/q_hits/q_related_items (all
-    * read the copurchase /tmp store — a cold first pass rebuilds it),
-    * q_bpe, and EVERY q_stream_* cell: all streaming twins route through
-    * runStream's content-fingerprinted 'streamsplit' store under /tmp,
-    * so on a cold /tmp — or a SPARK_GRAFT_ONLY run where no earlier cell
-    * warmed the shared split dir — the split rebuild lands inside the
-    * timed window, the exact q_bpe failure mode (the r16 panel shipped
-    * with q_stream_tumbling in violation of its own rule; r16 advice).
-    * Session-local persist/unpersist within a query is fine because
-    * clearCache() resets it between cells anyway.
-    *
-    * Second selection rule (r17, the optimization round): **no
-    * persist/localCheckpoint in the cell's path** — a drift control must
-    * be insensitive to CODE/CONFIG changes, and the r17 cached-plan-AQE
-    * session default (canChangeCachedPlanOutputPartitioning) structurally
-    * sped up every persisting cell. The r16 panel held five such cells
-    * (q_char_lm, q_ngram_lm, q_cluster_split, q_pagerank all persist),
-    * so across the r17 boundary the old panel measured the OPTIMIZATION
-    * instead of the host and `ratio_drift_adjusted` over-penalized the
-    * total. All current members were verified structurally neutral to the
-    * flag (identical jobs/stages/tasks/shuffle bytes under both settings,
-    * graft.Profile, r17 notes).
-    *
-    * Shape diversity, so the panel moves with the host across regimes
-    * rather than with any one subsystem:
-    *   nx_q1        — codegen scan→project floor (physically cannot
-    *                  regress from a plan change; pure host signal)
-    *   q1_agg       — scan + hash-aggregate exchange
-    *   q_sort       — global sort (range exchange)
-    *   q_join_inner — shuffle equi-join
-    *   q_tpch1      — decimal-heavy wide aggregation (ALU throughput)
-    *   q_multimodal — per-row binary decode (narrow executor compute)
-    *   q_triangles  — shuffle-heavy self-join
-    * (No streaming member: the micro-batch lifecycle regime is
-    * structurally /tmp-cache-backed here, so it cannot serve as a drift
-    * control.)
-    *
-    * The rendered artifact lists the member NAMES in
-    * `vs_prev_round.controls.cells`, so a future panel edit is visible
-    * in the round diff of the artifact itself. */
-  val controls: Seq[String] = Seq(
-    "nx_q1", "q1_agg", "q_sort", "q_join_inner", "q_tpch1",
-    "q_multimodal", "q_triangles")
+  /** The [[Tag.Control]] drift-controls panel. */
+  val controlCells: Seq[String] = Queries.catalog.filter(_.is(Tag.Control)).map(_.name)
 
-  /** Stdout headline set — a pinned, stable subset (the expensive and
-    * family-representative queries) so the driver's bounded tail capture
-    * always holds the complete JSON line and round-over-round deltas compare
-    * the same keys. BenchFormatSpec asserts the worst-case line length stays
-    * under the capture budget; grow this list only with that test green.
-    */
-  val headline: Seq[String] = Seq(
-    "q1_agg", "q_sort", "q_join_inner", "q_join_broadcast",
-    "q_window_sliding", "q_window_session", "q_interval_join", "q_asof_join",
-    "q_connected_components", "q_transitive_closure", "q_pagerank",
-    "q_pagerank_delta", "q_triangles", "q_kmeans",
-    "q_dedup_exact", "q_dedup_minhash", "q_dedup_verified",
-    "q_dedup_incremental", "q_semantic_dedup", "q_dedup_simhash",
-    "q_ngram_jaccard", "q_cosine_topk", "q_ann_lsh", "q_ann_ivf",
-    "q_embedding_neardup", "q_text_profile", "q_pipeline_clean",
-    "q_bm25", "q_multimodal", "nx_q5", "nx_q8",
-    "q_tpch2", "q_ngram_lm", "q_perplexity_tiers",
-    "q_dedup_minhash_portable", "q_ann_lsh_portable")
-
-  /** Queries re-timed under portable (oracle-recomputable) hashing, reported
-    * as `<name>_portable` keys so both hash modes stay observable per round.
-    */
-  val portableBench: Seq[String] = Seq(
-    "q_dedup_minhash", "q_dedup_simhash", "q_ann_lsh", "q_embedding_neardup",
-    "q_dedup_incremental", "q_semantic_dedup", "q_distinct_kmv",
-    "q_heavy_hitters", "q_dup_spans", "q_winnow", "q_dsir")
+  /** Keys of the stdout line: the [[Tag.Headline]] cells, then the
+    * `_portable` keys of the [[Tag.HeadlinePortable]] cells. */
+  val stdoutKeys: Seq[String] =
+    Queries.catalog.filter(_.is(Tag.Headline)).map(_.name) ++
+      Queries.catalog.filter(_.is(Tag.HeadlinePortable)).map(_.name + "_portable")
 }

@@ -1,11 +1,12 @@
 package graft
 
+import com.fasterxml.jackson.core.io.JsonStringEncoder
 import graft.api.StreamContext
 import org.apache.spark.sql.SparkSession
 
-/** Session of the harness mains (Bench, Verify, Soak, PlanDump, Plans,
-  * LintAudit, Profile, StreamAb): [[StreamContext.sessionConf]] plus the
-  * env overrides, all read here.
+/** Session of the harness mains (Bench, Verify, Soak, PlanDump, LintAudit,
+  * Profile, StreamAb): [[StreamContext.sessionConf]] plus the env
+  * overrides, all read here.
   *
   *   - `SPARK_GRAFT_CPUS`: cores of `local[n]` and shuffle partitions;
   *   - `GRAFT_MASTER`: master URL, e.g. `local-cluster[2,4,2048]` — separate
@@ -24,6 +25,19 @@ object Harness {
     spark.sparkContext.setLogLevel("ERROR")
     spark
   }
+
+  /** `GRAFT_ONLY=q_a,q_b` restricts Verify, Bench and Profile to a subset
+    * of catalog keys (Bench's `<name>_portable` keys included) — an
+    * iteration aid; unset runs everything. */
+  val only: Option[Set[String]] =
+    sys.env.get("GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
+
+  def selected(name: String): Boolean = only.forall(_.contains(name))
+
+  /** `s` as a JSON string literal: quotes, backslashes and every control
+    * character escaped, so free-form SQL or paths never break a reader. */
+  def jsonString(s: String): String =
+    "\"" + new String(JsonStringEncoder.getInstance.quoteAsString(s)) + "\""
 
   def cores(env: Map[String, String], default: Int): Int =
     env.get("SPARK_GRAFT_CPUS").fold(default)(_.trim.toInt)

@@ -15,7 +15,7 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
   * time is far below its wall time is paying driver-side latency
   * (planning, job submission, micro-batch lifecycle), not compute.
   *
-  * Usage: SPARK_GRAFT_ONLY=q_a,q_b sbt "runMain graft.Profile [sfDir]"
+  * Usage: GRAFT_ONLY=q_a,q_b sbt "runMain graft.Profile [sfDir]"
   * Prints one line per query: name, wall s, jobs, stages, tasks,
   * task-time s, shuffle read/write MB. Not part of the driver contract;
   * purely a local optimization instrument.
@@ -51,12 +51,10 @@ object Profile {
     // same warmup as Bench so the first profiled cell isn't paying JIT
     Queries.q1_agg(spark, sfDir).count()
 
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
     val repeat =
       math.max(1, sys.env.get("SPARK_GRAFT_REPEAT").map(_.toInt).getOrElse(1))
     val entries = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
+      .filter { case (n, _) => Harness.selected(n) }
     println(f"${"query"}%-28s ${"wall_s"}%8s ${"jobs"}%5s ${"stages"}%6s " +
       f"${"tasks"}%6s ${"task_s"}%8s ${"shR_MB"}%7s ${"shW_MB"}%7s")
     for (_ <- 1 to repeat) entries.foreach { case (name, fn) =>

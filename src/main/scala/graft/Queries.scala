@@ -3,11 +3,12 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.Catalog.{cell, hashed}
+import graft.Tag._
 
-/** The oracle-checked query catalog: one entry per operator family of
-  * SURVEY.md §2 (plus the large-scale training-data operators). Each query
-  * has a DuckDB-equivalent SQL in [[Queries.oracle]] unless the operator is
-  * not SQL-expressible (then the driver records a rows-only check).
+/** The oracle-checked query catalog: one cell per operator family of
+  * SURVEY.md §2 (plus the large-scale training-data operators), each with
+  * its DuckDB-equivalent SQL, registered in [[Queries.catalog]].
   *
   * Determinism conventions (so Spark's partial/final agg order and DuckDB's
   * scan order hash identically):
@@ -18,14 +19,6 @@ import org.apache.spark.sql.expressions.Window
   *  - limit/offset always under a total ORDER BY.
   */
 object Queries {
-
-  /** Hash-mode switch for the probabilistic dedup/ANN queries. `true` selects
-    * the portable (md5-derived, oracle-recomputable) hashing that the DuckDB
-    * oracle checks bit-for-bit; `false` (the default) selects the xxhash64
-    * production paths. Verify sets it to `true` so correctness stays fully
-    * hash-checked; Bench leaves it `false` so BENCH measures what production
-    * runs — the two concerns round 2 accidentally coupled. */
-  @volatile var portableMode: Boolean = false
 
   /** Input-fed micro-batch count of the most recent [[runStream]] run —
     * test hook pinning that the streaming twins really replay multi-batch. */
@@ -2017,7 +2010,7 @@ object Queries {
 
   /** Forces (Some(true)) or suppresses (Some(false)) the stop/resume replay
     * mode of [[runStream]] regardless of the GRAFT_STREAM_RESUME env var —
-    * the spec hook (RecoverySpec), mirroring [[portableMode]]. */
+    * the spec hook (RecoverySpec). */
   @volatile private[graft] var streamResumeOverride: Option[Boolean] = None
 
   /** Micro-batches with input rows processed by the post-restart phase of
@@ -2334,9 +2327,9 @@ object Queries {
     * register, and the register max is monotone, so re-maxing the emissions
     * reconstructs the batch sketch bit-for-bit (registers-only oracle — the
     * estimate projection is batch arithmetic layered on this exact state). */
-  def q_stream_hll(s: SparkSession, dir: String): DataFrame =
+  def q_stream_hll(s: SparkSession, dir: String, portable: Boolean): DataFrame =
     runStream(s, src => graft.functions.Sketches.hllRegisters(
-        src, col("l_orderkey").cast("string"), p = 8, portable = portableMode),
+        src, col("l_orderkey").cast("string"), p = 8, portable = portable),
       "update", dir, table = "lineitem")
       .groupBy(col("bucket")).agg(max(col("reg")).as("reg"))
 
@@ -2355,14 +2348,14 @@ object Queries {
     * mapGroupsWithState merge; the distinct universe never shuffles. A
     * bounded run's final (h_k, n_h, est) equals the batch sketch of the
     * whole table, replayed by the oracle. */
-  def q_stream_kmv(s: SparkSession, dir: String): DataFrame =
+  def q_stream_kmv(s: SparkSession, dir: String, portable: Boolean): DataFrame =
     // update mode over the multi-batch replay emits the cumulative sketch
     // once per batch; the sketch is monotone (n_h grows to k, then h_k only
     // shrinks), so (max n_h, min h_k) IS the final emit — the keyed-upsert
     // selection, report-sized (one row per batch)
     runStream(s, src => graft.streaming.Streaming
       .kmvStream(src, col("l_orderkey").cast("string"), 512,
-        portable = portableMode)
+        portable = portable)
       .toDF("h_k", "n_h", "est"),
       "update", dir, table = "lineitem")
       .orderBy(col("n_h").desc, col("h_k").asc).limit(1)
@@ -3945,9 +3938,9 @@ object Queries {
     * document — the sub-document dedup signal doc-level methods miss. The
     * oracle recomputes the gram hashes, the cross-doc gram set
     * (min≠max doc), and the per-doc fractions. */
-  def q_dup_spans(s: SparkSession, dir: String): DataFrame =
+  def q_dup_spans(s: SparkSession, dir: String, portable: Boolean): DataFrame =
     graft.functions.Dedup.dupSpanProfile(tbl(s, dir, "documents"),
-      "doc_id", "text", n = 5, portable = portableMode)
+      "doc_id", "text", n = 5, portable = portable)
 
   private val q_dup_spans_sql =
     """WITH sh AS (
@@ -3970,9 +3963,9 @@ object Queries {
     * index size. The oracle rebuilds the window argmin (ORDER BY gh ASC,
     * pos DESC ≡ the fold's <= tie rule), the distinct selection, and the
     * per-doc fractions. */
-  def q_winnow(s: SparkSession, dir: String): DataFrame =
+  def q_winnow(s: SparkSession, dir: String, portable: Boolean): DataFrame =
     graft.functions.Dedup.winnowProfile(tbl(s, dir, "documents"),
-      "doc_id", "text", n = 5, w = 4, portable = portableMode)
+      "doc_id", "text", n = 5, w = 4, portable = portable)
 
   private def q_winnow_sql: String =
     """WITH sh AS (
@@ -4006,14 +3999,14 @@ object Queries {
     * bounded-TreeSet pass, then a ≤P·k-row distinct + TakeOrdered — the
     * full-column distinct shuffle never happens. The oracle recomputes the
     * same k hashes and the same estimate arithmetic. */
-  def q_distinct_kmv(s: SparkSession, dir: String): DataFrame =
+  def q_distinct_kmv(s: SparkSession, dir: String, portable: Boolean): DataFrame =
     kmvReport(graft.functions.Sketches.kmvSketch(
       tbl(s, dir, "lineitem"), col("l_orderkey").cast("string"), k = 512,
-      portable = portableMode), k = 512)
+      portable = portable), k = 512, portable)
 
   /** (h, h_k, n_h, est) projection of a KMV sketch — global stats via a
     * window over the ≤k-row sketch (single tiny task). */
-  private def kmvReport(sk: DataFrame, k: Int): DataFrame = {
+  private def kmvReport(sk: DataFrame, k: Int, portable: Boolean): DataFrame = {
     val w = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     sk.select(col("h"),
         max(col("h")).over(w).as("h_k"),
@@ -4021,7 +4014,7 @@ object Queries {
       .select(col("h"), col("h_k"), col("n_h"),
         when(col("n_h") < k, col("n_h").cast("double"))
           .otherwise(lit((k - 1) *
-              graft.functions.Sketches.hashSpace(portableMode)) /
+              graft.functions.Sketches.hashSpace(portable)) /
             col("h_k").cast("double"))
           .as("est"))
   }
@@ -4033,23 +4026,23 @@ object Queries {
     * so the loaded store hash-matches the full-corpus q_distinct_kmv
     * oracle. Mode rides in the store path (Verify runs portable, Bench
     * production) under the q_inverted_index fingerprint-cache discipline. */
-  def q_kmv_persist(s: SparkSession, dir: String): DataFrame = {
+  def q_kmv_persist(s: SparkSession, dir: String, portable: Boolean): DataFrame = {
     val k = 512
     val li = tbl(s, dir, "lineitem")
     val sfTag = dir.replaceAll("[^0-9a-zA-Z.]", "_")
     val fp = lineitemStoreFp(li, dir)
-    val mode = if (portableMode) "p" else "x"
+    val mode = if (portable) "p" else "x"
     val path = graft.functions.CacheKey.path("kmvstore", version = 2, sfTag,
       Seq(mode, k), fp)
     graft.functions.CacheKey.publishDir(path) { tmp =>
-      graft.functions.SketchStore.init(s, tmp, k, portable = portableMode)
+      graft.functions.SketchStore.init(s, tmp, k, portable = portable)
       val mid = li.agg(max(col("l_orderkey"))).head().getLong(0) / 2
       graft.functions.SketchStore.updateCycle(s, tmp, 1,
         li.filter(col("l_orderkey") <= mid), col("l_orderkey").cast("string"))
       graft.functions.SketchStore.updateCycle(s, tmp, 2,
         li.filter(col("l_orderkey") > mid), col("l_orderkey").cast("string"))
     }
-    kmvReport(graft.functions.SketchStore.load(s, path), k)
+    kmvReport(graft.functions.SketchStore.load(s, path), k, portable)
   }
 
   /** HyperLogLog distinct sketch of the order-key universe — the register-
@@ -4058,11 +4051,11 @@ object Queries {
     * moves ≤ partitions·256 one-long rows at any corpus size), raw estimate
     * derived from exact DECIMAL power-of-two sums so the oracle reproduces
     * every register AND the estimate bit-for-bit. */
-  def q_distinct_hll(s: SparkSession, dir: String): DataFrame =
+  def q_distinct_hll(s: SparkSession, dir: String, portable: Boolean): DataFrame =
     graft.functions.Sketches.hllReport(
       graft.functions.Sketches.hllRegisters(
         tbl(s, dir, "lineitem"), col("l_orderkey").cast("string"), p = 8,
-        portable = portableMode), p = 8)
+        portable = portable), p = 8)
 
   private val q_distinct_hll_sql =
     """WITH h AS (SELECT ('0x' || substr(md5(CAST(l_orderkey AS VARCHAR)), 1, 15))::BIGINT AS h
@@ -4164,11 +4157,11 @@ object Queries {
     * (Sketches.hllRegistersPerGroup/hllReportPerGroup): groups·256 bounded
     * register rows, per-group estimates from the same exact-DECIMAL
     * arithmetic, every register and estimate oracle-replayed. */
-  def q_distinct_hll_group(s: SparkSession, dir: String): DataFrame =
+  def q_distinct_hll_group(s: SparkSession, dir: String, portable: Boolean): DataFrame =
     graft.functions.Sketches.hllReportPerGroup(
       graft.functions.Sketches.hllRegistersPerGroup(
         tbl(s, dir, "lineitem"), "l_returnflag",
-        col("l_orderkey").cast("string"), p = 8, portable = portableMode),
+        col("l_orderkey").cast("string"), p = 8, portable = portable),
       p = 8)
 
   private val q_distinct_hll_group_sql =
@@ -4330,11 +4323,11 @@ object Queries {
     * (window, bucket) — rolling distinct-count at windows×256 bounded
     * rows, never a distinct shuffle. Registers and per-window estimates
     * oracle-replayed. */
-  def q_window_wau(s: SparkSession, dir: String): DataFrame =
+  def q_window_wau(s: SparkSession, dir: String, portable: Boolean): DataFrame =
     graft.functions.Sketches.hllReportPerGroup(
       graft.functions.Sketches.hllRegistersPerWindow(
         events(s, dir), "ts", "7 days", "1 day",
-        col("user_id").cast("string"), p = 8, portable = portableMode),
+        col("user_id").cast("string"), p = 8, portable = portable),
       p = 8)
 
   private val q_window_wau_sql =
@@ -4362,14 +4355,14 @@ object Queries {
     * the seven daily register tables). Reuses hllRegistersPerGroup with
     * the tumbling day window as the group; registers AND the per-day
     * estimates oracle-replayed bit-for-bit. */
-  def q_window_dau(s: SparkSession, dir: String): DataFrame =
+  def q_window_dau(s: SparkSession, dir: String, portable: Boolean): DataFrame =
     graft.functions.Sketches.hllReportPerGroup(
       graft.functions.Sketches.hllRegistersPerGroup(
         events(s, dir).select(
           unix_micros(date_trunc("day", col("ts"))).as("day_us"),
           col("user_id")),
         "day_us", col("user_id").cast("string"), p = 8,
-        portable = portableMode),
+        portable = portable),
       p = 8)
 
   private val q_window_dau_sql =
@@ -4636,15 +4629,15 @@ object Queries {
     * so the bound is visible in the gate). At 100 TB this is the
     * broadcast/salt/AQE planning input: two single-pass sketches whose
     * shuffle carries the grid, never the keys. */
-  def q_join_estimate(s: SparkSession, dir: String): DataFrame = {
+  def q_join_estimate(s: SparkSession, dir: String, portable: Boolean): DataFrame = {
     val (depth, width) = (4, 2048)
     val o = tbl(s, dir, "orders")
     val l = tbl(s, dir, "lineitem")
     val est = graft.functions.Sketches.cmsJoinSize(
       graft.functions.Sketches.cmsSketch(o, col("o_orderkey").cast("string"),
-        depth, width, portable = portableMode),
+        depth, width, portable = portable),
       graft.functions.Sketches.cmsSketch(l, col("l_orderkey").cast("string"),
-        depth, width, portable = portableMode))
+        depth, width, portable = portable))
     val truth = o.join(l, col("o_orderkey") === col("l_orderkey"))
       .agg(count(lit(1)).as("true_n"))
     est.crossJoin(truth)
@@ -4785,11 +4778,11 @@ object Queries {
     * balance step. row_number ≤ k runs as WindowGroupLimit (map-side
     * top-k per domain before the single exchange). The oracle replays
     * the domain extraction and the (portable-hash, id) ranking. */
-  def q_domain_cap(s: SparkSession, dir: String): DataFrame = {
+  def q_domain_cap(s: SparkSession, dir: String, portable: Boolean): DataFrame = {
     val u = tbl(s, dir, "documents")
       .select(col("doc_id"), syntheticUrl(col("doc_id"), col("source")).as("url"))
     graft.functions.UrlOps.domainCap(u, "url", "doc_id",
-        maxPerDomain = 3, portable = portableMode)
+        maxPerDomain = 3, portable = portable)
       .select(col("doc_id"), col("domain"))
   }
 
@@ -4855,12 +4848,12 @@ object Queries {
     * entirely on k-sized sketch arrays. The oracle recomputes every
     * group's k smallest distinct hashes, the merged-union k-sets and
     * the identical estimate arithmetic. */
-  def q_kmv_overlap(s: SparkSession, dir: String): DataFrame = {
+  def q_kmv_overlap(s: SparkSession, dir: String, portable: Boolean): DataFrame = {
     val k = 64
     val sk = graft.functions.Sketches.kmvPerGroup(
       tbl(s, dir, "documents"), "source", col("text"), k,
-      portable = portableMode)
-    graft.functions.Sketches.kmvOverlapMatrix(sk, k, portable = portableMode)
+      portable = portable)
+    graft.functions.Sketches.kmvOverlapMatrix(sk, k, portable = portable)
   }
 
   private val q_kmv_overlap_sql =
@@ -4986,13 +4979,13 @@ object Queries {
     * (the grouped analog of q_distinct_kmv). The oracle recomputes every
     * group's k smallest distinct hashes and the same estimate
     * arithmetic. */
-  def q_distinct_kmv_group(s: SparkSession, dir: String): DataFrame = {
+  def q_distinct_kmv_group(s: SparkSession, dir: String, portable: Boolean): DataFrame = {
     val k = 256
     val sk = graft.functions.Sketches.kmvPerGroup(
       tbl(s, dir, "lineitem"), "l_returnflag",
-      col("l_orderkey").cast("string"), k, portable = portableMode)
+      col("l_orderkey").cast("string"), k, portable = portable)
     graft.functions.Sketches.kmvPerGroupEstimate(sk, k,
-      portable = portableMode)
+      portable = portable)
   }
 
   private val q_distinct_kmv_group_sql =
@@ -5014,15 +5007,15 @@ object Queries {
     * set), so no full-universe distinct ever runs. est ≥ true count always;
     * the oracle recomputes grid and minima bit-for-bit over the full
     * universe — equivalence is by the all-buckets-heavy identity. */
-  def q_heavy_hitters(s: SparkSession, dir: String): DataFrame = {
+  def q_heavy_hitters(s: SparkSession, dir: String, portable: Boolean): DataFrame = {
     val (depth, width, minCount) = (4, 2048, 40)
     val grams = tbl(s, dir, "documents")
       .select(explode(graft.functions.Dedup.shingles(col("text"), 2)).as("gram"))
     val sk = graft.functions.Sketches.cmsSketch(
-      grams, col("gram"), depth, width, portable = portableMode)
+      grams, col("gram"), depth, width, portable = portable)
     graft.functions.Sketches.cmsHeavyItems(
         sk, grams, col("gram"), depth, width, minCount,
-        portable = portableMode)
+        portable = portable)
       .select(col("item").as("gram"), col("est"))
   }
 
@@ -5207,9 +5200,9 @@ object Queries {
     * the oracle recomputes the SAME signatures/bands in SQL (md5-derived
     * 60-bit hash + mod-p affine permutations), so the full banded pipeline is
     * hash-checked, not rows-only. */
-  def q_dedup_minhash(s: SparkSession, dir: String): DataFrame =
+  def q_dedup_minhash(s: SparkSession, dir: String, portable: Boolean): DataFrame =
     graft.functions.Dedup.minhashNearDups(tbl(s, dir, "documents"),
-      "doc_id", "text", minEstSim = 0.5, portable = portableMode)
+      "doc_id", "text", minEstSim = 0.5, portable = portable)
 
   private def q_dedup_minhash_sql: String = {
     val P = graft.functions.Dedup.PortableP
@@ -5244,16 +5237,16 @@ object Queries {
     * pipeline AND the reporting increment (a pair surfaces in the increment
     * of its LATER doc), so both the pair set and the
     * exactly-once-per-increment contract are hash-checked. */
-  def q_dedup_incremental(s: SparkSession, dir: String): DataFrame = {
+  def q_dedup_incremental(s: SparkSession, dir: String, portable: Boolean): DataFrame = {
     val docs = tbl(s, dir, "documents")
     val mid = docs.agg(max(col("doc_id"))).head().getLong(0) / 2
     val (p1, sigs1) = graft.functions.Dedup.minhashNearDupsIncremental(
       docs.filter(col("doc_id") <= mid),
       graft.functions.Dedup.emptySignatures(s),
-      "doc_id", "text", minEstSim = 0.5, portable = portableMode)
+      "doc_id", "text", minEstSim = 0.5, portable = portable)
     val (p2, sigs2) = graft.functions.Dedup.minhashNearDupsIncremental(
       docs.filter(col("doc_id") > mid), sigs1,
-      "doc_id", "text", minEstSim = 0.5, portable = portableMode)
+      "doc_id", "text", minEstSim = 0.5, portable = portable)
     // materialize the (small) pair output, then RELEASE both increments'
     // persisted signature tables — without this every invocation (Verify +
     // both Bench modes) would leak two cached datasets for the session
@@ -5320,9 +5313,9 @@ object Queries {
     * representative). The oracle recomputes the full banded minhash pipeline
     * AND the transitive closure of the pair graph recursively — clusters are
     * hash-checked end to end. */
-  def q_dedup_clusters(s: SparkSession, dir: String): DataFrame = {
+  def q_dedup_clusters(s: SparkSession, dir: String, portable: Boolean): DataFrame = {
     val pairs = graft.functions.Dedup.minhashNearDups(tbl(s, dir, "documents"),
-      "doc_id", "text", minEstSim = 0.5, portable = portableMode)
+      "doc_id", "text", minEstSim = 0.5, portable = portable)
     val out = graft.functions.Dedup.nearDupClusters(pairs)
     pairs.unpersist() // CC materialized its rounds; the pair cache is done
     out
@@ -5344,10 +5337,10 @@ object Queries {
     * pipeline, the recursive transitive closure, AND the cluster-hash
     * bucket assignment end to end — (doc_id, cluster_id, bucket, split)
     * all hash-checked. */
-  def q_cluster_split(s: SparkSession, dir: String): DataFrame = {
+  def q_cluster_split(s: SparkSession, dir: String, portable: Boolean): DataFrame = {
     val docs = tbl(s, dir, "documents")
     val pairs = graft.functions.Dedup.minhashNearDups(docs,
-      "doc_id", "text", minEstSim = 0.5, portable = portableMode)
+      "doc_id", "text", minEstSim = 0.5, portable = portable)
     val clusters = graft.functions.Dedup.nearDupClusters(pairs)
     pairs.unpersist() // CC materialized its rounds; the pair cache is done
     graft.functions.Sampling.clusterSplit(
@@ -5379,13 +5372,13 @@ object Queries {
     * whole corpus; 256 buckets). The oracle recomputes the gram extraction,
     * md5 bucket hashing, Laplace-smoothed integer micro-probabilities, and
     * per-doc BIGINT scores end to end — (doc_id, score) hash-checked. */
-  def q_dsir(s: SparkSession, dir: String): DataFrame = {
+  def q_dsir(s: SparkSession, dir: String, portable: Boolean): DataFrame = {
     val docs = tbl(s, dir, "documents")
     // target = the English slice of the raw corpus → the single-scan
     // predicate path (both bucket distributions from one corpus pass)
     graft.functions.Sampling.importanceResampleBy(
       docs, col("lang") === "en", "doc_id", "text",
-      k = 200, buckets = 256, portable = portableMode)
+      k = 200, buckets = 256, portable = portable)
       .select(col("doc_id"), col("score"))
   }
 
@@ -5487,9 +5480,9 @@ object Queries {
     * 60-bit signature. Banding recall is exact for the stated distance, so
     * the oracle is the full pairwise Hamming filter over the same
     * signatures — recomputed bit-for-bit in SQL. */
-  def q_dedup_simhash(s: SparkSession, dir: String): DataFrame =
+  def q_dedup_simhash(s: SparkSession, dir: String, portable: Boolean): DataFrame =
     graft.functions.Dedup.simhashNearDups(tbl(s, dir, "documents"),
-      "doc_id", "text", maxDist = 3, portable = portableMode)
+      "doc_id", "text", maxDist = 3, portable = portable)
       .select(col("a_id"), col("b_id"), col("hamming").cast("long").as("hamming"))
 
   private val q_dedup_simhash_sql =
@@ -5896,10 +5889,10 @@ object Queries {
     * not corpus-quadratic), portable bucket hashing — the oracle recomputes
     * the same buckets in SQL, so the bucketed algorithm itself is
     * hash-checked. */
-  def q_ann_lsh(s: SparkSession, dir: String): DataFrame =
+  def q_ann_lsh(s: SparkSession, dir: String, portable: Boolean): DataFrame =
     graft.functions.Similarity.annTopK(tbl(s, dir, "embeddings"),
       "vec_id", "embedding", maxQueryId = 50, k = 3, bits = 8,
-      portable = portableMode)
+      portable = portable)
       .select(col("q_id"), col("c_id"), col("bucket"), col("sim"), col("rank"))
 
   private def q_ann_lsh_sql: String =
@@ -5917,10 +5910,10 @@ object Queries {
     * of its bucket (the standard recall lever; query side ×(bits+1), corpus
     * side untouched). The oracle recomputes the probe set in SQL — the
     * multiprobe machinery itself is hash-checked, not rows-only. */
-  def q_ann_multiprobe(s: SparkSession, dir: String): DataFrame =
+  def q_ann_multiprobe(s: SparkSession, dir: String, portable: Boolean): DataFrame =
     graft.functions.Similarity.annTopK(tbl(s, dir, "embeddings"),
       "vec_id", "embedding", maxQueryId = 50, k = 3, bits = 8,
-      portable = portableMode, multiprobe = true)
+      portable = portable, multiprobe = true)
       .select(col("q_id"), col("c_id"), col("bucket"), col("sim"), col("rank"))
 
   private def q_ann_multiprobe_sql: String =
@@ -6132,14 +6125,14 @@ object Queries {
     * recomputes buckets + rounded cosine in SQL. (This corpus has
     * near-random vectors — top-1 cosine ≈ 0.49 — so the "near dup"
     * threshold is relative to the distribution.) */
-  def q_embedding_neardup(s: SparkSession, dir: String): DataFrame =
+  def q_embedding_neardup(s: SparkSession, dir: String, portable: Boolean): DataFrame =
     // oracle mode bakes bits=8 (the SQL twin's plane count); production uses
     // corpus-adaptive bits (bucket population ~64 — fixed bits=8 measured
     // quadratic in the round-14 100× sweep). sf0.1's 2000 vectors resolve
     // to the floor 8, so the committed bench plan is unchanged there.
     graft.functions.Similarity.cosineNearDups(tbl(s, dir, "embeddings"),
       "vec_id", "embedding", minSim = 0.4,
-      bits = if (portableMode) 8 else 0, portable = portableMode)
+      bits = if (portable) 8 else 0, portable = portable)
 
   private def q_embedding_neardup_sql: String =
     s"""WITH ${lshBucketSqlPrelude(8)}
@@ -6156,12 +6149,12 @@ object Queries {
     * pairwise cosine (the q_ann_ivf trick) — while Bench's production pass
     * runs the clustered nlist=16 shape a user ships (NearDupSpec pins
     * clustered ⊆ full and the sim≈1 equivalence). */
-  def q_semantic_dedup(s: SparkSession, dir: String): DataFrame = {
+  def q_semantic_dedup(s: SparkSession, dir: String, portable: Boolean): DataFrame = {
     // production: nlist <= 0 → corpus-adaptive (cluster population ~1024,
     // pair volume linear in the corpus — the round-14 100× sweep measured
     // fixed nlist=16 at 128× wall per decade); sf0.1's 2000 vectors still
     // resolve to the floor 16, so the committed bench plan is unchanged
-    val (nlist, iters) = if (portableMode) (1, 1) else (0, 2)
+    val (nlist, iters) = if (portable) (1, 1) else (0, 2)
     graft.functions.Similarity.semanticDedupPairs(tbl(s, dir, "embeddings"),
       "vec_id", "embedding", minSim = 0.4, nlist = nlist, kmeansIters = iters)
       .select(col("a_id"), col("b_id"), col("sim"))
@@ -6793,9 +6786,9 @@ object Queries {
     * portable hash mod N with a self-exclusion bump, resolution via one
     * equi join. The oracle replays position assignment, hashing and the
     * bump, so the pair set is engine-reproducible. */
-  def q_negative_sample(s: SparkSession, dir: String): DataFrame =
+  def q_negative_sample(s: SparkSession, dir: String, portable: Boolean): DataFrame =
     graft.functions.Sampling.negativeSample(
-      tbl(s, dir, "documents"), "doc_id", k = 2, portable = portableMode)
+      tbl(s, dir, "documents"), "doc_id", k = 2, portable = portable)
 
   private val q_negative_sample_sql =
     """WITH pos AS (SELECT doc_id,
@@ -7055,479 +7048,252 @@ object Queries {
   }
 
   // ---------------------------------------------------------------------
-  // registry
+  // registry: one line per cell (Catalog.cell, or Catalog.hashed when the
+  // query takes the hash mode), tagged for the harness mains
   // ---------------------------------------------------------------------
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q1_agg" -> (q1_agg _),
-    "q_group_count" -> (q_group_count _),
-    "q_group_avg" -> (q_group_avg _),
-    "q_group_minmax" -> (q_group_minmax _),
-    "q_group_mode" -> (q_group_mode _),
-    "q_max_element" -> (q_max_element _),
-    "q_fold_global" -> (q_fold_global _),
-    "q_reduce_max" -> (q_reduce_max _),
-    "q_distinct" -> (q_distinct _),
-    "q_fold_scan" -> (q_fold_scan _),
-    "q_reduce_scan_keyed" -> (q_reduce_scan_keyed _),
-    "q_group_reduce" -> (q_group_reduce _),
-    "q_map" -> (q_map _),
-    "q_rich_map" -> (q_rich_map _),
-    "q_rich_filter_map" -> (q_rich_filter_map _),
-    "q_rich_flat_map" -> (q_rich_flat_map _),
-    "q_map_memo" -> (q_map_memo _),
-    "q_map_async" -> (q_map_async _),
-    "q_rich_map_custom" -> (q_rich_map_custom _),
-    "q_reorder" -> (q_reorder _),
-    "q_filter" -> (q_filter _),
-    "q_filter_map" -> (q_filter_map _),
-    "q_flat_map" -> (q_flat_map _),
-    "q_scalar_funcs" -> (q_scalar_funcs _),
-    "q_json" -> (q_json _),
-    "q_merge" -> (q_merge _),
-    "q_zip" -> (q_zip _),
-    "q_route" -> (q_route _),
-    "q_top_k" -> (q_top_k _),
-    "q_limit_offset" -> (q_limit_offset _),
-    "q_sort" -> (q_sort _),
-    "q_join_inner" -> (q_join_inner _),
-    "q_join_left" -> (q_join_left _),
-    "q_join_outer" -> (q_join_outer _),
-    "q_join_semi" -> (q_join_semi _),
-    "q_join_anti" -> (q_join_anti _),
-    "q_join_broadcast" -> (q_join_broadcast _),
-    "q_window_tumbling" -> (q_window_tumbling _),
-    "q_window_sliding" -> (q_window_sliding _),
-    "q_window_session" -> (q_window_session _),
-    "q_window_txn" -> (q_window_txn _),
-    "q_window_count" -> (q_window_count _),
-    "q_window_columnar" -> (q_window_columnar _),
-    "q_window_foldfirst" -> (q_window_foldfirst _),
-    "q_window_lastk" -> (q_window_lastk _),
-    "q_window_first_last" -> (q_window_first_last _),
-    "q_interval_join" -> (q_interval_join _),
-    "q_window_join" -> (q_window_join _),
-    "q_stream_session" -> (q_stream_session _),
-    "q_stream_interval_join" -> (q_stream_interval_join _),
-    "q_stream_tumbling" -> (q_stream_tumbling _),
-    "q_stream_sliding" -> (q_stream_sliding _),
-    "q_stream_wordcount" -> (q_stream_wordcount _),
-    "q_stream_columnar" -> (q_stream_columnar _),
-    "q_stream_foldfirst" -> (q_stream_foldfirst _),
-    "q_stream_dedup" -> (q_stream_dedup _),
-    "q_stream_funnel" -> (q_stream_funnel _),
-    "q_stream_sessionize" -> (q_stream_sessionize _),
-    "q_stream_hll" -> (q_stream_hll _),
-    "q_stream_kmv" -> (q_stream_kmv _),
-    "q_asof_join" -> (q_asof_join _),
-    "q_asof_forward" -> (q_asof_forward _),
-    "q_asof_nearest" -> (q_asof_nearest _),
-    "q_funnel" -> (q_funnel _),
-    "q_anomaly" -> (q_anomaly _),
-    "q_retention" -> (q_retention _),
-    "q_cohort_matrix" -> (q_cohort_matrix _),
-    "q_sessionize" -> (q_sessionize _),
-    "q_user_journeys" -> (q_user_journeys _),
-    "q_event_transitions" -> (q_event_transitions _),
-    "q_session_stats" -> (q_session_stats _),
-    "q_trending" -> (q_trending _),
-    "q_stream_trending" -> (q_stream_trending _),
-    "q_funnel_summary" -> (q_funnel_summary _),
-    "q_range_join" -> (q_range_join _),
-    "q_overlap_join" -> (q_overlap_join _),
-    "q_snapshot_diff" -> (q_snapshot_diff _),
-    "q_er_clusters" -> (q_er_clusters _),
-    "q_zorder" -> (q_zorder _),
-    "q_bpe" -> (q_bpe _),
-    "q_chunk" -> (q_chunk _),
-    "q_token_mixture" -> (q_token_mixture _),
-    "q_e2e_curation" -> (q_e2e_curation _),
-    "q_temperature_mixture" -> (q_temperature_mixture _),
-    "q_epoch_mixture" -> (q_epoch_mixture _),
-    "q_topk_group" -> (q_topk_group _),
-    "q_char_lm" -> (q_char_lm _),
-    "q_char_entropy" -> (q_char_entropy _),
-    "q_ngram_lm" -> (q_ngram_lm _),
-    "q_stream_ngram_lm" -> (q_stream_ngram_lm _),
-    "q_perplexity_tiers" -> (q_perplexity_tiers _),
-    "q_fuzzy_join" -> (q_fuzzy_join _),
-    "q_er_join" -> (q_er_join _),
-    "q_copurchase" -> (q_copurchase _),
-    "q_related_items" -> (q_related_items _),
-    "q_label_prop" -> (q_label_prop _),
-    "q_distinct_kmv" -> (q_distinct_kmv _),
-    "q_distinct_hll" -> (q_distinct_hll _),
-    "q_distinct_hll_group" -> (q_distinct_hll_group _),
-    "q_stream_histogram" -> (q_stream_histogram _),
-    "q_hist_persist" -> (q_hist_persist _),
-    "q_drift" -> (q_drift _),
-    "q_stream_drift" -> (q_stream_drift _),
-    "q_degree_dist" -> (q_degree_dist _),
-    "q_window_dau" -> (q_window_dau _),
-    "q_window_wau" -> (q_window_wau _),
-    "q_source_quality" -> (q_source_quality _),
-    "q_corr_matrix" -> (q_corr_matrix _),
-    "q_tpch3" -> (q_tpch3 _),
-    "q_tpch5" -> (q_tpch5 _),
-    "q_tpch18" -> (q_tpch18 _),
-    "q_data_quality" -> (q_data_quality _),
-    "q_docs_quality" -> (q_docs_quality _),
-    "q_stream_quality" -> (q_stream_quality _),
-    "q_histogram" -> (q_histogram _),
-    "q_quantile_hist" -> (q_quantile_hist _),
-    "q_quantile_group" -> (q_quantile_group _),
-    "q_kmv_persist" -> (q_kmv_persist _),
-    "q_distinct_kmv_group" -> (q_distinct_kmv_group _),
-    "q_skew_profile" -> (q_skew_profile _),
-    "q_join_estimate" -> (q_join_estimate _),
-    "q_join_salted" -> (q_join_salted _),
-    "q_join_bloom" -> (q_join_bloom _),
-    "q_compact_latest" -> (q_compact_latest _),
-    "q_stream_compact" -> (q_stream_compact _),
-    "q_join_bucketed" -> (q_join_bucketed _),
-    "q_salted_agg" -> (q_salted_agg _),
-    "q_vocab_encode" -> (q_vocab_encode _),
-    "q_url_canon" -> (q_url_canon _),
-    "q_domain_cap" -> (q_domain_cap _),
-    "q_mojibake" -> (q_mojibake _),
-    "q_kmv_overlap" -> (q_kmv_overlap _),
-    "q_script_profile" -> (q_script_profile _),
-    "q_sentences" -> (q_sentences _),
-    "q_corpus_health" -> (q_corpus_health _),
-    "q_domain_filter" -> (q_domain_filter _),
-    "q_heavy_hitters" -> (q_heavy_hitters _),
-    "q_corpus_divergence" -> (q_corpus_divergence _),
-    "q_distinct_ngrams" -> (q_distinct_ngrams _),
-    "q_zipf_slope" -> (q_zipf_slope _),
-    "q_dup_spans" -> (q_dup_spans _),
-    "q_winnow" -> (q_winnow _),
-    "q_tfidf" -> (q_tfidf _),
-    "q_group_quantiles" -> (q_group_quantiles _),
-    "q_cube" -> (q_cube _),
-    "q_rollup" -> (q_rollup _),
-    "q_group_stats" -> (q_group_stats _),
-    "q_pivot" -> (q_pivot _),
-    "q_analytic" -> (q_analytic _),
-    "q_bm25" -> (q_bm25 _),
-    "q_inverted_index" -> (q_inverted_index _),
-    "q_phrase_search" -> (q_phrase_search _),
-    "q_connected_components" -> (q_connected_components _),
-    "q_transitive_closure" -> (q_transitive_closure _),
-    "q_iterate" -> (q_iterate _),
-    "q_pagerank" -> (q_pagerank _),
-    "q_pagerank_weighted" -> (q_pagerank_weighted _),
-    "q_ppr" -> (q_ppr _),
-    "q_pagerank_delta" -> (q_pagerank_delta _),
-    "q_sssp" -> (q_sssp _),
-    "q_triangles" -> (q_triangles _),
-    "q_kmeans" -> (q_kmeans _),
-    "q_dedup_exact" -> (q_dedup_exact _),
-    "q_dup_rate_by_source" -> (q_dup_rate_by_source _),
-    "q_digest_persist" -> (q_digest_persist _),
-    "q_dedup_minhash" -> (q_dedup_minhash _),
-    "q_dedup_incremental" -> (q_dedup_incremental _),
-    "q_dedup_clusters" -> (q_dedup_clusters _),
-    "q_cluster_split" -> (q_cluster_split _),
-    "q_dsir" -> (q_dsir _),
-    "q_html_extract" -> (q_html_extract _),
-    "q_decontaminate" -> (q_decontaminate _),
-    "q_dedup_bloom" -> (q_dedup_bloom _),
-    "q_token_shards" -> (q_token_shards _),
-    "q_pack_sequences" -> (q_pack_sequences _),
-    "q_weighted_sample" -> (q_weighted_sample _),
-    "q_negative_sample" -> (q_negative_sample _),
-    "q_mixture_sample" -> (q_mixture_sample _),
-    "q_semantic_dedup" -> (q_semantic_dedup _),
-    "q_dedup_normalized" -> (q_dedup_normalized _),
-    "q_shuffle_shards" -> (q_shuffle_shards _),
-    "q_dedup_simhash" -> (q_dedup_simhash _),
-    "q_ngram_jaccard" -> (q_ngram_jaccard _),
-    "q_ngram_containment" -> (q_ngram_containment _),
-    "q_quantile_buckets" -> (q_quantile_buckets _),
-    "q_kcore" -> (q_kcore _),
-    "q_clustering_coeff" -> (q_clustering_coeff _),
-    "q_link_predict" -> (q_link_predict _),
-    "q_hits" -> (q_hits _),
-    "q_skipgrams" -> (q_skipgrams _),
-    "q_dedup_verified" -> (q_dedup_verified _),
-    "q_cosine_topk" -> (q_cosine_topk _),
-    "q_centroid_cosine" -> (q_centroid_cosine _),
-    "q_embed_int8" -> (q_embed_int8 _),
-    "q_ann_int8" -> (q_ann_int8 _),
-    "q_ann_lsh" -> (q_ann_lsh _),
-    "q_ann_multiprobe" -> (q_ann_multiprobe _),
-    "q_ann_ivf" -> (q_ann_ivf _),
-    "q_ann_ivf_persist" -> (q_ann_ivf_persist _),
-    "q_ann_ivf_sharded" -> (q_ann_ivf_sharded _),
-    "q_ann_ivf_auto" -> (q_ann_ivf_auto _),
-    "q_ann_pq" -> (q_ann_pq _),
-    "q_ann_ivfpq" -> (q_ann_ivfpq _),
-    "q_embedding_neardup" -> (q_embedding_neardup _),
-    "q_text_profile" -> (q_text_profile _),
-    "q_multimodal" -> (q_multimodal _),
-    "q_audio_features" -> (q_audio_features _),
-    "q_image_tiles" -> (q_image_tiles _),
-    "nx_q1" -> (nx_q1 _),
-    "nx_q2" -> (nx_q2 _),
-    "nx_q3" -> (nx_q3 _),
-    "nx_q4" -> (nx_q4 _),
-    "nx_q5" -> (nx_q5 _),
-    "nx_q6" -> (nx_q6 _),
-    "nx_q7" -> (nx_q7 _),
-    "nx_q8" -> (nx_q8 _),
-    "q_stream_nx1" -> (q_stream_nx1 _),
-    "q_stream_nx2" -> (q_stream_nx2 _),
-    "q_stream_nx3" -> (q_stream_nx3 _),
-    "q_stream_nx4" -> (q_stream_nx4 _),
-    "q_stream_nx5" -> (q_stream_nx5 _),
-    "q_stream_nx6" -> (q_stream_nx6 _),
-    "q_stream_nx7" -> (q_stream_nx7 _),
-    "q_stream_nx8" -> (q_stream_nx8 _),
-    "q_pipeline_clean" -> (q_pipeline_clean _),
-    "q_wordcount_file" -> (q_wordcount_file _),
-    "q_quality_gopher" -> (q_quality_gopher _),
-    "q_c4_clean" -> (q_c4_clean _),
-    "q_quality_classifier" -> (q_quality_classifier _),
-    "q_split_hash" -> (q_split_hash _),
-    "q_sample_stratified" -> (q_sample_stratified _),
-    "q_diversity_sample" -> (q_diversity_sample _),
-    "q_pii_redact" -> (q_pii_redact _)
-  ) ++ TpchQueries.all
+  val catalog: Seq[Cell] = Catalog(Seq(
+    cell("q1_agg", q1_agg, q1_sql, Headline, Control),
+    cell("q_group_count", q_group_count, q_group_count_sql),
+    cell("q_group_avg", q_group_avg, q_group_avg_sql),
+    cell("q_group_minmax", q_group_minmax, q_group_minmax_sql),
+    cell("q_group_mode", q_group_mode, q_group_mode_sql),
+    cell("q_max_element", q_max_element, q_max_element_sql),
+    cell("q_fold_global", q_fold_global, q_fold_global_sql),
+    cell("q_reduce_max", q_reduce_max, q_reduce_max_sql),
+    cell("q_distinct", q_distinct, q_distinct_sql),
+    cell("q_fold_scan", q_fold_scan, q_fold_scan_sql),
+    cell("q_reduce_scan_keyed", q_reduce_scan_keyed, q_reduce_scan_keyed_sql, Soak),
+    cell("q_group_reduce", q_group_reduce, q_group_reduce_sql),
+    cell("q_map", q_map, q_map_sql),
+    cell("q_rich_map", q_rich_map, q_rich_map_sql, Soak),
+    cell("q_rich_filter_map", q_rich_filter_map, q_rich_filter_map_sql),
+    cell("q_rich_flat_map", q_rich_flat_map, q_rich_flat_map_sql),
+    cell("q_map_memo", q_map_memo, q_map_memo_sql),
+    cell("q_map_async", q_map_async, q_map_async_sql),
+    cell("q_rich_map_custom", q_rich_map_custom, q_rich_map_custom_sql),
+    cell("q_reorder", q_reorder, q_reorder_sql),
+    cell("q_filter", q_filter, q_filter_sql),
+    cell("q_filter_map", q_filter_map, q_filter_map_sql),
+    cell("q_flat_map", q_flat_map, q_flat_map_sql),
+    cell("q_scalar_funcs", q_scalar_funcs, q_scalar_funcs_sql),
+    cell("q_json", q_json, q_json_sql),
+    cell("q_merge", q_merge, q_merge_sql),
+    cell("q_zip", q_zip, q_zip_sql),
+    cell("q_route", q_route, q_route_sql),
+    cell("q_top_k", q_top_k, q_top_k_sql),
+    cell("q_limit_offset", q_limit_offset, q_limit_offset_sql),
+    cell("q_sort", q_sort, q_sort_sql, Headline, Control),
+    cell("q_join_inner", q_join_inner, q_join_inner_sql, Headline, Control),
+    cell("q_join_left", q_join_left, q_join_left_sql),
+    cell("q_join_outer", q_join_outer, q_join_outer_sql),
+    cell("q_join_semi", q_join_semi, q_join_semi_sql),
+    cell("q_join_anti", q_join_anti, q_join_anti_sql),
+    cell("q_join_broadcast", q_join_broadcast, q_join_broadcast_sql, Headline),
+    cell("q_window_tumbling", q_window_tumbling, q_window_tumbling_sql),
+    cell("q_window_sliding", q_window_sliding, q_window_sliding_sql, Headline),
+    cell("q_window_session", q_window_session, q_window_session_sql, Headline),
+    cell("q_window_txn", q_window_txn, q_window_txn_sql),
+    cell("q_window_count", q_window_count, q_window_count_sql),
+    cell("q_window_columnar", q_window_columnar, q_window_columnar_sql),
+    cell("q_window_foldfirst", q_window_foldfirst, q_window_foldfirst_sql),
+    cell("q_window_lastk", q_window_lastk, q_window_lastk_sql),
+    cell("q_window_first_last", q_window_first_last, q_window_first_last_sql),
+    cell("q_interval_join", q_interval_join, q_interval_join_sql, Headline, Soak),
+    cell("q_window_join", q_window_join, q_window_join_sql),
+    // streaming twins share the batch oracles: stream ≡ batch is the claim,
+    cell("q_stream_session", q_stream_session, q_window_session_sql),
+    cell("q_stream_interval_join", q_stream_interval_join, q_interval_join_sql),
+    cell("q_stream_tumbling", q_stream_tumbling, q_window_tumbling_sql, Soak),
+    cell("q_stream_sliding", q_stream_sliding, q_window_sliding_sql),
+    cell("q_stream_wordcount", q_stream_wordcount, q_wordcount_file_sql),
+    cell("q_stream_columnar", q_stream_columnar, q_window_columnar_sql, Soak),
+    cell("q_stream_foldfirst", q_stream_foldfirst, q_window_foldfirst_sql, Soak),
+    cell("q_stream_dedup", q_stream_dedup, q_dedup_exact_sql),
+    cell("q_stream_funnel", q_stream_funnel, q_funnel_sql, Soak),
+    cell("q_stream_sessionize", q_stream_sessionize, q_sessionize_sql, Soak),
+    hashed("q_stream_hll", q_stream_hll, q_stream_hll_sql),
+    hashed("q_stream_kmv", q_stream_kmv, q_stream_kmv_sql),
+    cell("q_asof_join", q_asof_join, q_asof_join_sql, Headline),
+    cell("q_asof_forward", q_asof_forward, q_asof_forward_sql),
+    cell("q_asof_nearest", q_asof_nearest, q_asof_nearest_sql),
+    cell("q_funnel", q_funnel, q_funnel_sql),
+    cell("q_anomaly", q_anomaly, q_anomaly_sql),
+    cell("q_retention", q_retention, q_retention_sql),
+    cell("q_cohort_matrix", q_cohort_matrix, q_cohort_matrix_sql),
+    cell("q_sessionize", q_sessionize, q_sessionize_sql),
+    cell("q_user_journeys", q_user_journeys, q_user_journeys_sql),
+    cell("q_event_transitions", q_event_transitions, q_event_transitions_sql),
+    cell("q_session_stats", q_session_stats, q_session_stats_sql),
+    cell("q_trending", q_trending, q_trending_sql),
+    cell("q_stream_trending", q_stream_trending, q_trending_sql),
+    cell("q_funnel_summary", q_funnel_summary, q_funnel_summary_sql),
+    cell("q_range_join", q_range_join, q_range_join_sql, Soak),
+    cell("q_overlap_join", q_overlap_join, q_overlap_join_sql),
+    cell("q_snapshot_diff", q_snapshot_diff, q_snapshot_diff_sql),
+    cell("q_er_clusters", q_er_clusters, q_er_clusters_sql, Persists),
+    cell("q_zorder", q_zorder, q_zorder_sql),
+    cell("q_bpe", q_bpe, q_bpe_sql, TmpCache),
+    cell("q_chunk", q_chunk, q_chunk_sql),
+    cell("q_token_mixture", q_token_mixture, q_token_mixture_sql, Soak),
+    cell("q_e2e_curation", q_e2e_curation, q_e2e_curation_sql, Soak, Persists),
+    cell("q_temperature_mixture", q_temperature_mixture, q_temperature_mixture_sql),
+    cell("q_epoch_mixture", q_epoch_mixture, q_epoch_mixture_sql),
+    cell("q_topk_group", q_topk_group, q_topk_group_sql, Soak),
+    cell("q_char_lm", q_char_lm, q_char_lm_sql, Soak, Persists),
+    cell("q_char_entropy", q_char_entropy, q_char_entropy_sql),
+    cell("q_ngram_lm", q_ngram_lm, q_ngram_lm_sql, Headline, Persists),
+    cell("q_stream_ngram_lm", q_stream_ngram_lm, q_ngram_lm_sql, Soak),
+    cell("q_perplexity_tiers", q_perplexity_tiers, q_perplexity_tiers_sql, Headline, Persists),
+    cell("q_fuzzy_join", q_fuzzy_join, q_fuzzy_join_sql, Persists),
+    cell("q_er_join", q_er_join, q_er_join_sql),
+    cell("q_copurchase", q_copurchase, q_copurchase_sql, TmpCache),
+    cell("q_related_items", q_related_items, q_related_items_sql, TmpCache),
+    cell("q_label_prop", q_label_prop, q_label_prop_sql, Persists),
+    hashed("q_distinct_kmv", q_distinct_kmv, q_distinct_kmv_sql, BenchPortable, TmpCache),
+    hashed("q_distinct_hll", q_distinct_hll, q_distinct_hll_sql),
+    hashed("q_distinct_hll_group", q_distinct_hll_group, q_distinct_hll_group_sql),
+    cell("q_stream_histogram", q_stream_histogram, q_histogram_sql),
+    cell("q_hist_persist", q_hist_persist, q_histogram_sql, TmpCache),
+    cell("q_drift", q_drift, q_drift_sql),
+    cell("q_stream_drift", q_stream_drift, q_drift_sql),
+    cell("q_degree_dist", q_degree_dist, q_degree_dist_sql),
+    hashed("q_window_dau", q_window_dau, q_window_dau_sql),
+    hashed("q_window_wau", q_window_wau, q_window_wau_sql),
+    cell("q_source_quality", q_source_quality, q_source_quality_sql),
+    cell("q_corr_matrix", q_corr_matrix, q_corr_matrix_sql, Soak),
+    cell("q_tpch3", q_tpch3, q_tpch3_sql),
+    cell("q_tpch5", q_tpch5, q_tpch5_sql),
+    cell("q_tpch18", q_tpch18, q_tpch18_sql, Soak),
+    cell("q_data_quality", q_data_quality, q_data_quality_sql, Soak),
+    cell("q_docs_quality", q_docs_quality, q_docs_quality_sql),
+    cell("q_stream_quality", q_stream_quality, q_stream_quality_sql),
+    cell("q_histogram", q_histogram, q_histogram_sql),
+    cell("q_quantile_hist", q_quantile_hist, q_quantile_hist_sql),
+    cell("q_quantile_group", q_quantile_group, q_quantile_group_sql),
+    hashed("q_kmv_persist", q_kmv_persist, q_distinct_kmv_sql),
+    hashed("q_distinct_kmv_group", q_distinct_kmv_group, q_distinct_kmv_group_sql),
+    cell("q_skew_profile", q_skew_profile, q_skew_profile_sql),
+    hashed("q_join_estimate", q_join_estimate, q_join_estimate_sql),
+    cell("q_join_salted", q_join_salted, q_join_salted_sql, Soak),
+    cell("q_join_bloom", q_join_bloom, q_join_bloom_sql, Soak),
+    cell("q_compact_latest", q_compact_latest, q_compact_latest_sql),
+    cell("q_stream_compact", q_stream_compact, q_compact_latest_sql, Soak),
+    cell("q_join_bucketed", q_join_bucketed, q_join_salted_sql, Soak),
+    cell("q_salted_agg", q_salted_agg, q_salted_agg_sql),
+    cell("q_vocab_encode", q_vocab_encode, q_vocab_encode_sql),
+    cell("q_url_canon", q_url_canon, q_url_canon_sql),
+    hashed("q_domain_cap", q_domain_cap, q_domain_cap_sql),
+    cell("q_mojibake", q_mojibake, q_mojibake_sql),
+    hashed("q_kmv_overlap", q_kmv_overlap, q_kmv_overlap_sql),
+    cell("q_script_profile", q_script_profile, q_script_profile_sql),
+    cell("q_sentences", q_sentences, q_sentences_sql),
+    cell("q_corpus_health", q_corpus_health, q_corpus_health_sql),
+    cell("q_domain_filter", q_domain_filter, q_domain_filter_sql),
+    hashed("q_heavy_hitters", q_heavy_hitters, q_heavy_hitters_sql, BenchPortable, TmpCache),
+    cell("q_corpus_divergence", q_corpus_divergence, q_corpus_divergence_sql),
+    cell("q_distinct_ngrams", q_distinct_ngrams, q_distinct_ngrams_sql),
+    cell("q_zipf_slope", q_zipf_slope, q_zipf_slope_sql),
+    hashed("q_dup_spans", q_dup_spans, q_dup_spans_sql, BenchPortable),
+    hashed("q_winnow", q_winnow, q_winnow_sql, BenchPortable),
+    cell("q_tfidf", q_tfidf, q_tfidf_sql),
+    cell("q_group_quantiles", q_group_quantiles, q_group_quantiles_sql),
+    cell("q_cube", q_cube, q_cube_sql),
+    cell("q_rollup", q_rollup, q_rollup_sql),
+    cell("q_group_stats", q_group_stats, q_group_stats_sql),
+    cell("q_pivot", q_pivot, q_pivot_sql),
+    cell("q_analytic", q_analytic, q_analytic_sql),
+    cell("q_bm25", q_bm25, q_bm25_sql, Headline, TmpCache),
+    cell("q_inverted_index", q_inverted_index, q_bm25_sql, TmpCache),
+    cell("q_phrase_search", q_phrase_search, q_phrase_search_sql),
+    cell("q_connected_components", q_connected_components, q_connected_components_sql, Headline, Iterative, Persists),
+    cell("q_transitive_closure", q_transitive_closure, q_transitive_closure_sql, Headline, Iterative, Persists),
+    cell("q_iterate", q_iterate, q_iterate_sql, Persists),
+    cell("q_pagerank", q_pagerank, q_pagerank_sql, Headline, Iterative, Persists),
+    cell("q_pagerank_weighted", q_pagerank_weighted, q_pagerank_weighted_sql, Persists),
+    cell("q_ppr", q_ppr, q_ppr_sql, Iterative, Persists),
+    cell("q_pagerank_delta", q_pagerank_delta, q_pagerank_delta_sql, Headline, Iterative, Persists),
+    cell("q_sssp", q_sssp, q_sssp_sql, Iterative, Persists),
+    cell("q_triangles", q_triangles, q_triangles_sql, Headline, Control),
+    cell("q_kmeans", q_kmeans, q_kmeans_sql, Headline, Iterative, Persists),
+    cell("q_dedup_exact", q_dedup_exact, q_dedup_exact_sql, Headline),
+    cell("q_dup_rate_by_source", q_dup_rate_by_source, q_dup_rate_by_source_sql),
+    cell("q_digest_persist", q_digest_persist, q_digest_persist_sql, TmpCache),
+    hashed("q_dedup_minhash", q_dedup_minhash, q_dedup_minhash_sql, Headline, HeadlinePortable, BenchPortable),
+    hashed("q_dedup_incremental", q_dedup_incremental, q_dedup_incremental_sql, Headline, BenchPortable, Persists),
+    hashed("q_dedup_clusters", q_dedup_clusters, q_dedup_clusters_sql, Persists),
+    hashed("q_cluster_split", q_cluster_split, q_cluster_split_sql, Persists),
+    hashed("q_dsir", q_dsir, q_dsir_sql, BenchPortable, Persists),
+    cell("q_html_extract", q_html_extract, q_html_extract_sql),
+    cell("q_decontaminate", q_decontaminate, q_decontaminate_sql, Soak),
+    cell("q_dedup_bloom", q_dedup_bloom, q_dedup_bloom_sql),
+    cell("q_token_shards", q_token_shards, q_token_shards_sql, Soak),
+    cell("q_pack_sequences", q_pack_sequences, q_pack_sequences_sql),
+    cell("q_weighted_sample", q_weighted_sample, q_weighted_sample_sql),
+    hashed("q_negative_sample", q_negative_sample, q_negative_sample_sql),
+    cell("q_mixture_sample", q_mixture_sample, q_mixture_sample_sql),
+    hashed("q_semantic_dedup", q_semantic_dedup, q_semantic_dedup_sql, Headline, BenchPortable, Persists),
+    cell("q_dedup_normalized", q_dedup_normalized, q_dedup_normalized_sql),
+    cell("q_shuffle_shards", q_shuffle_shards, q_shuffle_shards_sql, Soak),
+    hashed("q_dedup_simhash", q_dedup_simhash, q_dedup_simhash_sql, Headline, BenchPortable),
+    cell("q_ngram_jaccard", q_ngram_jaccard, q_ngram_jaccard_sql, Headline),
+    cell("q_ngram_containment", q_ngram_containment, q_ngram_containment_sql),
+    cell("q_quantile_buckets", q_quantile_buckets, q_quantile_buckets_sql),
+    cell("q_kcore", q_kcore, q_kcore_sql, Persists),
+    cell("q_clustering_coeff", q_clustering_coeff, q_clustering_coeff_sql),
+    cell("q_link_predict", q_link_predict, q_link_predict_sql, Persists),
+    cell("q_hits", q_hits, q_hits_sql, TmpCache),
+    cell("q_skipgrams", q_skipgrams, q_skipgrams_sql),
+    cell("q_dedup_verified", q_dedup_verified, q_dedup_verified_sql, Headline),
+    cell("q_cosine_topk", q_cosine_topk, q_cosine_topk_sql, Headline, Soak),
+    cell("q_centroid_cosine", q_centroid_cosine, q_centroid_cosine_sql),
+    cell("q_embed_int8", q_embed_int8, q_embed_int8_sql, Soak),
+    cell("q_ann_int8", q_ann_int8, q_ann_int8_sql, Soak),
+    hashed("q_ann_lsh", q_ann_lsh, q_ann_lsh_sql, Headline, HeadlinePortable, BenchPortable),
+    hashed("q_ann_multiprobe", q_ann_multiprobe, q_ann_multiprobe_sql),
+    cell("q_ann_ivf", q_ann_ivf, q_ann_ivf_sql, Headline, Soak),
+    cell("q_ann_ivf_persist", q_ann_ivf_persist, q_ann_ivf_sql, TmpCache),
+    cell("q_ann_ivf_sharded", q_ann_ivf_sharded, q_ann_ivf_sql, Soak, TmpCache),
+    cell("q_ann_ivf_auto", q_ann_ivf_auto, q_ann_ivf_auto_sql, Soak),
+    cell("q_ann_pq", q_ann_pq, q_ann_pq_sql, Soak),
+    cell("q_ann_ivfpq", q_ann_ivfpq, q_ann_pq_sql),
+    hashed("q_embedding_neardup", q_embedding_neardup, q_embedding_neardup_sql, Headline, BenchPortable),
+    cell("q_text_profile", q_text_profile, q_text_profile_sql, Headline),
+    cell("q_multimodal", q_multimodal, q_multimodal_sql, Headline, Control),
+    cell("q_audio_features", q_audio_features, q_audio_features_sql),
+    cell("q_image_tiles", q_image_tiles, q_image_tiles_sql),
+    cell("nx_q1", nx_q1, nx_q1_sql, Control),
+    cell("nx_q2", nx_q2, nx_q2_sql),
+    cell("nx_q3", nx_q3, nx_q3_sql),
+    cell("nx_q4", nx_q4, nx_q4_sql),
+    cell("nx_q5", nx_q5, nx_q5_sql, Headline),
+    cell("nx_q6", nx_q6, nx_q6_sql),
+    cell("nx_q7", nx_q7, nx_q7_sql),
+    cell("nx_q8", nx_q8, nx_q8_sql, Headline),
+    cell("q_stream_nx1", q_stream_nx1, nx_q1_sql, Soak),
+    cell("q_stream_nx2", q_stream_nx2, nx_q2_sql, Soak),
+    cell("q_stream_nx3", q_stream_nx3, q_stream_nx3_sql),
+    cell("q_stream_nx4", q_stream_nx4, nx_q4_sql),
+    cell("q_stream_nx5", q_stream_nx5, nx_q5_sql, Soak),
+    cell("q_stream_nx6", q_stream_nx6, nx_q6_sql),
+    cell("q_stream_nx7", q_stream_nx7, nx_q7_sql),
+    cell("q_stream_nx8", q_stream_nx8, nx_q8_sql, Soak),
+    cell("q_pipeline_clean", q_pipeline_clean, q_pipeline_clean_sql, Headline),
+    cell("q_wordcount_file", q_wordcount_file, q_wordcount_file_sql, TmpCache),
+    cell("q_quality_gopher", q_quality_gopher, q_quality_gopher_sql),
+    cell("q_c4_clean", q_c4_clean, q_c4_clean_sql),
+    cell("q_quality_classifier", q_quality_classifier, q_quality_classifier_sql, Persists),
+    cell("q_split_hash", q_split_hash, q_split_hash_sql),
+    cell("q_sample_stratified", q_sample_stratified, q_sample_stratified_sql),
+    cell("q_diversity_sample", q_diversity_sample, q_diversity_sample_sql, Soak),
+    cell("q_pii_redact", q_pii_redact, q_pii_redact_sql)
+  ) ++ TpchQueries.cells)
 
-  val oracle: Map[String, String] = Map(
-    "q1_agg" -> q1_sql,
-    "q_group_count" -> q_group_count_sql,
-    "q_group_avg" -> q_group_avg_sql,
-    "q_group_minmax" -> q_group_minmax_sql,
-    "q_group_mode" -> q_group_mode_sql,
-    "q_max_element" -> q_max_element_sql,
-    "q_fold_global" -> q_fold_global_sql,
-    "q_reduce_max" -> q_reduce_max_sql,
-    "q_distinct" -> q_distinct_sql,
-    "q_fold_scan" -> q_fold_scan_sql,
-    "q_reduce_scan_keyed" -> q_reduce_scan_keyed_sql,
-    "q_group_reduce" -> q_group_reduce_sql,
-    "q_map" -> q_map_sql,
-    "q_rich_map" -> q_rich_map_sql,
-    "q_rich_filter_map" -> q_rich_filter_map_sql,
-    "q_rich_flat_map" -> q_rich_flat_map_sql,
-    "q_map_memo" -> q_map_memo_sql,
-    "q_map_async" -> q_map_async_sql,
-    "q_rich_map_custom" -> q_rich_map_custom_sql,
-    "q_reorder" -> q_reorder_sql,
-    "q_filter" -> q_filter_sql,
-    "q_filter_map" -> q_filter_map_sql,
-    "q_flat_map" -> q_flat_map_sql,
-    "q_scalar_funcs" -> q_scalar_funcs_sql,
-    "q_json" -> q_json_sql,
-    "q_merge" -> q_merge_sql,
-    "q_zip" -> q_zip_sql,
-    "q_route" -> q_route_sql,
-    "q_top_k" -> q_top_k_sql,
-    "q_limit_offset" -> q_limit_offset_sql,
-    "q_sort" -> q_sort_sql,
-    "q_join_inner" -> q_join_inner_sql,
-    "q_join_left" -> q_join_left_sql,
-    "q_join_outer" -> q_join_outer_sql,
-    "q_join_semi" -> q_join_semi_sql,
-    "q_join_anti" -> q_join_anti_sql,
-    "q_join_broadcast" -> q_join_broadcast_sql,
-    "q_window_tumbling" -> q_window_tumbling_sql,
-    "q_window_sliding" -> q_window_sliding_sql,
-    "q_window_session" -> q_window_session_sql,
-    "q_window_txn" -> q_window_txn_sql,
-    "q_window_count" -> q_window_count_sql,
-    "q_window_columnar" -> q_window_columnar_sql,
-    "q_window_foldfirst" -> q_window_foldfirst_sql,
-    "q_window_lastk" -> q_window_lastk_sql,
-    "q_window_first_last" -> q_window_first_last_sql,
-    "q_interval_join" -> q_interval_join_sql,
-    // streaming twins share the batch oracles: stream ≡ batch is the claim
-    "q_stream_session" -> q_window_session_sql,
-    "q_stream_interval_join" -> q_interval_join_sql,
-    "q_stream_tumbling" -> q_window_tumbling_sql,
-    "q_stream_sliding" -> q_window_sliding_sql,
-    "q_stream_wordcount" -> q_wordcount_file_sql,
-    "q_stream_columnar" -> q_window_columnar_sql,
-    "q_stream_foldfirst" -> q_window_foldfirst_sql,
-    "q_stream_dedup" -> q_dedup_exact_sql,
-    "q_stream_funnel" -> q_funnel_sql,
-    "q_stream_sessionize" -> q_sessionize_sql,
-    "q_stream_hll" -> q_stream_hll_sql,
-    "q_stream_kmv" -> q_stream_kmv_sql,
-    "q_window_join" -> q_window_join_sql,
-    "q_asof_join" -> q_asof_join_sql,
-    "q_asof_forward" -> q_asof_forward_sql,
-    "q_asof_nearest" -> q_asof_nearest_sql,
-    "q_funnel" -> q_funnel_sql,
-    "q_anomaly" -> q_anomaly_sql,
-    "q_retention" -> q_retention_sql,
-    "q_cohort_matrix" -> q_cohort_matrix_sql,
-    "q_sessionize" -> q_sessionize_sql,
-    "q_user_journeys" -> q_user_journeys_sql,
-    "q_event_transitions" -> q_event_transitions_sql,
-    "q_session_stats" -> q_session_stats_sql,
-    "q_trending" -> q_trending_sql,
-    "q_stream_trending" -> q_trending_sql,
-    "q_funnel_summary" -> q_funnel_summary_sql,
-    "q_range_join" -> q_range_join_sql,
-    "q_overlap_join" -> q_overlap_join_sql,
-    "q_snapshot_diff" -> q_snapshot_diff_sql,
-    "q_er_clusters" -> q_er_clusters_sql,
-    "q_zorder" -> q_zorder_sql,
-    "q_bpe" -> q_bpe_sql,
-    "q_chunk" -> q_chunk_sql,
-    "q_token_mixture" -> q_token_mixture_sql,
-    "q_e2e_curation" -> q_e2e_curation_sql,
-    "q_temperature_mixture" -> q_temperature_mixture_sql,
-    "q_epoch_mixture" -> q_epoch_mixture_sql,
-    "q_topk_group" -> q_topk_group_sql,
-    "q_char_lm" -> q_char_lm_sql,
-    "q_char_entropy" -> q_char_entropy_sql,
-    "q_ngram_lm" -> q_ngram_lm_sql,
-    "q_stream_ngram_lm" -> q_ngram_lm_sql,
-    "q_perplexity_tiers" -> q_perplexity_tiers_sql,
-    "q_fuzzy_join" -> q_fuzzy_join_sql,
-    "q_er_join" -> q_er_join_sql,
-    "q_copurchase" -> q_copurchase_sql,
-    "q_related_items" -> q_related_items_sql,
-    "q_label_prop" -> q_label_prop_sql,
-    "q_distinct_kmv" -> q_distinct_kmv_sql,
-    "q_distinct_hll" -> q_distinct_hll_sql,
-    "q_distinct_hll_group" -> q_distinct_hll_group_sql,
-    "q_stream_histogram" -> q_histogram_sql,
-    "q_hist_persist" -> q_histogram_sql,
-    "q_drift" -> q_drift_sql,
-    "q_stream_drift" -> q_drift_sql,
-    "q_degree_dist" -> q_degree_dist_sql,
-    "q_window_dau" -> q_window_dau_sql,
-    "q_window_wau" -> q_window_wau_sql,
-    "q_source_quality" -> q_source_quality_sql,
-    "q_corr_matrix" -> q_corr_matrix_sql,
-    "q_tpch3" -> q_tpch3_sql,
-    "q_tpch5" -> q_tpch5_sql,
-    "q_tpch18" -> q_tpch18_sql,
-    "q_data_quality" -> q_data_quality_sql,
-    "q_docs_quality" -> q_docs_quality_sql,
-    "q_stream_quality" -> q_stream_quality_sql,
-    "q_histogram" -> q_histogram_sql,
-    "q_quantile_hist" -> q_quantile_hist_sql,
-    "q_quantile_group" -> q_quantile_group_sql,
-    "q_kmv_persist" -> q_distinct_kmv_sql,
-    "q_distinct_kmv_group" -> q_distinct_kmv_group_sql,
-    "q_skew_profile" -> q_skew_profile_sql,
-    "q_join_estimate" -> q_join_estimate_sql,
-    "q_join_salted" -> q_join_salted_sql,
-    "q_join_bloom" -> q_join_bloom_sql,
-    "q_compact_latest" -> q_compact_latest_sql,
-    "q_stream_compact" -> q_compact_latest_sql,
-    "q_join_bucketed" -> q_join_salted_sql,
-    "q_salted_agg" -> q_salted_agg_sql,
-    "q_vocab_encode" -> q_vocab_encode_sql,
-    "q_url_canon" -> q_url_canon_sql,
-    "q_domain_cap" -> q_domain_cap_sql,
-    "q_mojibake" -> q_mojibake_sql,
-    "q_kmv_overlap" -> q_kmv_overlap_sql,
-    "q_script_profile" -> q_script_profile_sql,
-    "q_sentences" -> q_sentences_sql,
-    "q_corpus_health" -> q_corpus_health_sql,
-    "q_domain_filter" -> q_domain_filter_sql,
-    "q_heavy_hitters" -> q_heavy_hitters_sql,
-    "q_corpus_divergence" -> q_corpus_divergence_sql,
-    "q_distinct_ngrams" -> q_distinct_ngrams_sql,
-    "q_zipf_slope" -> q_zipf_slope_sql,
-    "q_dup_spans" -> q_dup_spans_sql,
-    "q_winnow" -> q_winnow_sql,
-    "q_tfidf" -> q_tfidf_sql,
-    "q_group_quantiles" -> q_group_quantiles_sql,
-    "q_cube" -> q_cube_sql,
-    "q_rollup" -> q_rollup_sql,
-    "q_group_stats" -> q_group_stats_sql,
-    "q_pivot" -> q_pivot_sql,
-    "q_analytic" -> q_analytic_sql,
-    "q_bm25" -> q_bm25_sql,
-    "q_inverted_index" -> q_bm25_sql,
-    "q_phrase_search" -> q_phrase_search_sql,
-    "q_connected_components" -> q_connected_components_sql,
-    "q_transitive_closure" -> q_transitive_closure_sql,
-    "q_iterate" -> q_iterate_sql,
-    "q_pagerank" -> q_pagerank_sql,
-    "q_pagerank_weighted" -> q_pagerank_weighted_sql,
-    "q_ppr" -> q_ppr_sql,
-    "q_pagerank_delta" -> q_pagerank_delta_sql,
-    "q_sssp" -> q_sssp_sql,
-    "q_triangles" -> q_triangles_sql,
-    "q_kmeans" -> q_kmeans_sql,
-    "q_dedup_exact" -> q_dedup_exact_sql,
-    "q_dup_rate_by_source" -> q_dup_rate_by_source_sql,
-    "q_digest_persist" -> q_digest_persist_sql,
-    "q_dedup_minhash" -> q_dedup_minhash_sql,
-    "q_dedup_incremental" -> q_dedup_incremental_sql,
-    "q_dedup_clusters" -> q_dedup_clusters_sql,
-    "q_cluster_split" -> q_cluster_split_sql,
-    "q_dsir" -> q_dsir_sql,
-    "q_html_extract" -> q_html_extract_sql,
-    "q_decontaminate" -> q_decontaminate_sql,
-    "q_dedup_bloom" -> q_dedup_bloom_sql,
-    "q_token_shards" -> q_token_shards_sql,
-    "q_pack_sequences" -> q_pack_sequences_sql,
-    "q_weighted_sample" -> q_weighted_sample_sql,
-    "q_negative_sample" -> q_negative_sample_sql,
-    "q_mixture_sample" -> q_mixture_sample_sql,
-    "q_semantic_dedup" -> q_semantic_dedup_sql,
-    "q_dedup_normalized" -> q_dedup_normalized_sql,
-    "q_shuffle_shards" -> q_shuffle_shards_sql,
-    "q_dedup_simhash" -> q_dedup_simhash_sql,
-    "q_ngram_jaccard" -> q_ngram_jaccard_sql,
-    "q_ngram_containment" -> q_ngram_containment_sql,
-    "q_quantile_buckets" -> q_quantile_buckets_sql,
-    "q_kcore" -> q_kcore_sql,
-    "q_clustering_coeff" -> q_clustering_coeff_sql,
-    "q_link_predict" -> q_link_predict_sql,
-    "q_hits" -> q_hits_sql,
-    "q_skipgrams" -> q_skipgrams_sql,
-    "q_dedup_verified" -> q_dedup_verified_sql,
-    "q_cosine_topk" -> q_cosine_topk_sql,
-    "q_centroid_cosine" -> q_centroid_cosine_sql,
-    "q_embed_int8" -> q_embed_int8_sql,
-    "q_ann_int8" -> q_ann_int8_sql,
-    "q_ann_lsh" -> q_ann_lsh_sql,
-    "q_ann_multiprobe" -> q_ann_multiprobe_sql,
-    "q_ann_ivf" -> q_ann_ivf_sql,
-    "q_ann_ivf_persist" -> q_ann_ivf_sql,
-    "q_ann_ivf_sharded" -> q_ann_ivf_sql,
-    "q_ann_ivf_auto" -> q_ann_ivf_auto_sql,
-    "q_ann_pq" -> q_ann_pq_sql,
-    "q_ann_ivfpq" -> q_ann_pq_sql,
-    "q_embedding_neardup" -> q_embedding_neardup_sql,
-    "q_text_profile" -> q_text_profile_sql,
-    "q_multimodal" -> q_multimodal_sql,
-    "q_audio_features" -> q_audio_features_sql,
-    "q_image_tiles" -> q_image_tiles_sql,
-    "nx_q1" -> nx_q1_sql,
-    "nx_q2" -> nx_q2_sql,
-    "nx_q3" -> nx_q3_sql,
-    "nx_q4" -> nx_q4_sql,
-    "nx_q5" -> nx_q5_sql,
-    "nx_q6" -> nx_q6_sql,
-    "nx_q7" -> nx_q7_sql,
-    "nx_q8" -> nx_q8_sql,
-    "q_stream_nx1" -> nx_q1_sql,
-    "q_stream_nx2" -> nx_q2_sql,
-    "q_stream_nx3" -> q_stream_nx3_sql,
-    "q_stream_nx4" -> nx_q4_sql,
-    "q_stream_nx5" -> nx_q5_sql,
-    "q_stream_nx6" -> nx_q6_sql,
-    "q_stream_nx7" -> nx_q7_sql,
-    "q_stream_nx8" -> nx_q8_sql,
-    "q_pipeline_clean" -> q_pipeline_clean_sql,
-    "q_wordcount_file" -> q_wordcount_file_sql,
-    "q_quality_gopher" -> q_quality_gopher_sql,
-    "q_c4_clean" -> q_c4_clean_sql,
-    "q_quality_classifier" -> q_quality_classifier_sql,
-    "q_split_hash" -> q_split_hash_sql,
-    "q_sample_stratified" -> q_sample_stratified_sql,
-    "q_diversity_sample" -> q_diversity_sample_sql,
-    "q_pii_redact" -> q_pii_redact_sql
-  ) ++ TpchQueries.oracle
+  /** Production hashing (`portable = false`), keyed by name. */
+  val all: Map[String, (SparkSession, String) => DataFrame] =
+    catalog.map { c =>
+      c.name -> ((s: SparkSession, dir: String) => c.run(s, dir, false))
+    }.toMap
+
+  val oracle: Map[String, String] = catalog.map(c => c.name -> c.oracleSql).toMap
 }

@@ -13,31 +13,6 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
   *   sbt "runMain graft.Soak /tmp/soak_sf1"     # 10× generated tables
   */
 object Soak {
-  /** The round-16 soak growth set (r15 verdict task 4): decade-2 catalog
-    * cells ≥~3× sf1→sf10 growth not already in the hand-picked sweep,
-    * catalog-keyed, production mode. A val (not inline in the sweep) so a
-    * spec can assert every name resolves against SparkEntry.queries. */
-  val r16Cells: Seq[String] = Seq(
-    "q_range_join", "q_stream_nx1", "q_stream_sessionize",
-    "q_stream_columnar", "q_stream_foldfirst", "q_stream_ngram_lm",
-    "q_reduce_scan_keyed", "q_cosine_topk", "q_ann_int8",
-    "q_stream_compact", "q_ann_pq", "q_join_bloom", "q_embed_int8",
-    "q_stream_nx5", "q_stream_funnel", "q_rich_map", "q_tpch4",
-    "q_tpch18", "q_corr_matrix", "q_join_bucketed", "q_ann_ivf",
-    "q_shuffle_shards", "q_stream_nx8", "q_topk_group", "q_data_quality",
-    "q_diversity_sample", "q_interval_join", "q_token_mixture",
-    "q_join_salted", "q_stream_tumbling", "q_decontaminate",
-    "q_stream_nx2", "q_char_lm", "q_token_shards")
-
-  /** Round-17 additions: the sharded vector index (the new past-flat-cap
-    * scale shape), the corpus-adaptive auto-nlist ANN path, and the
-    * composed end-to-end curation pipeline (clean → dedup → classify →
-    * mixture → pack) — the e2e cell exists precisely to surface
-    * cross-operator interactions (cache pressure, cumulative skew) that
-    * per-operator cells cannot (r16 verdict task 8). */
-  val r17Cells: Seq[String] = Seq(
-    "q_ann_ivf_sharded", "q_ann_ivf_auto", "q_e2e_curation")
-
   private final class ShuffleAcc extends SparkListener {
     val bytes = new java.util.concurrent.atomic.AtomicLong(0L)
     override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
@@ -48,7 +23,6 @@ object Soak {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val spark = Harness.session()
     val cpus = spark.sparkContext.defaultParallelism
-    Queries.portableMode = false // production hash mode
     val acc = new ShuffleAcc
     spark.sparkContext.addSparkListener(acc)
 
@@ -65,9 +39,9 @@ object Soak {
     // recorded secs/mb came from a SUCCESSFUL pass (distinct — a cell
     // that failed once keeps pass=false forever, but later successful
     // passes must still min-merge timings rather than overwrite them)
-    final case class Cell(rows: Long, secs: Double, mb: Double,
+    final case class Stat(rows: Long, secs: Double, mb: Double,
         pass: Boolean, timed: Boolean)
-    val cells = scala.collection.mutable.LinkedHashMap.empty[String, Cell]
+    val cells = scala.collection.mutable.LinkedHashMap.empty[String, Stat]
     var failed = 0
 
     def run(name: String)(f: => Long): Unit = {
@@ -102,10 +76,10 @@ object Soak {
             if (!pass) (prev.secs, prev.mb)
             else if (!prev.timed) (secs, mb)
             else (math.min(prev.secs, secs), math.min(prev.mb, mb))
-          cells(name) = Cell(
+          cells(name) = Stat(
             if (pass) rows else prev.rows, mSecs, mMb, prev.pass && pass,
             prev.timed || pass)
-        case None => cells(name) = Cell(rows, secs, mb, pass, timed = pass)
+        case None => cells(name) = Stat(rows, secs, mb, pass, timed = pass)
       }
     }
 
@@ -124,7 +98,7 @@ object Soak {
       val n = graft.functions.Dedup.nearDupClusters(p).count(); p.unpersist(); n
     }
     run("ann_ivfpq")(Queries.q_ann_ivfpq(spark, dir).count())
-    run("heavy_hitters")(Queries.q_heavy_hitters(spark, dir).count())
+    run("heavy_hitters")(Queries.q_heavy_hitters(spark, dir, portable = false).count())
     run("connected_components")(Queries.q_connected_components(spark, dir).count())
     run("copurchase_pairs")(graft.functions.CoOccurrence.pairCounts(
       Queries.tbl(spark, dir, "lineitem"), "l_orderkey", "l_partkey",
@@ -152,13 +126,13 @@ object Soak {
     // (no unpersist: q_semantic_dedup returns a select over a GC-managed
     // localCheckpoint, not a cached table — unpersist on the derived
     // select would be a silent no-op)
-    run("semantic_dedup")(Queries.q_semantic_dedup(spark, dir).count())
-    run("embedding_neardup")(Queries.q_embedding_neardup(spark, dir).count())
+    run("semantic_dedup")(Queries.q_semantic_dedup(spark, dir, portable = false).count())
+    run("embedding_neardup")(Queries.q_embedding_neardup(spark, dir, portable = false).count())
     run("related_items")(Queries.q_related_items(spark, dir).count())
     run("hits")(Queries.q_hits(spark, dir).count())
     run("pagerank_delta")(Queries.q_pagerank_delta(spark, dir).count())
-    run("dedup_simhash")(Queries.q_dedup_simhash(spark, dir).count())
-    run("dedup_incremental")(Queries.q_dedup_incremental(spark, dir).count())
+    run("dedup_simhash")(Queries.q_dedup_simhash(spark, dir, portable = false).count())
+    run("dedup_incremental")(Queries.q_dedup_incremental(spark, dir, portable = false).count())
     run("ann_ivf_persist")(Queries.q_ann_ivf_persist(spark, dir).count())
     run("ngram_lm") {
       val p = Queries.q_ngram_lm(spark, dir)
@@ -174,18 +148,9 @@ object Soak {
     // (provisional/tombstone reconcile) and a stream-stream self-join
     run("stream_nx4_txn")(Queries.q_stream_nx4(spark, dir).count())
     run("stream_nx3_join")(Queries.q_stream_nx3(spark, dir).count())
-    // round-16 additions (r15 verdict task 4): every production-mode
-    // catalog cell that grew ≥~3× in the sf1→sf10 decade sweep
-    // (SCALING_r15_decade2.json) and was not already above — the cells
-    // whose growth most deserves a THREE-point exponent instead of one
-    // ratio. Named by their catalog keys verbatim so scale_fit's --attr
-    // reasons (tools/scaling_attr.json) join mechanically. Portable-mode
-    // variants are excluded: the soak runs production hashing, and the
-    // portable twins' plans differ only in hash expressions (their one
-    // by-construction quadratic, q_semantic_dedup_portable's nlist=1
-    // oracle mode, is attributed in-artifact wherever it appears).
-    r16Cells.foreach(n => run(n)(SparkEntry.queries(n)(spark, dir).count()))
-    r17Cells.foreach(n => run(n)(SparkEntry.queries(n)(spark, dir).count()))
+    // the Soak-tagged catalog cells (see Tag.Soak), production hashing
+    Queries.catalog.filter(_.is(Tag.Soak))
+      .foreach(c => run(c.name)(c.run(spark, dir, false).count()))
     }
 
     for (_ <- 1 to repeat) sweep()
@@ -196,16 +161,10 @@ object Soak {
 
     val out = sys.env.get("SPARK_GRAFT_SOAK_OUT")
     out.foreach { p =>
-      // JSON-escape the free-form path (the Verify.q discipline): a quote
-      // or backslash would otherwise make json.load reject the artifact and
-      // silently zero the round's soak evidence
-      def esc(s: String): String = s.flatMap {
-        case '"'  => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      }
-      val doc = s"""{"sf_dir":"${esc(dir)}","cpus":$cpus,"repeat":$repeat,"failed":$failed,""" +
+      // JSON-escape the free-form path: a quote or backslash would otherwise
+      // make json.load reject the artifact and silently zero the round's
+      // soak evidence
+      val doc = s"""{"sf_dir":${Harness.jsonString(dir)},"cpus":$cpus,"repeat":$repeat,"failed":$failed,""" +
         s""""pipelines":[${entries.mkString(",")}]}"""
       java.nio.file.Files.write(java.nio.file.Paths.get(p),
         doc.getBytes(java.nio.charset.StandardCharsets.UTF_8))

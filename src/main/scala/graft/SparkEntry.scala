@@ -6,8 +6,8 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Queries.q1_agg(spark, "/root/testdata/sf0.001")
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Queries.all
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Queries.all
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] = Queries.oracle
+  val oracleSql: Map[String, String] = Queries.oracle
 }

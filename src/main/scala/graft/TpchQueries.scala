@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.Catalog.cell
+import graft.Tag._
 
 /** The TPC-H query suite, adapted to the driver's reduced star schema —
   * the "complete relational engine" exhibit alongside the operator catalog.
@@ -808,45 +810,24 @@ object TpchQueries {
   // registry
   // =====================================================================
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_tpch1" -> (q_tpch1 _),
-    "q_tpch2" -> (q_tpch2 _),
-    "q_tpch4" -> (q_tpch4 _),
-    "q_tpch6" -> (q_tpch6 _),
-    "q_tpch7" -> (q_tpch7 _),
-    "q_tpch8" -> (q_tpch8 _),
-    "q_tpch9" -> (q_tpch9 _),
-    "q_tpch10" -> (q_tpch10 _),
-    "q_tpch11" -> (q_tpch11 _),
-    "q_tpch12" -> (q_tpch12 _),
-    "q_tpch13" -> (q_tpch13 _),
-    "q_tpch14" -> (q_tpch14 _),
-    "q_tpch15" -> (q_tpch15 _),
-    "q_tpch16" -> (q_tpch16 _),
-    "q_tpch17" -> (q_tpch17 _),
-    "q_tpch19" -> (q_tpch19 _),
-    "q_tpch20" -> (q_tpch20 _),
-    "q_tpch21" -> (q_tpch21 _),
-    "q_tpch22" -> (q_tpch22 _))
-
-  val oracle: Map[String, String] = Map(
-    "q_tpch1" -> q_tpch1_sql,
-    "q_tpch2" -> q_tpch2_sql,
-    "q_tpch4" -> q_tpch4_sql,
-    "q_tpch6" -> q_tpch6_sql,
-    "q_tpch7" -> q_tpch7_sql,
-    "q_tpch8" -> q_tpch8_sql,
-    "q_tpch9" -> q_tpch9_sql,
-    "q_tpch10" -> q_tpch10_sql,
-    "q_tpch11" -> q_tpch11_sql,
-    "q_tpch12" -> q_tpch12_sql,
-    "q_tpch13" -> q_tpch13_sql,
-    "q_tpch14" -> q_tpch14_sql,
-    "q_tpch15" -> q_tpch15_sql,
-    "q_tpch16" -> q_tpch16_sql,
-    "q_tpch17" -> q_tpch17_sql,
-    "q_tpch19" -> q_tpch19_sql,
-    "q_tpch20" -> q_tpch20_sql,
-    "q_tpch21" -> q_tpch21_sql,
-    "q_tpch22" -> q_tpch22_sql)
+  val cells: Seq[Cell] = Seq(
+    cell("q_tpch1", q_tpch1, q_tpch1_sql, Control),
+    cell("q_tpch2", q_tpch2, q_tpch2_sql, Headline),
+    cell("q_tpch4", q_tpch4, q_tpch4_sql, Soak),
+    cell("q_tpch6", q_tpch6, q_tpch6_sql),
+    cell("q_tpch7", q_tpch7, q_tpch7_sql),
+    cell("q_tpch8", q_tpch8, q_tpch8_sql),
+    cell("q_tpch9", q_tpch9, q_tpch9_sql),
+    cell("q_tpch10", q_tpch10, q_tpch10_sql),
+    cell("q_tpch11", q_tpch11, q_tpch11_sql),
+    cell("q_tpch12", q_tpch12, q_tpch12_sql),
+    cell("q_tpch13", q_tpch13, q_tpch13_sql),
+    cell("q_tpch14", q_tpch14, q_tpch14_sql),
+    cell("q_tpch15", q_tpch15, q_tpch15_sql),
+    cell("q_tpch16", q_tpch16, q_tpch16_sql),
+    cell("q_tpch17", q_tpch17, q_tpch17_sql),
+    cell("q_tpch19", q_tpch19, q_tpch19_sql),
+    cell("q_tpch20", q_tpch20, q_tpch20_sql),
+    cell("q_tpch21", q_tpch21, q_tpch21_sql),
+    cell("q_tpch22", q_tpch22, q_tpch22_sql))
 }

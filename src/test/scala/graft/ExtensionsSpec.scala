@@ -49,7 +49,7 @@ class ExtensionsSpec extends SparkSpec {
     // intentional report-sized epilogues stay visible to the linter
     assert(PlanLint.check(Queries.q_retention(spark, dir))
       .exists(_.kind == "cartesian"), "retention's broadcast-scalar epilogue")
-    assert(PlanLint.check(Queries.q_distinct_kmv(spark, dir))
+    assert(PlanLint.check(Queries.q_distinct_kmv(spark, dir, portable = false))
       .exists(_.kind == "global-window"), "kmv's sketch-sized report window")
     // the corpus-scale hot paths carry NO lint findings
     Seq(Queries.q1_agg _, Queries.q_tpch5 _, Queries.q_sessionize _,
