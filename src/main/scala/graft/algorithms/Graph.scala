@@ -609,7 +609,6 @@ object Graph {
       .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"),
         col("outdeg"))
       .persist()
-    eod.count()
 
     val r0 = (1.0 - damping) / n
     // state = (rank, pending increment to distribute next round)

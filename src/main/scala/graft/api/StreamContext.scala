@@ -103,14 +103,17 @@ final class StreamContext(val spark: SparkSession) {
     * src/operator/source/async_stream.rs — a futures `Stream` drained into
     * the dataflow). Spark-first shape: a driver-side pump thread awaits the
     * producer and feeds a `MemoryStream` micro-batch source; `None` ends the
-    * stream. The returned handle exposes the streaming Dataset plus the pump
-    * thread (join it to know the producer is drained). */
+    * stream. Each micro-batch reads `defaultParallelism` partitions however
+    * many items were polled into it (an unsized memory source plans one
+    * partition, so one task, per polled item). The returned handle exposes
+    * the streaming Dataset plus the pump thread (join it to know the
+    * producer is drained). */
   def streamAsync[T: Encoder](
       poll: () => scala.concurrent.Future[Option[T]],
       pollTimeout: scala.concurrent.duration.Duration =
         scala.concurrent.duration.Duration(300, "s")): StreamContext.AsyncSource[T] = {
     val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[T](
-      implicitly[Encoder[T]], spark.sqlContext)
+      spark, spark.sparkContext.defaultParallelism)
     val handle = new StreamContext.AsyncSource[T](ms.toDS())
     val pumpThread = new Thread(() => {
       try {
@@ -161,7 +164,11 @@ object StreamContext {
     * loop inputs whose co-partitioning must survive caching pin it
     * explicitly, see the Graph.scala repartition notes); UTC; no UI;
     * TIMESTAMP(NANOS) parquet read as epoch-nano longs; non-ANSI semantics
-    * for wrapping Long arithmetic (minhash permutations). */
+    * for wrapping Long arithmetic (minhash permutations); a JVM-wide
+    * codegen cache of 4096 classes, not 100, because one catalog pass
+    * generates ~2,600 distinct classes and one façade job over 100, so at
+    * the default every job recompiled classes the previous one had built
+    * (static: it binds when this recipe creates the SparkContext). */
   def sessionConf(cores: Int): Seq[(String, String)] = Seq(
     "spark.sql.shuffle.partitions" -> cores.toString,
     "spark.sql.adaptive.enabled" -> "true",
@@ -169,7 +176,8 @@ object StreamContext {
     "spark.sql.session.timeZone" -> "UTC",
     "spark.ui.enabled" -> "false",
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
-    "spark.sql.ansi.enabled" -> "false")
+    "spark.sql.ansi.enabled" -> "false",
+    "spark.sql.codegen.cache.maxEntries" -> "4096")
 
   /** Local session built from [[sessionConf]]. */
   def localSession(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession =

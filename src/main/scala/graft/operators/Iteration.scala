@@ -207,8 +207,11 @@ object Iteration {
     * `processDelta` folds all of a key's deltas functionally instead of
     * mutating in place; delta arrival order within a key is unspecified in
     * both engines, so the fold should be commutative (the reference has the
-    * same network nondeterminism). Two jobs per round: one count on the
-    * (small) deltas for termination, one materializing the merged solution.
+    * same network nondeterminism). One job per round: the merge also
+    * counts each key's deltas that pass `condition`, so a single fold over
+    * the persisted merge materializes it and returns (workset, changed).
+    * The merge runs even on the terminating round, so a delta for an
+    * unknown key fails that round too.
     */
   def deltaIterate[K: ClassTag, S: ClassTag, U: ClassTag, D: ClassTag, O: ClassTag](
       solution: Dataset[(K, S)], maxIter: Int,
@@ -226,7 +229,6 @@ object Iteration {
 
     var sol: RDD[(K, S)] = solution.rdd.partitionBy(part)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    sol.count()
     // round 0: every key is in the workset (the reference's Msg::Init pass)
     var updates: RDD[(K, U)] = sol.mapPartitions(
       _.map { case (k, s) => (k, makeUpdate(k, s)) }, preservesPartitioning = true)
@@ -239,32 +241,34 @@ object Iteration {
     while (i < maxIter && !done) {
       val t0 = System.nanoTime()
       val deltas = body(spark.createDataset(updates)).rdd
-        .partitionBy(part).persist(StorageLevel.MEMORY_AND_DISK)
-      val changed = deltas.filter { case (_, d) => condition(d) }.count()
-      if (changed == 0) { done = true; deltas.unpersist(false) }
+      // per key: (state, received a delta, deltas passing `condition`)
+      val merged = sol.cogroup(deltas, part).mapPartitions(_.map {
+        case (k, (ss, ds)) =>
+          // a key can appear delta-only if body emits unseen keys; the
+          // reference folds onto Default::default() — we require the key
+          // to exist (solution sets are closed over their key domain).
+          // Named error: a bare NoSuchElementException from ss.head would
+          // surface as an inscrutable stage failure at scale.
+          require(ss.nonEmpty,
+            s"deltaIterate: delta for unknown key $k — the solution set is " +
+              "closed over its key domain; body must not emit new keys")
+          val s = ss.head
+          if (ds.isEmpty) (k, (s, false, 0L))
+          else (k, (processDelta(k, s, ds.iterator), true, ds.count(condition).toLong))
+      }, preservesPartitioning = true)
+      val checkpointed = (i + 1) % checkpointEvery == 0
+      val persisted =
+        if (checkpointed) { merged.localCheckpoint(); merged }
+        else merged.persist(StorageLevel.MEMORY_AND_DISK)
+      // the round's one job: materializes the merge too
+      val (wk, changed) = persisted
+        .map { case (_, (_, touched, passed)) => (if (touched) 1L else 0L, passed) }
+        .fold((0L, 0L)) { case ((w1, c1), (w2, c2)) => (w1 + w2, c1 + c2) }
+      if (changed == 0) { done = true; persisted.unpersist(false) }
       else {
-        val merged = sol.cogroup(deltas, part).mapPartitions(_.map {
-          case (k, (ss, ds)) =>
-            // a key can appear delta-only if body emits unseen keys; the
-            // reference folds onto Default::default() — we require the key
-            // to exist (solution sets are closed over their key domain).
-            // Named error: a bare NoSuchElementException from ss.head would
-            // surface as an inscrutable stage failure at scale.
-            require(ss.nonEmpty,
-              s"deltaIterate: delta for unknown key $k — the solution set is " +
-                "closed over its key domain; body must not emit new keys")
-            val s = ss.head
-            if (ds.isEmpty) (k, (s, false))
-            else (k, (processDelta(k, s, ds.iterator), true))
-        }, preservesPartitioning = true)
-        val checkpointed = (i + 1) % checkpointEvery == 0
-        val persisted =
-          if (checkpointed) { merged.localCheckpoint(); merged }
-          else merged.persist(StorageLevel.MEMORY_AND_DISK)
-        val wk = persisted.filter(_._2._2).count() // materializes too
         worksets += wk
         updates = persisted.mapPartitions(
-          _.collect { case (k, (s, true)) => (k, makeUpdate(k, s)) },
+          _.collect { case (k, (s, true, _)) => (k, makeUpdate(k, s)) },
           preservesPartitioning = true)
         sol.unpersist(false)
         // NEVER unpersist a locally-checkpointed RDD while descendants may
@@ -274,8 +278,7 @@ object Iteration {
         prevMerged = persisted
         prevCheckpointed = checkpointed
         sol = persisted.mapPartitions(
-          _.map { case (k, (s, _)) => (k, s) }, preservesPartitioning = true)
-        deltas.unpersist(false)
+          _.map { case (k, (s, _, _)) => (k, s) }, preservesPartitioning = true)
       }
       i += 1
       logRound("delta", i, t0)

@@ -46,8 +46,12 @@ class BenchFormatSpec extends AnyFunSuite {
     assert(stdout.contains(expect))
     assert(failed == Seq("b"))
     // no prior artifact → explicit null, never a fabricated ratio
-    val (full2, _, _) = Bench.renderArtifacts(cur, 2, "0.1", "x.json")
+    val (full2, stdout2, _) =
+      Bench.renderArtifacts(cur, 2, "0.1", "x.json", passCompiles = Seq(2606L, 419L))
     assert(full2.contains(""""vs_prev_round":null"""))
+    // per-pass codegen compiles go to BENCH_FULL only
+    assert(full2.contains(""""codegen_compiles":[2606,419]"""), full2)
+    assert(!stdout2.contains("codegen"), stdout2)
   }
 
   test("ratio_drift_adjusted divides out the control panel's drift") {

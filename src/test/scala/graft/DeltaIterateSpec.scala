@@ -93,20 +93,52 @@ class DeltaIterateSpec extends SparkSpec {
   test("deltaIterate fails with a NAMED error when body emits a delta for an unknown key") {
     val s = imp; import s._
     val init = Seq((1L, 0L)).toDS()
-    val ex = intercept[Exception] {
-      Iteration.deltaIterate[Long, Long, Long, Long, Long](
-        init, maxIter = 3) { (_, st, ds) => st + ds.sum } { (_, st) => st } {
-        (_, st) => st } { _ => true } { upd =>
-        // emits key 99, which is not in the solution set
-        upd.select(lit(99L).as("_1"), lit(1L).as("_2")).as[(Long, Long)]
+    // passes = false: the merge runs on the terminating round too, so the
+    // check also fires on a round where the condition rejects every delta
+    for (passes <- Seq(true, false)) {
+      val ex = intercept[Exception] {
+        Iteration.deltaIterate[Long, Long, Long, Long, Long](
+          init, maxIter = 3) { (_, st, ds) => st + ds.sum } { (_, st) => st } {
+          (_, st) => st } { _ => passes } { upd =>
+          // emits key 99, which is not in the solution set
+          upd.select(lit(99L).as("_1"), lit(1L).as("_2")).as[(Long, Long)]
+        }
       }
+      // the require message must survive Spark's task-failure wrapping so the
+      // user sees WHICH key broke the closed-key-domain contract, not a bare
+      // NoSuchElementException from deep inside a stage
+      val msgs = Iterator.iterate(ex: Throwable)(_.getCause).takeWhile(_ != null)
+        .map(t => Option(t.getMessage).getOrElse("")).mkString("\n")
+      assert(msgs.contains("unknown key 99"), s"passes=$passes, got: $msgs")
     }
-    // the require message must survive Spark's task-failure wrapping so the
-    // user sees WHICH key broke the closed-key-domain contract, not a bare
-    // NoSuchElementException from deep inside a stage
-    val msgs = Iterator.iterate(ex: Throwable)(_.getCause).takeWhile(_ != null)
-      .map(t => Option(t.getMessage).getOrElse("")).mkString("\n")
-    assert(msgs.contains("unknown key 99"), s"got: $msgs")
+  }
+
+  test("deltaIterate runs one Spark job per round") {
+    val s = imp; import s._
+    val sc = spark.sparkContext
+    def inGroup[A](g: String)(body: => A): A = {
+      sc.setJobGroup(g, g)
+      try body finally sc.clearJobGroup()
+    }
+    // jobs of `body`, counted once a later fence job is visible: the status
+    // store applies listener events in order
+    def jobs(maxIter: Int): Int = {
+      val g = s"delta-jobs-$maxIter-${System.nanoTime()}"
+      inGroup(g) {
+        Iteration.deltaIterate[Long, Long, Long, Long, Long](
+          Seq((1L, 0L), (2L, 100L)).toDS(), maxIter) { (_, st, ds) => st + ds.sum } {
+          (_, st) => st } { (_, st) => st } { _ => true } { upd =>
+          upd.filter(col("_1") === 1L).select(col("_1"), lit(1L).as("_2")).as[(Long, Long)]
+        }
+      }
+      inGroup(g + "-fence")(sc.parallelize(Seq(1), 1).count())
+      val deadline = System.nanoTime() + 30000000000L
+      while (sc.statusTracker.getJobIdsForGroup(g + "-fence").isEmpty &&
+          System.nanoTime() < deadline) Thread.sleep(10)
+      sc.statusTracker.getJobIdsForGroup(g).length
+    }
+    val (two, three) = (jobs(2), jobs(3))
+    assert(three - two == 1, s"maxIter 2: $two jobs, maxIter 3: $three jobs")
   }
 
   test("deltaIterate respects maxIter on a non-quiescing body") {

@@ -773,6 +773,28 @@ class StreamingSpec extends SparkSpec {
     assert(bad.failed.exists(_.getMessage.contains("producer broke")))
   }
 
+  test("async-producer source: a micro-batch reads at most defaultParallelism partitions") {
+    val s = spark; import s.implicits._
+    import scala.concurrent.Future
+    import scala.jdk.CollectionConverters._
+    val items = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    (1 to 200).foreach(items.add(_))
+    val src = ctx.streamAsync[Int](() => Future.successful(Option(items.poll())))
+    src.pumpThread.join(30000)
+    assert(!src.pumpThread.isAlive && src.failed.isEmpty)
+    // all 200 polled items are queued before the query starts: one batch
+    val batches = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Int)]()
+    val q = src.stream.writeStream
+      .foreachBatch { (df: org.apache.spark.sql.Dataset[Int], _: Long) =>
+        batches.add((df.count(), df.rdd.getNumPartitions)); ()
+      }.start()
+    try q.processAllAvailable() finally q.stop()
+    val seen = batches.asScala.toSeq
+    assert(seen.map(_._1) == Seq(200L), s"batches (rows, partitions): $seen")
+    assert(seen.head._2 <= spark.sparkContext.defaultParallelism,
+      s"one batch of 200 polled items planned ${seen.head._2} partitions")
+  }
+
   test("stream-stream interval join with watermarks") {
     val s = spark; import s.implicits._
     implicit val sq = spark.sqlContext
