@@ -3238,8 +3238,8 @@ object Queries {
     * row up to 64 Collatz steps inside one narrow map (domain ≤ 998 ⇒
     * trajectories ≤ 178 steps ⇒ 3 rounds), the folded state counts
     * unfinished rows, and the loop exits when it hits zero — exercising
-    * body, foldState AND cond, with per-round persist/unpersist lineage
-    * truncation from the shared iterate driver. */
+    * body, foldState AND cond. The fold's count is each round's one job
+    * and materializes the round's lazily cut lineage. */
   def q_iterate(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val domain = tbl(s, dir, "part")

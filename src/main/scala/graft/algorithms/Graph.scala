@@ -8,19 +8,15 @@ import org.apache.spark.sql.functions._
   * analogs of the reference's iteration examples
   * (reference: examples/connected_components.rs, examples/pagerank.rs,
   * examples/transitive_closure.rs), expressed as DataFrame joins so Catalyst
-  * plans every round (AQE re-plans each iteration since each is its own job).
+  * plans every round (with AQE off: the rounds are shape-stable).
   *
   * Scale notes: labels/ranks shuffle on the node id each round; edges are
-  * cached and reused; lineage is truncated by the loop's checkpointing. For
-  * power-law graphs the heavy keys are exactly AQE skew-join territory.
+  * cached and reused. Convergence loops and per-round-counted PageRanks run
+  * on [[Iteration.iterate]], which cuts the state's lineage every round;
+  * fixed-round loops whose rounds read the state once (label propagation,
+  * HITS, fixed-point PageRank) fold lazily and cut once at the end.
   */
 object Graph {
-
-  /** Every shuffle of the loop — not just the input repartition — runs at
-    * this width (see [[Iteration.withShuffleWidth]]). */
-  private def withShuffleWidth[A](spark: org.apache.spark.sql.SparkSession,
-      parallelism: Option[Int])(f: => A): A =
-    Iteration.withShuffleWidth(spark, parallelism)(f)
 
   /** Node-count gate for per-round degree-table broadcasts. The per-node
     * side tables (outdeg, w_out) are NODE-sized, so an unconditional
@@ -76,11 +72,11 @@ object Graph {
     // persist a DERIVED projection, never the caller's frame: persisting
     // `edges` directly would be a no-op on an already-cached input, and the
     // release below would then DROP the caller's cache entry (the same
-    // hazard Iteration.loop guards with its initCached check)
+    // hazard Iteration.iterate guards for a caller-cached input)
     val src =
       if (autoSize) edges.select(col("src"), col("dst")).persist() else edges
     val width = parallelism.getOrElse(Iteration.sizedWidth(2L * src.count()))
-    withShuffleWidth(edges.sparkSession, Some(width)) {
+    Iteration.withShuffleWidth(edges.sparkSession, Some(width)) {
     // pre-explode rebalance (the Scale.fanOut rationale: the explode below
     // amplifies 2x and a narrow scan would single-thread it) AND the width
     // pin for the loop; then pre-partition on the join key: the cached
@@ -105,30 +101,24 @@ object Graph {
       .withColumn("component", col("node"))
 
     // sum over zero rows is null (empty edge set — e.g. a pair graph with
-    // no near-dup pairs): treat as 0 so the loop converges immediately
-    // instead of NPE-ing on getLong
+    // no near-dup pairs): treat as 0 so the loop converges on two equal
+    // sums instead of NPE-ing on getLong
     def labelSum(df: DataFrame): Long = {
       val r = df.agg(sum(col("component"))).head()
       if (r.isNullAt(0)) 0L else r.getLong(0)
     }
-    var last = Long.MinValue
 
-    // materialize=false: labelSum IS the per-round action (one job per round)
-    val out = Iteration.loop(init, maxIter, materialize = false) { (labels, _) =>
-      // candidate = min over neighbors' labels and own label
-      val nbr = undirected
-        .join(labels.withColumnRenamed("node", "dst2"),
-          col("dst") === col("dst2"))
-        .select(col("src").as("node"), col("component"))
-      nbr.union(labels)
-        .groupBy(col("node")).agg(min(col("component")).as("component"))
-    } { (prev, next) =>
-      if (last == Long.MinValue) last = labelSum(prev)
-      val nx = labelSum(next)
-      val done = nx == last
-      last = nx
-      done
-    }
+    // state = (previous, current) label sum; labelSum IS the round's one job
+    val (_, out) = Iteration.iterate(init, maxIter, (Long.MinValue, Long.MinValue)) {
+      (labels, _) =>
+        // candidate = min over neighbors' labels and own label
+        val nbr = undirected
+          .join(labels.withColumnRenamed("node", "dst2"),
+            col("dst") === col("dst2"))
+          .select(col("src").as("node"), col("component"))
+        nbr.union(labels)
+          .groupBy(col("node")).agg(min(col("component")).as("component"))
+    } { (next, sums) => (sums._2, labelSum(next)) } { case (prev, cur) => prev != cur }
     undirected.unpersist()
     out
     }
@@ -160,7 +150,9 @@ object Graph {
     // the loop width — the upstream never runs twice
     val undirected0 = undirectedBoth(edges, dedupeEdges).persist()
     val width = parallelism.getOrElse(Iteration.sizedWidth(undirected0.count()))
-    withShuffleWidth(edges.sparkSession, Some(width)) {
+    // AQE off for the rounds and the final checkpoint, the hits rationale
+    Iteration.withLoopConf(edges.sparkSession) {
+    Iteration.withShuffleWidth(edges.sparkSession, Some(width)) {
       // pre-partition on the join key at loop width: the cached relation
       // keeps this partitioning, so each round shuffles only the labels
       // side (width EXPLICIT — see connectedComponents' note on advisory
@@ -168,7 +160,9 @@ object Graph {
       val undirected = undirected0.repartition(width, col("dst")).persist()
       val init = undirected.select(col("src").as("node")).distinct()
         .withColumn("label", col("node"))
-      val folded = Iteration.loop(init, rounds, materialize = false) { (labels, _) =>
+      // each round reads the labels once, so the lineage grows linearly:
+      // rounds stay lazy, one materializing checkpoint at the end
+      val folded = (1 to rounds).foldLeft(init) { (labels, _) =>
         // every node of an undirected edge set has >= 1 neighbor, so the
         // message join covers the full node set — no keep-own fallback
         undirected
@@ -179,33 +173,32 @@ object Graph {
           .groupBy(col("node"))
           .agg(max(struct(col("cnt"), (-col("label")).as("nl"))).as("m"))
           .select(col("node"), (-col("m.nl")).as("label"))
-      } { (_, _) => false } // fixed-round: never early-stop
-      // fixed-round mode never ran an action, so the rounds are still lazy:
+      }
       // materialize (eager checkpoint, GC-managed blocks) while the edge
       // cache is ALIVE — unpersisting first would recompute the full
       // upstream once per round-reference at the caller's action
       val out = folded.localCheckpoint()
-      folded.unpersist()
       undirected.unpersist()
       undirected0.unpersist()
       out
+    }
     }
   }
 
   /** k-core by iterative degree peeling: repeatedly remove nodes whose
     * degree within the REMAINING graph is below k. `rounds = None` peels
-    * to the true k-core fixpoint (count-stable — the count is also the
+    * to the true k-core fixpoint (row-count stable — the count is also the
     * per-round materializing action); `rounds = Some(r)` runs exactly r
     * peels, a well-defined prefix of the computation that a SQL oracle
     * can unroll verbatim (the fixpoint needs a recursive query over a
     * SHRINKING set, which plain recursive CTEs cannot express). Returns
     * (node, degree) with degree measured inside the surviving subgraph.
     *
-    * Scale shape per round: degrees are one node-keyed partial-aggregated
-    * count; the survivor filter is two LEFT SEMI joins of the cached
-    * undirected edges against the (much smaller) survivor set — edges
-    * shuffle once up front, survivor sets shuffle per round at node
-    * cardinality. */
+    * Scale shape per round: the loop state is that (node, degree) table.
+    * Degrees are one node-keyed partial-aggregated count; the survivor
+    * filter is two LEFT SEMI joins of the cached undirected edges against
+    * the (much smaller) survivor set — edges shuffle once up front,
+    * survivor sets shuffle per round at node cardinality. */
   def kCore(edges: DataFrame, k: Int, rounds: Option[Int] = None,
       maxIter: Int = 100, parallelism: Option[Int] = None,
       dedupeEdges: Boolean = true): DataFrame = {
@@ -214,49 +207,27 @@ object Graph {
     // build, count once (materialize + width), never rerun the upstream
     val undirected0 = undirectedBoth(edges, dedupeEdges).persist()
     val width = parallelism.getOrElse(Iteration.sizedWidth(undirected0.count()))
-    // AQE off for the peeling loop (Iteration.withLoopConf — the same
-    // driver-loop discipline Iteration.loop applies): each peel round is a
-    // shape-stable width-`width` job, and AQE's per-stage re-planning turns
-    // every round into a cascade of stage-jobs whose scheduling overhead
-    // dominates at any bench scale (measured on q_kcore: 30+ jobs → ~8;
-    // see the r17 optimization notes)
-    Iteration.withLoopConf(edges.sparkSession) {
-    withShuffleWidth(edges.sparkSession, Some(width)) {
+    Iteration.withShuffleWidth(edges.sparkSession, Some(width)) {
       // width explicit, same rationale as connectedComponents
       val undirected = undirected0.repartition(width, col("src")).persist()
-      def degrees(active: DataFrame): DataFrame =
-        undirected
+      def degrees(es: DataFrame): DataFrame =
+        es.groupBy(col("src").as("node")).agg(count(lit(1)).as("degree"))
+      // fixpoint mode stops on count stability (peeling only removes);
+      // fixed-round mode always runs out the budget
+      val go: ((Long, Long)) => Boolean =
+        if (rounds.isDefined) _ => true else { case (prev, cur) => prev != cur }
+      // the two semi-joins read the state twice per round: iterate's
+      // per-round cut keeps the plan from doubling
+      val (_, out) = Iteration.iterate(degrees(undirected),
+          rounds.getOrElse(maxIter), (-1L, -1L)) { (deg, _) =>
+        val active = deg.filter(col("degree") >= k)
+        degrees(undirected
           .join(active.select(col("node").as("src")), Seq("src"), "left_semi")
-          .join(active.select(col("node").as("dst")), Seq("dst"), "left_semi")
-          .groupBy(col("src").as("node")).agg(count(lit(1)).as("degree"))
-      val init = undirected.select(col("src").as("node")).distinct()
-      // each round's survivor set is an EAGER localCheckpoint: degrees()
-      // references `active` twice, so an unbroken lineage doubles the
-      // logical plan per round — exponential plan strings OOM the driver
-      // long before the data does. The checkpoint truncates lineage to the
-      // materialized set (node-cardinality rows, GC-managed blocks).
-      var active = init.localCheckpoint()
-      var n = active.count()
-      var i = 0
-      val limit = rounds.getOrElse(maxIter)
-      var stable = false
-      while (i < limit && !stable) {
-        val next = degrees(active)
-          .filter(col("degree") >= k).select(col("node"))
-          .localCheckpoint()
-        val nn = next.count()
-        // fixpoint mode stops on count stability (peeling only removes);
-        // fixed-round mode always runs out the budget
-        stable = rounds.isEmpty && nn == n
-        active = next
-        n = nn
-        i += 1
-      }
-      val out = degrees(active).localCheckpoint()
+          .join(active.select(col("node").as("dst")), Seq("dst"), "left_semi"))
+      } { (next, counts) => (counts._2, next.count()) }(go)
       undirected.unpersist()
       undirected0.unpersist()
       out
-    }
     }
   }
 
@@ -380,7 +351,7 @@ object Graph {
     val width = parallelism.getOrElse(Iteration.sizedWidth(edgeCount))
     // AQE off for the fixed-point rounds, the hits/kCore rationale
     Iteration.withLoopConf(edges.sparkSession) {
-    withShuffleWidth(edges.sparkSession, Some(width)) {
+    Iteration.withShuffleWidth(edges.sparkSession, Some(width)) {
       val nodes = e.select(col("src").as("node"))
         .union(e.select(col("dst").as("node"))).distinct().persist()
       val nodeCount = nodes.count()
@@ -431,7 +402,7 @@ object Graph {
     // its exchanges as a separate stage-job — 38 scheduler round-trips for
     // a width-2 graph (measured on q_hits; ~8 jobs with it off, −30% wall)
     Iteration.withLoopConf(edges.sparkSession) {
-    withShuffleWidth(edges.sparkSession, Some(width)) {
+    Iteration.withShuffleWidth(edges.sparkSession, Some(width)) {
       val nodes = e.select(col("src").as("node"))
         .union(e.select(col("dst").as("node"))).distinct().persist()
       // hits lineage grows LINEARLY in rounds (each score references only
@@ -512,7 +483,7 @@ object Graph {
     * this dataset are tiny; formula structure matches the SQL oracle exactly. */
   def pageRank(edges: DataFrame, iterations: Int, damping: Double = 0.85,
       parallelism: Option[Int] = None): DataFrame =
-    withShuffleWidth(edges.sparkSession, parallelism) {
+    Iteration.withShuffleWidth(edges.sparkSession, parallelism) {
     val e0 = parallelism.map(p => edges.repartition(p)).getOrElse(edges)
     val e = e0.select(col("src"), col("dst")).distinct().persist()
     val nodes = e.select(col("src").as("node"))
@@ -522,7 +493,8 @@ object Graph {
     val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg")).persist()
 
     val init = nodes.withColumn("rank", lit(1.0 / n))
-    val out = Iteration.loop(init, iterations) { (ranks, _) =>
+    // fixed iteration count; the count materializes each round
+    val (_, out) = Iteration.iterate(init, iterations, 0L) { (ranks, _) =>
       val contrib = e
         .join(maybeBroadcast(outdeg, nodeCount), Seq("src"))
         .join(ranks.withColumnRenamed("node", "src"), Seq("src"))
@@ -532,7 +504,7 @@ object Graph {
         .select(col("node"),
           (lit((1.0 - damping) / n) + lit(damping) * coalesce(col("in_sum"), lit(0.0)))
             .as("rank"))
-    } { (_, _) => false } // fixed iteration count
+    } { (next, _) => next.count() } { _ => true }
     e.unpersist(); nodes.unpersist(); outdeg.unpersist()
     out
     }
@@ -547,7 +519,7 @@ object Graph {
   def personalizedPageRank(edges: DataFrame, sources: Seq[Long],
       iterations: Int, damping: Double = 0.85,
       parallelism: Option[Int] = None): DataFrame =
-    withShuffleWidth(edges.sparkSession, parallelism) {
+    Iteration.withShuffleWidth(edges.sparkSession, parallelism) {
     require(sources.nonEmpty, "personalized PageRank needs >= 1 source node")
     val e0 = parallelism.map(p => edges.repartition(p)).getOrElse(edges)
     val e = e0.select(col("src"), col("dst")).distinct().persist()
@@ -561,7 +533,8 @@ object Graph {
     val teleport = when(inS, lit((1.0 - damping) / sSize)).otherwise(lit(0.0))
     val init = nodes.withColumn("rank",
       when(inS, lit(1.0 / sSize)).otherwise(lit(0.0)))
-    val out = Iteration.loop(init, iterations) { (ranks, _) =>
+    // fixed iteration count; the count materializes each round
+    val (_, out) = Iteration.iterate(init, iterations, 0L) { (ranks, _) =>
       val contrib = e
         .join(maybeBroadcast(outdeg, nodeCount), Seq("src"))
         .join(ranks.withColumnRenamed("node", "src"), Seq("src"))
@@ -571,7 +544,7 @@ object Graph {
         .select(col("node"),
           (teleport + lit(damping) * coalesce(col("in_sum"), lit(0.0)))
             .as("rank"))
-    } { (_, _) => false } // fixed iteration count
+    } { (next, _) => next.count() } { _ => true }
     e.unpersist(); nodes.unpersist(); outdeg.unpersist()
     out
     }
@@ -593,7 +566,7 @@ object Graph {
       eps: Double = 0.0, parallelism: Option[Int] = None): (DataFrame, Seq[Long]) = {
     val spark = edges.sparkSession
     import spark.implicits._
-    withShuffleWidth(spark, parallelism) {
+    Iteration.withShuffleWidth(spark, parallelism) {
     val e0 = parallelism.map(p => edges.repartition(p)).getOrElse(edges)
     // persist the distinct edge set and node set: e otherwise re-runs the
     // full upstream pipeline (scan + distinct shuffle) for the node count,
@@ -651,7 +624,7 @@ object Graph {
       parallelism: Option[Int] = None): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    withShuffleWidth(spark, parallelism) {
+    Iteration.withShuffleWidth(spark, parallelism) {
     val e0 = parallelism.map(p => edges.repartition(p)).getOrElse(edges)
     val e = e0.select(col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst"), col("w").cast("long").as("w"))
@@ -695,17 +668,20 @@ object Graph {
     * paths ⋈ edges converges in O(log diameter) rounds (reference:
     * examples/transitive_closure.rs does edge-extension; doubling is the
     * scale-correct variant). Count-stability is the convergence check, so
-    * each round is exactly one job. */
+    * each round is exactly one job; the self-join reads the paths twice,
+    * which iterate's per-round cut keeps flat. */
   def transitiveClosure(edges: DataFrame, maxIter: Int = 20,
       parallelism: Option[Int] = None): DataFrame =
-    withShuffleWidth(edges.sparkSession, parallelism) {
+    Iteration.withShuffleWidth(edges.sparkSession, parallelism) {
     val e0 = parallelism.map(p => edges.repartition(p)).getOrElse(edges)
     val base = e0.select(col("src"), col("dst")).distinct()
-    Iteration.loopFixpointByCount(base, maxIter) { (paths, _) =>
+    // state = (previous, current) row count: closure growth only adds rows
+    val (_, out) = Iteration.iterate(base, maxIter, (-1L, -1L)) { (paths, _) =>
       val extended = paths.as("p")
         .join(paths.as("q"), col("p.dst") === col("q.src"))
         .select(col("p.src").as("src"), col("q.dst").as("dst"))
       paths.union(extended).distinct()
-    }
+    } { (next, counts) => (counts._2, next.count()) } { case (prev, cur) => prev != cur }
+    out
     }
 }

@@ -510,7 +510,9 @@ final class Stream[T](val ds: Dataset[T],
 
   /** Fixed-point iteration with evolving dataset + state (reference:
     * `iterate`, iteration/iterate.rs:363-545). Returns (final state, final
-    * stream) — the reference's two outputs. */
+    * stream) — the reference's two outputs. `foldState`'s action (e.g.
+    * `collectCount`) is the round's materialization: it is the round's one
+    * job and computes the round's lineage-cut stream once for the next. */
   def iterate[S](maxIter: Int, init: S)(body: (Stream[T], S) => Stream[T])(
       foldState: (Stream[T], S) => S)(cond: S => Boolean): (S, Stream[T]) = {
     val (st, ds2) = graft.operators.Iteration.iterate(ds, maxIter, init)(

@@ -19,10 +19,15 @@ import scala.reflect.ClassTag
   *    over (solution set, workset).
   *
   * Spark-first design (SURVEY §3.3): the driver IS the leader block — a
-  * driver-side loop over cached DataFrames with broadcast state. Per-round
-  * caching bounds recomputation; `localCheckpoint` every `checkpointEvery`
-  * rounds truncates the lineage so plans don't grow unboundedly (on a real
-  * cluster, configure a checkpoint dir and reliable checkpoints instead).
+  * driver-side loop whose per-round action (the fold, the replay round,
+  * the delta merge) is the round's one job. One lineage policy: the loop,
+  * not its caller, cuts the state it carries, and the round's action is
+  * what materializes the cut. `iterate` hands `body` only datasets cut by
+  * a lazy `localCheckpoint`, so plans never grow with the round count;
+  * `replay` re-reads one cached input and carries its state on the
+  * driver; `deltaIterate` cuts its solution RDD every
+  * `DeltaCheckpointEvery` rounds (on a real cluster, configure a
+  * checkpoint dir and reliable checkpoints instead).
   */
 object Iteration {
 
@@ -32,20 +37,16 @@ object Iteration {
     * dominates: measured at sf0.1 local[32], a warm connected-components
     * round is ~0.17 s with AQE off vs ~1.9 s with it on (~10x). Every loop
     * in this object therefore runs with AQE disabled and restores the
-    * previous setting on exit. Rounds whose joins are badly skewed at
-    * cluster scale are the one case where AQE's skew-join splitting can be
-    * worth the per-round overhead — opt back in with
-    * `spark.conf.set("graft.iteration.adaptive", "true")`.
+    * previous setting on exit.
     *
     * The override is session-wide while the loop runs (Spark reads the conf
     * at execution), so concurrent queries on the same session observe it;
     * loops are driver-blocking, making that window explicit. */
   private[graft] def withLoopConf[A](spark: SparkSession)(f: => A): A = {
-    val keepAqe = spark.conf.get("graft.iteration.adaptive", "false").toBoolean
     val prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    if (!keepAqe) spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     try f
-    finally if (!keepAqe) spark.conf.set("spark.sql.adaptive.enabled", prev)
+    finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }
 
   /** Scoped `spark.sql.shuffle.partitions` override for driver loops. With
@@ -68,87 +69,16 @@ object Iteration {
   /** Shuffle width for `rows` rows of loop state: ≈64k rows per partition,
     * floor 1, capped — a billion-row state still gets ~15k partitions, a
     * bench-sized graph gets 1 instead of the session default. */
-  private[graft] def sizedWidth(rows: Long, perPartition: Long = 65536L,
-      cap: Int = 1 << 14): Int =
-    math.max(1L, rows / perPartition).min(cap.toLong).toInt
+  private[graft] def sizedWidth(rows: Long): Int =
+    math.max(1L, rows / RowsPerPartition).min(MaxWidth.toLong).toInt
+  private val RowsPerPartition = 65536L
+  private val MaxWidth = 1 << 14
 
   /** GRAFT_ITER_DEBUG=1 prints per-round timings to stderr. */
   private val debug = sys.env.contains("GRAFT_ITER_DEBUG")
   private def logRound(tag: String, i: Int, t0: Long): Unit =
     if (debug) System.err.println(
       f"[iter] $tag round=$i ${(System.nanoTime() - t0) / 1e9}%.2fs")
-
-  /** Generic dataset fixpoint: evolve `ds` through `step` until `converged`
-    * or `maxIter`. Handles caching + lineage truncation. The convergence
-    * check receives (previous, next) — typically a count of changed rows
-    * (one extra job per round, like the reference's leader fold).
-    * When `materialize` is false, the `converged` callback is trusted to run
-    * an action on `next` (e.g. an aggregate) — one job per round instead of
-    * two. */
-  def loop[T](init: Dataset[T], maxIter: Int, checkpointEvery: Int = 5,
-      materialize: Boolean = true)(
-      step: (Dataset[T], Int) => Dataset[T])(
-      converged: (Dataset[T], Dataset[T]) => Boolean): Dataset[T] =
-    withLoopConf(init.sparkSession) {
-      // respect a caller-managed cache (the replay guard): persisting an
-      // already-cached init is a no-op, but round 1's unpersist would then
-      // DROP the caller's cache (incl. SharedCacheHandle caches shared
-      // with sibling streams) — every later reuse silently recomputes
-      val initCached = init.storageLevel != StorageLevel.NONE
-      var cur = if (initCached) init else init.persist(StorageLevel.MEMORY_AND_DISK)
-      if (materialize) cur.count()
-      var curOwned = !initCached
-      var i = 0
-      var done = false
-      while (i < maxIter && !done) {
-        val t0 = System.nanoTime()
-        // checkpoint OR persist, never both (the deltaIterate discipline):
-        // localCheckpoint already stores the rows as RDD blocks — a second
-        // Dataset-layer cache would hold a full duplicate copy
-        val next =
-          if ((i + 1) % checkpointEvery == 0) step(cur, i).localCheckpoint(false)
-          else step(cur, i).persist(StorageLevel.MEMORY_AND_DISK)
-        if (materialize) next.count()
-        done = converged(cur, next)
-        if (curOwned) cur.unpersist(false)
-        curOwned = true
-        cur = next
-        i += 1
-        logRound("loop", i, t0)
-      }
-      cur
-    }
-
-  /** Fixpoint driven by row-count stability: the materializing count() IS
-    * the convergence check — exactly one job per round. Correct whenever
-    * `step` is monotone (rows only ever get added, e.g. closure growth). */
-  def loopFixpointByCount[T](init: Dataset[T], maxIter: Int,
-      checkpointEvery: Int = 5)(
-      step: (Dataset[T], Int) => Dataset[T]): Dataset[T] =
-    withLoopConf(init.sparkSession) {
-      // same caller-cache guard + checkpoint-OR-persist as loop (above)
-      val initCached = init.storageLevel != StorageLevel.NONE
-      var cur = if (initCached) init else init.persist(StorageLevel.MEMORY_AND_DISK)
-      var prevCount = cur.count()
-      var curOwned = !initCached
-      var i = 0
-      var done = false
-      while (i < maxIter && !done) {
-        val t0 = System.nanoTime()
-        val next =
-          if ((i + 1) % checkpointEvery == 0) step(cur, i).localCheckpoint(false)
-          else step(cur, i).persist(StorageLevel.MEMORY_AND_DISK)
-        val c = next.count()
-        done = c == prevCount
-        prevCount = c
-        if (curOwned) cur.unpersist(false)
-        curOwned = true
-        cur = next
-        i += 1
-        logRound("fixpoint", i, t0)
-      }
-      cur
-    }
 
   /** replay: recompute state from the (cached) input each round.
     * `round` returns the new state; `cond(old, new)` continues while true. */
@@ -173,6 +103,10 @@ object Iteration {
       if (!alreadyCached) cached.unpersist(false)
       state
     }
+
+  /** [[deltaIterate]] cuts the merged solution set's lineage every this
+    * many rounds and persists it on the others. */
+  private val DeltaCheckpointEvery = 5
 
   /** Result of [[deltaIterate]]: the per-key outputs plus the per-round
     * workset sizes (number of keys that received a delta), the delta
@@ -215,7 +149,7 @@ object Iteration {
     */
   def deltaIterate[K: ClassTag, S: ClassTag, U: ClassTag, D: ClassTag, O: ClassTag](
       solution: Dataset[(K, S)], maxIter: Int,
-      numPartitions: Option[Int] = None, checkpointEvery: Int = 5)(
+      numPartitions: Option[Int] = None)(
       processDelta: (K, S, Iterator[D]) => S)(
       makeUpdate: (K, S) => U)(
       makeOutput: (K, S) => O)(
@@ -256,7 +190,7 @@ object Iteration {
           if (ds.isEmpty) (k, (s, false, 0L))
           else (k, (processDelta(k, s, ds.iterator), true, ds.count(condition).toLong))
       }, preservesPartitioning = true)
-      val checkpointed = (i + 1) % checkpointEvery == 0
+      val checkpointed = (i + 1) % DeltaCheckpointEvery == 0
       val persisted =
         if (checkpointed) { merged.localCheckpoint(); merged }
         else merged.persist(StorageLevel.MEMORY_AND_DISK)
@@ -292,33 +226,38 @@ object Iteration {
   /** iterate: evolve BOTH a dataset and a state; the state is folded from
     * the round's output (the reference's leader global_fold) and the loop
     * stops when `cond(newState)` is false. Returns (state, final dataset) —
-    * the reference's two output streams (iterate.rs:371-374). */
-  def iterate[T, S](input: Dataset[T], maxIter: Int, init: S,
-      checkpointEvery: Int = 5)(
+    * the reference's two output streams (iterate.rs:371-374).
+    *
+    * The one dataset driver loop. Every dataset handed to `body` (the input
+    * and each round's output) is cut by a lazy `localCheckpoint`: a body
+    * that reads its state twice (a join plus a union, a self-join, two
+    * semi-joins) would otherwise double its plan every round. The loop runs
+    * no action of its own: `foldState`'s action is the round's one job, and
+    * it materializes the cut (a fold without an action leaves the rounds
+    * lazy until the caller's next action). Spark's ContextCleaner frees a cut
+    * round's blocks once nothing references it; unpersisting them here
+    * could strand a later round whose cut has not run yet. A caller-cached
+    * input is handed over as is and never unpersisted — cutting it would
+    * copy the caller's cache, and unpersisting it would drop a cache shared
+    * with sibling streams. */
+  def iterate[T, S](input: Dataset[T], maxIter: Int, init: S)(
       body: (Dataset[T], S) => Dataset[T])(
       foldState: (Dataset[T], S) => S)(
       cond: S => Boolean): (S, Dataset[T]) =
     withLoopConf(input.sparkSession) {
-      // same caller-cache guard + checkpoint-OR-persist as loop (above)
-      val initCached = input.storageLevel != StorageLevel.NONE
       var cur =
-        if (initCached) input else input.persist(StorageLevel.MEMORY_AND_DISK)
-      cur.count()
-      var curOwned = !initCached
+        if (input.storageLevel != StorageLevel.NONE) input
+        else input.localCheckpoint(eager = false)
       var state = init
       var i = 0
       var go = true
       while (i < maxIter && go) {
-        val next =
-          if ((i + 1) % checkpointEvery == 0) body(cur, state).localCheckpoint(false)
-          else body(cur, state).persist(StorageLevel.MEMORY_AND_DISK)
-        next.count()
-        state = foldState(next, state)
+        val t0 = System.nanoTime()
+        cur = body(cur, state).localCheckpoint(eager = false)
+        state = foldState(cur, state)
         go = cond(state)
-        if (curOwned) cur.unpersist(false)
-        curOwned = true
-        cur = next
         i += 1
+        logRound("iterate", i, t0)
       }
       (state, cur)
     }

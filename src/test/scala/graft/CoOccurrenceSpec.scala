@@ -104,6 +104,17 @@ class CoOccurrenceSpec extends SparkSpec {
     assert(core == fixed)
     // k above the max degree empties the graph without error
     assert(graft.algorithms.Graph.kCore(edges, k = 5).count() == 0)
+    // K4 plus a 12-node tail 4-30-31-…-41: the 2-core peels one tail node
+    // per round, so the fixpoint runs past 5 rounds and still ends at the
+    // clique, while 5 fixed rounds leave the tail's head standing
+    val tail = (4L +: (30L to 41L)).sliding(2).map(p => (p(0), p(1))).toSeq
+    val tailed = (clique(Seq(1L, 2L, 3L, 4L)) ++ tail).toDF("src", "dst")
+    val core2 = graft.algorithms.Graph.kCore(tailed, k = 2)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(core2 == Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 3L), s"got $core2")
+    val five = graft.algorithms.Graph.kCore(tailed, k = 2, rounds = Some(5))
+      .collect().map(_.getLong(0)).toSet
+    assert(five == Set(1L, 2L, 3L, 4L) ++ (30L to 36L), s"got $five")
   }
 
   test("clusteringCoefficient: closed-form on triangle+pendant; hub cap subgraph") {

@@ -9,27 +9,63 @@ import org.apache.spark.sql.functions._
   * quiesce — and that early termination fires when no delta passes the
   * condition. */
 class DeltaIterateSpec extends SparkSpec {
-  test("loop/iterate respect a caller-managed cache on the init dataset") {
+  /** Spark jobs run by `body`, counted once a later fence job is visible:
+    * the status store applies listener events in order. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    def inGroup[A](g: String)(f: => A): A = {
+      sc.setJobGroup(g, g)
+      try f finally sc.clearJobGroup()
+    }
+    val g = s"jobs-${System.nanoTime()}"
+    inGroup(g)(body)
+    inGroup(g + "-fence")(sc.parallelize(Seq(1), 1).count())
+    val deadline = System.nanoTime() + 30000000000L
+    while (sc.statusTracker.getJobIdsForGroup(g + "-fence").isEmpty &&
+        System.nanoTime() < deadline) Thread.sleep(10)
+    sc.statusTracker.getJobIdsForGroup(g).length
+  }
+
+  test("iterate respects a caller-managed cache on the input dataset") {
     val s = imp; import s._
-    // a caller-cached input must come out of the loop STILL cached: the
-    // round-1 unpersist used to silently drop the caller's cache (incl.
-    // SharedCacheHandle caches shared with sibling streams)
+    // a caller-cached input must come out of the loop STILL cached: it may
+    // be a SharedCacheHandle cache shared with sibling streams
     val input = spark.range(100).as[Long].persist(
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     input.count()
-    val out = Iteration.loop(input, maxIter = 3)((ds, _) => ds.map(_ + 1))(
-      (_, _) => false)
-    assert(out.collect().sorted.head == 3L)
-    assert(input.storageLevel !=
-      org.apache.spark.storage.StorageLevel.NONE,
-      "loop dropped the caller-managed cache of its input")
     val (st, fin) = Iteration.iterate(input, maxIter = 2, 0L)(
       (ds, _) => ds.map(_ + 1))((ds, acc) => acc + ds.count())(_ => true)
     assert(st == 200L && fin.count() == 100L)
+    assert(fin.collect().min == 2L)
     assert(input.storageLevel !=
       org.apache.spark.storage.StorageLevel.NONE,
       "iterate dropped the caller-managed cache of its input")
     input.unpersist()
+  }
+
+  test("iterate runs one Spark job per round") {
+    val s = imp; import s._
+    val input = spark.range(50).as[Long]
+    def jobs(maxIter: Int): Int = jobsOf {
+      Iteration.iterate(input, maxIter, 0L)((ds, _) => ds.map(_ + 1))(
+        (ds, _) => ds.count())(_ => true)
+    }
+    val (two, three) = (jobs(2), jobs(3))
+    assert(three - two == 1, s"maxIter 2: $two jobs, maxIter 3: $three jobs")
+  }
+
+  test("iterate cuts lineage every round") {
+    val s = imp; import s._
+    // the body reads its state twice, so an uncut lineage doubles per round
+    val sizes = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val (rows, fin) = Iteration.iterate(spark.range(10).as[Long].map(_ * 2),
+        maxIter = 6, 0L) { (ds, _) =>
+      sizes += ds.queryExecution.analyzed.collect { case p => p }.size
+      ds.union(ds).distinct()
+    } { (ds, _) => ds.count() } { _ => true }
+    assert(sizes.size == 6)
+    assert(sizes.forall(_ == sizes.head), s"plan nodes per round: $sizes")
+    assert(rows == 10L && fin.collect().sorted.toSeq == (0L until 20L by 2L))
   }
 
   test("delta pagerank on a chain: workset shrinks every round, ranks converge") {
@@ -115,27 +151,12 @@ class DeltaIterateSpec extends SparkSpec {
 
   test("deltaIterate runs one Spark job per round") {
     val s = imp; import s._
-    val sc = spark.sparkContext
-    def inGroup[A](g: String)(body: => A): A = {
-      sc.setJobGroup(g, g)
-      try body finally sc.clearJobGroup()
-    }
-    // jobs of `body`, counted once a later fence job is visible: the status
-    // store applies listener events in order
-    def jobs(maxIter: Int): Int = {
-      val g = s"delta-jobs-$maxIter-${System.nanoTime()}"
-      inGroup(g) {
-        Iteration.deltaIterate[Long, Long, Long, Long, Long](
-          Seq((1L, 0L), (2L, 100L)).toDS(), maxIter) { (_, st, ds) => st + ds.sum } {
-          (_, st) => st } { (_, st) => st } { _ => true } { upd =>
-          upd.filter(col("_1") === 1L).select(col("_1"), lit(1L).as("_2")).as[(Long, Long)]
-        }
+    def jobs(maxIter: Int): Int = jobsOf {
+      Iteration.deltaIterate[Long, Long, Long, Long, Long](
+        Seq((1L, 0L), (2L, 100L)).toDS(), maxIter) { (_, st, ds) => st + ds.sum } {
+        (_, st) => st } { (_, st) => st } { _ => true } { upd =>
+        upd.filter(col("_1") === 1L).select(col("_1"), lit(1L).as("_2")).as[(Long, Long)]
       }
-      inGroup(g + "-fence")(sc.parallelize(Seq(1), 1).count())
-      val deadline = System.nanoTime() + 30000000000L
-      while (sc.statusTracker.getJobIdsForGroup(g + "-fence").isEmpty &&
-          System.nanoTime() < deadline) Thread.sleep(10)
-      sc.statusTracker.getJobIdsForGroup(g).length
     }
     val (two, three) = (jobs(2), jobs(3))
     assert(three - two == 1, s"maxIter 2: $two jobs, maxIter 3: $three jobs")
