@@ -1,10 +1,14 @@
 package graft
 
-import org.apache.spark.metrics.source.CodegenMetrics
+import com.fasterxml.jackson.databind.JsonNode
 import org.apache.spark.sql.DataFrame
 
+import scala.collection.immutable.ListMap
+import scala.jdk.CollectionConverters._
+
 /** Benchmark main: times every catalog query at SPARK_GRAFT_SF_DIR and
-  * prints ONE JSON line {"metric":...,"queries":{...}}.
+  * prints ONE JSON line {"metric":...,"queries":{...}}. BENCH_FULL.json
+  * also records what each cell cost, layer by layer ([[Layers]]).
   *
   * Timing discipline: one JVM+session warmup query first (JIT, codegen
   * cache, FS metadata), then each query end-to-end (plan → execute →
@@ -38,26 +42,28 @@ object Bench {
     val repeat =
       math.max(1, sys.env.get("SPARK_GRAFT_REPEAT").map(_.toInt).getOrElse(2))
 
-    def once(name: String, df: => DataFrame): Double = {
-      val t0 = System.nanoTime()
-      val ok = try { df.count(); true } catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-          false
+    // the timed window is exactly the cell's count(): Layers.measure's two
+    // listener-bus drains lie outside it
+    def once(name: String, df: => DataFrame): (Double, Layers) = {
+      val (elapsed, layers) = Layers.measure(spark) {
+        val t0 = System.nanoTime()
+        try { df.count(); (System.nanoTime() - t0) / 1e9 } catch {
+          case e: Throwable =>
+            System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+            -1.0 // failures are marked -1.0, never reported as a (fast) success
+        }
       }
       // the timed window CLOSES before cache teardown: a persisted-result
       // query must not be billed for unpersisting its own blocks (that cost
-      // lands in every pass, so min-across-passes cannot remove it)
-      val elapsed = (System.nanoTime() - t0) / 1e9
-      // several catalog queries (iteration fixpoints, dedup pipelines)
+      // lands in every pass, so min-across-passes cannot remove it).
+      // Several catalog queries (iteration fixpoints, dedup pipelines)
       // return their PERSISTED result; over a 70+-query catalog those
       // caches accumulate into real memory pressure that bleeds into later
       // queries' timings — drop the whole cache after every run. Each pass
       // is therefore COLD per query (no warm-cache min; round-4 repeats
       // shared a query's caches, flattering the persisted-result queries).
       spark.catalog.clearCache()
-      // failures are marked -1.0, never reported as a (fast) success
-      if (ok) elapsed else -1.0
+      (elapsed, layers)
     }
 
     // one catalog pass: production hashing first (the xxhash64 paths a
@@ -68,21 +74,22 @@ object Bench {
       Queries.catalog.filter(_.is(Tag.BenchPortable))
         .map(c => (c.name + "_portable", c, true)))
       .filter { case (key, _, _) => Harness.selected(key) }
-    val acc = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    def record(name: String, t: Double): Unit = acc.get(name) match {
-      case Some(prev) if prev < 0 || t < 0 => acc(name) = -1.0
-      case Some(prev) => acc(name) = math.min(prev, t)
-      case None => acc(name) = t
+    // each key keeps its fastest pass's time and layers; a failure in any
+    // pass sticks (-1.0, with the first failing pass's layers)
+    val acc = scala.collection.mutable.LinkedHashMap.empty[String, (Double, Layers)]
+    def record(name: String, run: (Double, Layers)): Unit = acc.get(name) match {
+      case Some((prev, _)) if prev < 0 || run._1 >= prev => ()
+      case _ => acc(name) = run
     }
-    def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val passCompiles = (1 to repeat).map { _ =>
-      val before = compiles
-      runs.foreach { case (key, c, portable) =>
-        record(key, once(key, c.run(spark, sfDir, portable)))
-      }
-      compiles - before
+      runs.map { case (key, c, portable) =>
+        val run = once(key, c.run(spark, sfDir, portable))
+        record(key, run)
+        run._2.codegenCompiles
+      }.sum
     }
-    val results = acc.toSeq
+    val results = acc.toSeq.map { case (k, (t, _)) => (k, t) }
+    val layers = acc.toSeq.map { case (k, (_, l)) => (k, l) }
     val sf = sfDir.split("/").last.stripPrefix("sf")
     // BENCH_FULL.json is the committed sf0.1 convention (round-over-round
     // comparisons read it assuming that scale); a run at any other SF that
@@ -108,9 +115,12 @@ object Bench {
       } else fullOutRaw
     val (prevPath, prevQueries, baselineId) = resolvePrev(sf)
     System.err.println(s"[bench] vs_prev_round baseline: $prevPath")
+    val grown = readPrevLayers(prevPath, sf).map(structural(layers, _))
+    grown.filter(_.nonEmpty).foreach(g => System.err.println(
+      s"[bench] structural growth vs $prevPath: ${g.mkString(", ")}"))
     val (fullLine, stdoutLine, failedNames) =
       renderArtifacts(results, repeat, sf, fullOut, prevQueries, baselineId,
-        passCompiles)
+        passCompiles, layers, grown)
     java.nio.file.Files.write(
       java.nio.file.Paths.get(fullOut),
       fullLine.getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -149,22 +159,6 @@ object Bench {
     Option(p.getParent).fold(line)(_.resolve(line).toString)
   }
 
-  /** Renders both bench artifacts from the timing results; pure so the
-    * failure-accounting contract is unit-testable (GatesSpec).
-    *
-    * Returns (BENCH_FULL.json body, bounded stdout line, failed names).
-    *
-    * Precision/size discipline: millisecond precision on stdout keeps the
-    * whole JSON line short enough to survive the driver's bounded ~2000-char
-    * tail capture (full-precision doubles truncated the line's head in
-    * rounds 1-3); the stdout line carries only the pinned `headline` subset
-    * plus the catalog total, while BENCH_FULL.json carries every query at
-    * full precision and each pass's codegen compile count. LOUD failure
-    * accounting (round-6 verdict #3): a query recording -1.0 surfaces as an
-    * explicit `failed` count in BOTH artifacts and by name in
-    * `failed_queries` — a total that silently excludes
-    * erroring queries would read as "all green" while the catalog shrinks.
-    */
   /** Resolve the previous-round baseline this run's `vs_prev_round`
     * compares against. Preference order:
     *
@@ -232,49 +226,71 @@ object Bench {
     * (absent for a legacy BENCH_FULL baseline — the file name alone still
     * records what this run chained against). */
   def baselineIdentity(path: String): String = {
-    // JSON-escape: an explicit SPARK_GRAFT_PREV path containing a quote or
-    // backslash must not render the artifact invalid (r16 advice)
-    val name = Harness.jsonString(java.nio.file.Paths.get(path).getFileName.toString)
-    val extra = try {
-      val txt = new String(
-        java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)),
-        java.nio.charset.StandardCharsets.UTF_8)
-      val r = "\"baseline_round\":(\\d+)".r.findFirstMatchIn(txt)
-        .map(m => s""","round":${m.group(1)}""").getOrElse("")
-      val g = "\"baseline_git\":\"([0-9a-fA-F]+)\"".r.findFirstMatchIn(txt)
-        .map(m => s""","git":"${m.group(1)}"""").getOrElse("")
-      r + g
-    } catch { case _: Exception => "" }
-    s""""baseline":{"file":$name$extra}"""
+    val id = Harness.json.createObjectNode()
+      .put("file", java.nio.file.Paths.get(path).getFileName.toString)
+    readPrev(path, "").foreach { n =>
+      if (n.path("baseline_round").isIntegralNumber) id.replace("round", n.get("baseline_round"))
+      if (n.path("baseline_git").isTextual) id.replace("git", n.get("baseline_git"))
+    }
+    s""""baseline":${Harness.json.writeValueAsString(id)}"""
   }
 
-  /** Parse the `queries` map out of a prior BENCH_FULL.json (our own flat
-    * format: numeric values, no nesting). Empty on any miss — a first run
-    * or a format change must not fail the bench — and empty when the prior
-    * artifact's `sf` differs from this run's (cross-scale "ratios" are
-    * meaningless). */
-  def readPrevQueries(path: String, sf: String = ""): Map[String, Double] =
-    try {
-      val txt = new String(
-        java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)),
-        java.nio.charset.StandardCharsets.UTF_8)
-      // exists, not forall: an artifact MISSING its sf field must be
-      // treated as a scale mismatch (a vacuous pass here would compare,
-      // e.g., sf0.001 iteration times against committed sf0.1 numbers)
-      val sfOk = sf.isEmpty ||
-        "\"sf\":\"([^\"]*)\"".r.findFirstMatchIn(txt).exists(_.group(1) == sf)
-      val qIdx = txt.indexOf("\"queries\":{")
-      if (qIdx < 0 || !sfOk) Map.empty
-      else {
-        val body = txt.substring(qIdx + 11, txt.indexOf('}', qIdx))
-        "\"([A-Za-z0-9_]+)\":(-?[0-9.Ee+-]+)".r.findAllMatchIn(body)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      }
-    } catch { case _: Exception => Map.empty }
+  /** A prior bench artifact, if it parses and its `sf` equals `sf` (an
+    * empty `sf` accepts any). A first run or a format change must not fail
+    * the bench, cross-scale "ratios" are meaningless, and an artifact
+    * MISSING its sf field counts as a mismatch (a vacuous pass would
+    * compare, e.g., sf0.001 iteration times against committed sf0.1
+    * numbers). */
+  private def readPrev(path: String, sf: String): Option[JsonNode] =
+    scala.util.Try(Harness.json.readTree(new java.io.File(path))).toOption
+      .filter(n => sf.isEmpty || n.path("sf").asText == sf)
 
+  /** The `queries` map of a prior artifact; empty on any miss. */
+  def readPrevQueries(path: String, sf: String = ""): Map[String, Double] =
+    readPrev(path, sf).fold(Map.empty[String, Double])(
+      _.path("queries").properties.asScala.map(e => e.getKey -> e.getValue.asDouble).toMap)
+
+  /** The `layers` map of a prior artifact; None when it has none. */
+  def readPrevLayers(path: String, sf: String): Option[Map[String, Layers]] =
+    readPrev(path, sf).map(_.path("layers")).filter(_.isObject).map(
+      _.properties.asScala.map(e =>
+        e.getKey -> Harness.json.treeToValue(e.getValue, classOf[Layers])).toMap)
+
+  /** Cells of `cur` that grew structurally against `prev`: any growth in
+    * jobs, stages or tasks, or shuffle bytes (read + write) grown by more
+    * than the run-to-run spread. That spread was measured at sf0.1 over two
+    * full catalog runs of one build: 247 of 263 cells moved no shuffle
+    * byte and the other 16 moved by at most 976 bytes or 0.7%, so growth
+    * counts once it exceeds both 1 KiB and 1%. */
+  def structural(cur: Seq[(String, Layers)], prev: Map[String, Layers]): Seq[String] = {
+    def bytes(l: Layers) = l.shuffleReadBytes + l.shuffleWriteBytes
+    cur.collect { case (k, c) if prev.get(k).exists(p =>
+        c.jobs > p.jobs || c.stages > p.stages || c.tasks > p.tasks ||
+          bytes(c) - bytes(p) > math.max(1024L, bytes(p) / 100)) => k }
+  }
+
+  /** Renders both bench artifacts from the timing results; pure so the
+    * failure-accounting contract is unit-testable (GatesSpec).
+    *
+    * Returns (BENCH_FULL.json body, bounded stdout line, failed names).
+    *
+    * Precision/size discipline: millisecond precision on stdout keeps the
+    * whole JSON line short enough to survive a bounded ~2000-char
+    * tail capture (full-precision doubles truncated the line's head in
+    * rounds 1-3); the stdout line carries only the pinned `headline` subset
+    * plus the catalog total, while BENCH_FULL.json carries every query at
+    * full precision, each pass's codegen compile count, each cell's
+    * [[Layers]] and, inside `vs_prev_round`, the `structural` growth list
+    * (null when the baseline has no layers). LOUD failure
+    * accounting (round-6 verdict #3): a query recording -1.0 surfaces as an
+    * explicit `failed` count in BOTH artifacts and by name in
+    * `failed_queries` — a total that silently excludes
+    * erroring queries would read as "all green" while the catalog shrinks.
+    */
   def renderArtifacts(results: Seq[(String, Double)], repeat: Int, sf: String,
       fullOut: String, prevQueries: Map[String, Double] = Map.empty,
-      baselineId: String = "", passCompiles: Seq[Long] = Nil)
+      baselineId: String = "", passCompiles: Seq[Long] = Nil,
+      layers: Seq[(String, Layers)] = Nil, structural: Option[Seq[String]] = None)
       : (String, String, Seq[String]) = {
     // Locale.ROOT: a comma-decimal default locale would emit invalid JSON
     def fmt(v: Double): String =
@@ -293,8 +309,14 @@ object Bench {
     val byName = results.toMap
     val common = prevQueries.keySet.intersect(byName.keySet).toSeq
       .filter(k => prevQueries(k) >= 0 && byName(k) >= 0)
-    val vsPrev =
-      if (common.isEmpty) """"vs_prev_round":null"""
+    // BENCH_FULL's vs_prev_round also names the cells that grew
+    // structurally; null when the baseline recorded no layers
+    val grown =
+      if (layers.isEmpty) ""
+      else ""","structural":""" + structural.fold("null")(
+        _.map(Harness.jsonString).mkString("[", ",", "]"))
+    val vsFields =
+      if (common.isEmpty) None
       else {
         val prevSum = common.map(prevQueries).sum
         val curSum = common.map(byName).sum
@@ -341,15 +363,19 @@ object Bench {
             .fold(""""ratio_drift_adjusted":null""")(c =>
               s""""ratio_drift_adjusted":${fmt(ratio / c)}""")
         val base = if (baselineId.isEmpty) "" else "," + baselineId
-        s""""vs_prev_round":{"common_keys":${common.size},"prev_sec":${fmt(prevSum)},"cur_sec":${fmt(curSum)},"ratio":${fmt(ratio)},$adj,$ctl$base}"""
+        Some(s""""common_keys":${common.size},"prev_sec":${fmt(prevSum)},"cur_sec":${fmt(curSum)},"ratio":${fmt(ratio)},$adj,$ctl$base""")
       }
+    def vsPrev(extra: String) = """"vs_prev_round":""" + vsFields.fold("null")(f => s"{$f$extra}")
+    val layersJson =
+      if (layers.isEmpty) ""
+      else ""","layers":""" + Harness.json.writeValueAsString(ListMap.from(layers))
     val fullLine =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","repeat":$repeat,"failed":${failedNames.size},"failed_queries":$failedJson,"codegen_compiles":${passCompiles.mkString("[", ",", "]")},$vsPrev,"queries":$fullJson,"sf":"$sf"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","repeat":$repeat,"failed":${failedNames.size},"failed_queries":$failedJson,"codegen_compiles":${passCompiles.mkString("[", ",", "]")},${vsPrev(grown)},"queries":$fullJson$layersJson,"sf":"$sf"}"""
     val qs = stdoutKeys.filter(byName.contains)
       .map(k => "\"" + k + "\":" + fmt(byName(k)))
       .mkString("{", ",", "}")
     val stdoutLine =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"sf":"$sf","queries_run":${results.size},"failed":${failedNames.size},$vsPrev,"full":"$fullOut"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"sf":"$sf","queries_run":${results.size},"failed":${failedNames.size},${vsPrev("")},"full":"$fullOut"}"""
     (fullLine, stdoutLine, failedNames)
   }
 

@@ -68,8 +68,8 @@ object Tag {
     * r17 boundary the old panel measured the OPTIMIZATION instead of the
     * host and `ratio_drift_adjusted` over-penalized the total. All current
     * members were verified structurally neutral to the flag (identical
-    * jobs/stages/tasks/shuffle bytes under both settings, graft.Profile,
-    * r17 notes). CatalogSpec pins both rules.
+    * jobs/stages/tasks/shuffle bytes under both settings, r17 notes; Bench's
+    * per-cell `layers` records those counters). CatalogSpec pins both rules.
     *
     * Shape diversity, so the panel moves with the host across regimes
     * rather than with any one subsystem:

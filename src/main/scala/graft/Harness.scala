@@ -1,12 +1,14 @@
 package graft
 
-import com.fasterxml.jackson.core.io.JsonStringEncoder
+import com.fasterxml.jackson.databind.{DeserializationFeature, PropertyNamingStrategies}
+import com.fasterxml.jackson.databind.json.JsonMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import graft.api.StreamContext
 import org.apache.spark.sql.SparkSession
 
-/** Session of the harness mains (Bench, Verify, Soak, PlanDump, LintAudit,
-  * Profile, StreamAb): [[StreamContext.sessionConf]] plus the env
-  * overrides, all read here.
+/** Session of the harness mains (Bench, Verify, Soak, PlanDump, LintAudit):
+  * [[StreamContext.sessionConf]] plus the env overrides, all read here.
+  * Bench and Soak measure each cell with [[Layers.measure]].
   *
   *   - `SPARK_GRAFT_CPUS`: cores of `local[n]` and shuffle partitions;
   *   - `GRAFT_MASTER`: master URL, e.g. `local-cluster[2,4,2048]` — separate
@@ -26,7 +28,7 @@ object Harness {
     spark
   }
 
-  /** `GRAFT_ONLY=q_a,q_b` restricts Verify, Bench and Profile to a subset
+  /** `GRAFT_ONLY=q_a,q_b` restricts Verify and Bench to a subset
     * of catalog keys (Bench's `<name>_portable` keys included) — an
     * iteration aid; unset runs everything. */
   val only: Option[Set[String]] =
@@ -34,10 +36,17 @@ object Harness {
 
   def selected(name: String): Boolean = only.forall(_.contains(name))
 
+  /** The harness artifacts' Jackson mapper: Scala case classes and
+    * collections, snake_case keys, and untyped integers read back as longs
+    * (so a `Map[String, Long]` survives erasure). */
+  val json: JsonMapper = JsonMapper.builder().addModule(DefaultScalaModule)
+    .propertyNamingStrategy(PropertyNamingStrategies.SNAKE_CASE)
+    .enable(DeserializationFeature.USE_LONG_FOR_INTS)
+    .disable(DeserializationFeature.FAIL_ON_UNKNOWN_PROPERTIES).build()
+
   /** `s` as a JSON string literal: quotes, backslashes and every control
     * character escaped, so free-form SQL or paths never break a reader. */
-  def jsonString(s: String): String =
-    "\"" + new String(JsonStringEncoder.getInstance.quoteAsString(s)) + "\""
+  def jsonString(s: String): String = json.writeValueAsString(s)
 
   def cores(env: Map[String, String], default: Int): Int =
     env.get("SPARK_GRAFT_CPUS").fold(default)(_.trim.toInt)

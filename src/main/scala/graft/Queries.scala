@@ -1808,11 +1808,12 @@ object Queries {
     // the watermark moved, and AvailableNow runs it before terminating, so
     // the single advance still commits every trailing window. Rounds 12-15
     // shipped TWO sentinel files (a second +60d advance to force a fed
-    // batch); the r16 per-batch A/B (StreamAb, min-of-3 at sf0.1) measured
-    // each sentinel trigger at ~0.3-0.4 s of q_stream_session's ~2.9 s
-    // trigger total and the no-data batch emitting identically, so the
-    // second file bought nothing — oracle re-verified green at sf0.01 and
-    // sf0.1 on the one-sentinel scheme. Built from a real row so every
+    // batch); the r16 per-batch A/B (each trigger's progress report,
+    // min-of-3 at sf0.1; Bench's `layers` now sums those by phase as
+    // `batch_ms`) measured each sentinel trigger at ~0.3-0.4 s of
+    // q_stream_session's ~2.9 s trigger total and the no-data batch
+    // emitting identically, so the second file bought nothing — oracle
+    // re-verified green at sf0.01 and sf0.1 on the one-sentinel scheme. Built from a real row so every
     // column keeps the exact on-disk dtype (the streaming reader reuses
     // raw.schema verbatim).
     def writeSentinels(into: java.nio.file.Path, mtime0Ms: Long): Unit = {

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-
 /** Scale soak: runs the scale-sensitive pipeline families once at a given
   * SF directory and prints per-pipeline wall time + total shuffle-write
   * bytes — the evidence that the plan shapes grow sub-quadratically from
@@ -13,18 +11,10 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
   *   sbt "runMain graft.Soak /tmp/soak_sf1"     # 10× generated tables
   */
 object Soak {
-  private final class ShuffleAcc extends SparkListener {
-    val bytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-      bytes.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-  }
-
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val spark = Harness.session()
     val cpus = spark.sparkContext.defaultParallelism
-    val acc = new ShuffleAcc
-    spark.sparkContext.addSparkListener(acc)
 
     // SPARK_GRAFT_SOAK_REPEAT=N runs the whole sweep N times (default 1)
     // and records each pipeline's MIN wall time across passes — the Bench
@@ -45,21 +35,19 @@ object Soak {
     var failed = 0
 
     def run(name: String)(f: => Long): Unit = {
-      // settle the async listener bus between pipelines
-      Thread.sleep(1000)
-      val b0 = acc.bytes.get()
-      val t0 = System.nanoTime()
-      // a failing pipeline records pass:false and the soak continues — the
-      // artifact must show the whole sweep, not stop at the first casualty
-      val (rows, pass) =
-        try { (f, true) }
-        catch { case e: Exception =>
-          System.err.println(s"[soak] $name FAILED: ${e.getMessage}")
-          (-1L, false)
-        }
-      val secs = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(1000)
-      val mb = (acc.bytes.get() - b0) / 1048576.0
+      val ((rows, pass, secs), layers) = Layers.measure(spark) {
+        val t0 = System.nanoTime()
+        // a failing pipeline records pass:false and the soak continues — the
+        // artifact must show the whole sweep, not stop at the first casualty
+        val (rows, pass) =
+          try { (f, true) }
+          catch { case e: Exception =>
+            System.err.println(s"[soak] $name FAILED: ${e.getMessage}")
+            (-1L, false)
+          }
+        (rows, pass, (System.nanoTime() - t0) / 1e9)
+      }
+      val mb = layers.shuffleWriteBytes / 1048576.0
       spark.catalog.clearCache() // Bench discipline: no cross-pipeline caches
       println(
         f"""{"pipeline":"$name","rows":$rows,"sec":$secs%.2f,"shuffle_mb":$mb%.1f,"pass":$pass}""")

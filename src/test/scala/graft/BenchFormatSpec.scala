@@ -179,4 +179,40 @@ class BenchFormatSpec extends AnyFunSuite {
     assert(Bench.readPrevQueries("/nonexistent/path.json").isEmpty)
     java.nio.file.Files.delete(tmp)
   }
+
+  test("vs_prev_round lists cells that grew structurally, in BENCH_FULL only") {
+    // q_pagerank at sf0.1 once ran 2 more single-task stages per pass with
+    // no more jobs: 17 jobs, stages and tasks 18 -> 20
+    val before = Layers(jobs = 17, stages = 18, tasks = 18,
+      shuffleWriteBytes = 1000L, planningMs = Map("analysis" -> 3L))
+    val hits = Layers(jobs = 9, stages = 14, tasks = 21, shuffleWriteBytes = 100000L)
+    val times = Seq("q_pagerank" -> 1.0, "q_hits" -> 2.0)
+    val (prevFull, _, _) = Bench.renderArtifacts(times, 2, "0.1", "x.json",
+      layers = Seq("q_pagerank" -> before, "q_hits" -> hits))
+    val tmp = java.nio.file.Files.createTempFile("bench_layers", ".json")
+    java.nio.file.Files.write(tmp, prevFull.getBytes("UTF-8"))
+    val prevLayers = Bench.readPrevLayers(tmp.toString, "0.1")
+    assert(prevLayers == Some(Map("q_pagerank" -> before, "q_hits" -> hits)), prevFull)
+    assert(prevLayers.get("q_pagerank").planningMs.values.sum == 3L)
+    // shuffle bytes inside the run-to-run spread are not growth
+    val cur = Seq("q_pagerank" -> before.copy(stages = 20, tasks = 20),
+      "q_hits" -> hits.copy(shuffleWriteBytes = 100500L))
+    val grown = prevLayers.map(Bench.structural(cur, _))
+    assert(grown == Some(Seq("q_pagerank")))
+    assert(Bench.structural(Seq("q_hits" -> hits.copy(shuffleWriteBytes = 200000L)),
+      Map("q_hits" -> hits)) == Seq("q_hits"))
+    val (full, stdout, _) = Bench.renderArtifacts(times, 2, "0.1", "x.json",
+      Bench.readPrevQueries(tmp.toString, "0.1"), layers = cur, structural = grown)
+    assert(full.contains(""""structural":["q_pagerank"]}"""), full)
+    assert(!stdout.contains("structural") && !stdout.contains("layers"), stdout)
+    // a baseline without layers: null, never []
+    val legacy = java.nio.file.Files.createTempFile("bench_legacy", ".json")
+    java.nio.file.Files.write(legacy,
+      """{"metric":"total","queries":{"q_pagerank":1.0},"sf":"0.1"}""".getBytes("UTF-8"))
+    assert(Bench.readPrevLayers(legacy.toString, "0.1").isEmpty)
+    val (full2, _, _) = Bench.renderArtifacts(times, 2, "0.1", "x.json",
+      Map("q_pagerank" -> 1.0), layers = cur)
+    assert(full2.contains(""""structural":null}"""), full2)
+    java.nio.file.Files.delete(tmp); java.nio.file.Files.delete(legacy)
+  }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.catalyst.expressions.{Add, BoundReference, Literal, UnsafeProjection}
 import org.apache.spark.sql.types.LongType
 
@@ -11,16 +10,12 @@ import org.apache.spark.sql.types.LongType
 class CodegenCacheSpec extends SparkSpec {
   test("a second run of 150 distinct projections compiles no class") {
     spark // the recipe session sizes the cache before its first use
-    def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     // `id + c` for 150 distinct constants: each constant is inlined into
     // the generated source, so each projection is a class of its own; the
     // offset keeps them apart from what other suites compile in this JVM
-    def runAll(): Long = {
-      val before = compiles
-      (1 to 150).foreach(i => UnsafeProjection.create(
-        Seq(Add(BoundReference(0, LongType, nullable = false), Literal(1000000L + i)))))
-      compiles - before
-    }
+    def runAll(): Long = Layers.measure(spark)((1 to 150).foreach(i =>
+      UnsafeProjection.create(Seq(Add(BoundReference(0, LongType, nullable = false),
+        Literal(1000000L + i))))))._2.codegenCompiles
     val first = runAll()
     assert(first >= 150, s"first run compiled only $first classes")
     assert(runAll() == 0)

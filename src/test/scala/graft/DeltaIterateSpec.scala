@@ -9,22 +9,8 @@ import org.apache.spark.sql.functions._
   * quiesce — and that early termination fires when no delta passes the
   * condition. */
 class DeltaIterateSpec extends SparkSpec {
-  /** Spark jobs run by `body`, counted once a later fence job is visible:
-    * the status store applies listener events in order. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    def inGroup[A](g: String)(f: => A): A = {
-      sc.setJobGroup(g, g)
-      try f finally sc.clearJobGroup()
-    }
-    val g = s"jobs-${System.nanoTime()}"
-    inGroup(g)(body)
-    inGroup(g + "-fence")(sc.parallelize(Seq(1), 1).count())
-    val deadline = System.nanoTime() + 30000000000L
-    while (sc.statusTracker.getJobIdsForGroup(g + "-fence").isEmpty &&
-        System.nanoTime() < deadline) Thread.sleep(10)
-    sc.statusTracker.getJobIdsForGroup(g).length
-  }
+  /** Spark jobs run by `body`. */
+  private def jobsOf(body: => Unit): Int = Layers.measure(spark)(body)._2.jobs
 
   test("iterate respects a caller-managed cache on the input dataset") {
     val s = imp; import s._

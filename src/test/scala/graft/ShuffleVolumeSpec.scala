@@ -1,14 +1,13 @@
 package graft
 
 import graft.functions.Dedup
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.functions._
 
 /** SCALE.md's shuffle claims, executed: measure actual shuffle-write bytes
-  * via a SparkListener and assert the de-amplified formulations really move
-  * less data than the amplified ones they replaced. A plan-shape test can't
-  * catch a regression that keeps the shape but grows the payload — bytes
-  * can. */
+  * with [[Layers.measure]] and assert the de-amplified formulations really
+  * move less data than the amplified ones they replaced. A plan-shape test
+  * can't catch a regression that keeps the shape but grows the payload —
+  * bytes can. */
 class ShuffleVolumeSpec extends SparkSpec {
   def docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
 
@@ -19,26 +18,8 @@ class ShuffleVolumeSpec extends SparkSpec {
     "spark.sql.autoBroadcastJoinThreshold" -> "-1",
     "spark.sql.adaptive.enabled" -> "false")(shuffleBytesRaw(f))
 
-  private def shuffleBytesRaw(f: => Unit): Long = {
-    val total = new java.util.concurrent.atomic.AtomicLong(0L)
-    val listener = new SparkListener {
-      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null)
-          total.addAndGet(t.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      f
-      // listener events are async — drain before reading the counter
-      // (listenerBus is private; a short settle loop is the public route)
-      val deadline = System.nanoTime() + 5_000_000_000L
-      var last = -1L
-      while (System.nanoTime() < deadline && last != total.get()) {
-        last = total.get(); Thread.sleep(200)
-      }
-    } finally spark.sparkContext.removeSparkListener(listener)
-    total.get()
-  }
+  private def shuffleBytesRaw(f: => Unit): Long =
+    Layers.measure(spark)(f)._2.shuffleWriteBytes
 
   test("band join moves scalar band keys, not signature arrays (measured bytes)") {
     val sig = Dedup.minhashSignature(docs, "doc_id", "text").persist()
@@ -162,5 +143,23 @@ class ShuffleVolumeSpec extends SparkSpec {
     }
     assert(pruned * 5 < plain,
       s"Bloom pruning should cut the probe shuffle >5x: pruned=$pruned plain=$plain")
+  }
+
+  test("Layers.measure counts a known plan exactly and reads streaming progress") {
+    val (n, l) = Layers.measure(spark)(spark.range(0, 1000, 1, 4).repartition(3).count())
+    assert(n == 1000L)
+    assert((l.jobs, l.stages, l.tasks) == ((3, 3, 8)), l)
+    assert(l.shuffleWriteBytes > 0 && l.planningMs.contains("optimization"), l)
+    // streaming progress reaches the same listener: one AvailableNow batch
+    val s = imp; import s._
+    implicit val sq = spark.sqlContext
+    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Int]
+    in.addData(1, 2, 3)
+    val (_, st) = Layers.measure(spark) {
+      in.toDF().writeStream.format("noop")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+        .awaitTermination()
+    }
+    assert(st.batches == 1 && st.batchMs.contains("addBatch"), st)
   }
 }
