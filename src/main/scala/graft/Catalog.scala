@@ -14,8 +14,9 @@ final case class Cell(
     tags: Set[Tag]) {
   def is(tag: Tag): Boolean = tags(tag)
   /** Every `q_stream_*` twin runs a full streaming query on construction
-    * through runStream's content-fingerprinted 'streamsplit' store under
-    * /tmp, so a cold /tmp pays the split rebuild inside a timed window. */
+    * over a split from runStream's content-fingerprinted 'streamsplit'
+    * store under /tmp; Bench and Soak build the splits before their first
+    * pass ([[Queries.prepareStreamSplits]]). */
   def streaming: Boolean = name.startsWith("q_stream_")
 }
 
@@ -52,8 +53,9 @@ object Tag {
     * first pass rebuilds it), and EVERY q_stream_* cell: all streaming
     * twins route through runStream's content-fingerprinted 'streamsplit'
     * store under /tmp, so on a cold /tmp — or a GRAFT_ONLY run where no
-    * earlier cell warmed the shared split dir — the split rebuild lands
-    * inside the timed window, the exact q_bpe failure mode (the r16 panel
+    * earlier cell warmed the shared split dir — the split rebuild landed
+    * inside the timed window, the exact q_bpe failure mode (Bench now
+    * builds the splits before its first pass; the r16 panel
     * shipped with q_stream_tumbling in violation of its own rule; r16
     * advice). Session-local persist/unpersist within a query is fine
     * because clearCache() resets it between cells anyway.

@@ -168,7 +168,14 @@ object StreamContext {
     * codegen cache of 4096 classes, not 100, because one catalog pass
     * generates ~2,600 distinct classes and one façade job over 100, so at
     * the default every job recompiled classes the previous one had built
-    * (static: it binds when this recipe creates the SparkContext). */
+    * (static: it binds when this recipe creates the SparkContext); and
+    * `file:` paths on [[graft.sources.NioLocalFileSystem]] (`FileSystem`,
+    * `fs.file.impl`) and [[graft.sources.NioLocalFs]] (`FileContext`,
+    * `fs.AbstractFileSystem.file.impl`, the streaming checkpoint and state
+    * store path), because without a native Hadoop library Hadoop's own
+    * local file system forks `chmod` per created file and `readlink` per
+    * checkpoint rename: over 100 forks of ~2 ms each per micro-batch of a
+    * stateful query. */
   def sessionConf(cores: Int): Seq[(String, String)] = Seq(
     "spark.sql.shuffle.partitions" -> cores.toString,
     "spark.sql.adaptive.enabled" -> "true",
@@ -177,7 +184,9 @@ object StreamContext {
     "spark.ui.enabled" -> "false",
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     "spark.sql.ansi.enabled" -> "false",
-    "spark.sql.codegen.cache.maxEntries" -> "4096")
+    "spark.sql.codegen.cache.maxEntries" -> "4096",
+    "spark.hadoop.fs.file.impl" -> classOf[graft.sources.NioLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[graft.sources.NioLocalFs].getName)
 
   /** Local session built from [[sessionConf]]. */
   def localSession(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession =

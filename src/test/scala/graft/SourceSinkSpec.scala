@@ -8,6 +8,119 @@ import java.nio.file.Files
 class SourceSinkSpec extends SparkSpec {
   def tmp(): String = Files.createTempDirectory("graft").toString
 
+  /** A parquet write and a 3-batch stateful streaming query with a
+    * checkpoint, both under `dir`: every kind of local file the library
+    * writes (part files, `.crc` sidecars, offset and commit logs, state
+    * store deltas). */
+  private def writeParquetAndCheckpoint(dir: String): Unit = {
+    val s = imp; import s._
+    ctx.streamRange(100).map(x => (x % 7, x)).writeParquet(dir + "/p")
+    implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Long]
+    val name = "graft_cp_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    val q = in.toDS().groupByKey(_ % 3).count().writeStream
+      .outputMode("complete").format("memory").queryName(name)
+      .option("checkpointLocation", dir + "/cp").start()
+    try (0 until 3).foreach { b =>
+      in.addData((b * 10L) until (b * 10L + 10))
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(spark.table(name).as[(Long, Long)].collect().toMap == Map(0L -> 10L, 1L -> 10L, 2L -> 10L))
+    spark.catalog.dropTempView(name)
+  }
+
+  /** Commands of the processes this JVM starts while `body` runs, from a
+    * JFR `jdk.ProcessStart` recording. */
+  private def processStarts(body: => Unit): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val rec = new jdk.jfr.Recording()
+    val out = Files.createTempFile("graft-forks", ".jfr")
+    try {
+      rec.enable("jdk.ProcessStart")
+      rec.start()
+      try body finally rec.stop()
+      rec.dump(out)
+      jdk.jfr.consumer.RecordingFile.readAllEvents(out).asScala.toSeq
+        .map(_.getString("command"))
+    } finally { rec.close(); Files.deleteIfExists(out) }
+  }
+
+  test("local file writes start no chmod, readlink, ls or stat process") {
+    val shell = processStarts(writeParquetAndCheckpoint(tmp())).filter(c =>
+      Set("chmod", "readlink", "ls", "stat")(c.trim.split("\\s+").head.split('/').last))
+    val forks = shell.size
+    assert(forks == 0, s"Hadoop shell forks: ${shell.take(5).mkString("; ")}")
+  }
+
+  test("local file modes are Hadoop's: part files, directories, checksums, checkpoint files") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get(tmp())
+    writeParquetAndCheckpoint(root.toString)
+    val walk = Files.walk(root)
+    val modes = try walk.iterator().asScala.filter(_ != root).map { f =>
+      val rel = root.relativize(f).toString
+        .replaceAll("[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}", "<uuid>")
+        .replaceAll("part-\\d+", "part-N")
+      rel -> (Files.isDirectory(f),
+        java.nio.file.attribute.PosixFilePermissions.toString(Files.getPosixFilePermissions(f)))
+    }.toMap finally walk.close()
+    // recorded from Hadoop's own local file system (shell chmod): every
+    // directory 755 and every file 644, under a 022 umask
+    val recorded = Map(
+      "p" -> "rwxr-xr-x",
+      "p/_SUCCESS" -> "rw-r--r--",
+      "p/part-N-<uuid>-c000.snappy.parquet" -> "rw-r--r--",
+      "p/.part-N-<uuid>-c000.snappy.parquet.crc" -> "rw-r--r--",
+      "cp" -> "rwxr-xr-x",
+      "cp/metadata" -> "rw-r--r--",
+      "cp/offsets" -> "rwxr-xr-x",
+      "cp/offsets/2" -> "rw-r--r--",
+      "cp/commits/.2.crc" -> "rw-r--r--",
+      "cp/state/0/0" -> "rwxr-xr-x",
+      "cp/state/0/0/3.delta" -> "rw-r--r--",
+      "cp/state/0/0/.3.delta.crc" -> "rw-r--r--",
+      "cp/state/0/0/_metadata/schema" -> "rw-r--r--",
+      "cp/state/0/_metadata/metadata" -> "rw-r--r--")
+    recorded.foreach { case (rel, mode) => assert(modes.get(rel).map(_._2).contains(mode), rel) }
+    modes.foreach { case (rel, (isDir, mode)) =>
+      assert(mode == (if (isDir) "rwxr-xr-x" else "rw-r--r--"), rel)
+    }
+  }
+
+  test("setPermission keeps the sticky bit; getFileLinkStatus keeps Hadoop's statuses") {
+    import org.apache.hadoop.fs.{FileSystem, Path}
+    val conf = spark.sparkContext.hadoopConfiguration
+    val local = FileSystem.getLocal(conf)
+    assert(local.isInstanceOf[graft.sources.NioLocalFileSystem])
+    assert(local.getRaw.isInstanceOf[graft.sources.NioRawLocalFileSystem])
+    assert(org.apache.hadoop.fs.AbstractFileSystem.get(new java.net.URI("file:///"), conf)
+      .isInstanceOf[graft.sources.NioLocalFs])
+    val nio = local.getRaw
+    val plain = new org.apache.hadoop.fs.RawLocalFileSystem()
+    plain.initialize(new java.net.URI("file:///"), conf)
+    val dir = java.nio.file.Paths.get(tmp())
+
+    val sticky = dir.resolve("sticky")
+    Files.createDirectory(sticky)
+    nio.setPermission(new Path(sticky.toString),
+      new org.apache.hadoop.fs.permission.FsPermission(Integer.parseInt("1777", 8).toShort))
+    assert((Files.getAttribute(sticky, "unix:mode").asInstanceOf[Int] & 0xfff) ==
+      Integer.parseInt("1777", 8))
+
+    val file = Files.writeString(dir.resolve("file"), "x")
+    val link = Files.createSymbolicLink(dir.resolve("link"), file)
+    def fields(st: org.apache.hadoop.fs.FileStatus) = (st.getPath, st.getLen, st.isFile,
+      st.isDirectory, st.isSymlink, st.getModificationTime, st.getPermission, st.getOwner)
+    val viaLink = nio.getFileLinkStatus(new Path(link.toString))
+    assert(viaLink.isSymlink)
+    assert(viaLink.getSymlink == new Path("file:" + file))
+    assert(fields(viaLink) == fields(plain.getFileLinkStatus(new Path(link.toString))))
+    val regular = new Path(file.toString)
+    assert(fields(nio.getFileLinkStatus(regular)) == fields(nio.getFileStatus(regular)))
+    assert(fields(nio.getFileLinkStatus(regular)) == fields(plain.getFileLinkStatus(regular)))
+    intercept[java.io.FileNotFoundException](nio.getFileLinkStatus(new Path(dir.resolve("missing").toString)))
+  }
+
   test("parquet write/read round-trip (write_parquet_seq)") {
     val s = imp; import s._
     val dir = tmp() + "/p"
