@@ -54,7 +54,7 @@ object PlanDump {
     * codegen. [[Tag.Iterative]] cells run their driver loops on
     * construction, so the building blocks are documented instead; the
     * streaming twins run their full streaming query on construction and
-    * would only show the memory-sink scan (StreamingSpec pins their
+    * would only show a scan of the collected rows (StreamingSpec pins their
     * streaming plans). */
   private def explainAll(spark: SparkSession, sfDir: String, out: Path): Unit = {
     val sb = new StringBuilder

@@ -20,9 +20,16 @@ import graft.Tag._
   */
 object Queries {
 
-  /** Input-fed micro-batch count of the most recent [[runStream]] run —
-    * test hook pinning that the streaming twins really replay multi-batch. */
-  @volatile private[graft] var lastStreamBatches: Int = 0
+  /** Input-fed micro-batches of the most recent [[runStream]] run, one
+    * count per query — test hook pinning that the streaming twins really
+    * replay multi-batch, and that a resumed twin's restart processed only
+    * the final batch (recovery, not reprocessing). */
+  @volatile private[graft] var lastStreamPhases: Seq[Int] = Nil
+
+  /** Replay every streaming twin as a stop/resume pair of queries
+    * ([[runStream]]): `GRAFT_STREAM_RESUME=1`, read once. */
+  @volatile private[graft] var streamResume: Boolean =
+    sys.env.get("GRAFT_STREAM_RESUME").contains("1")
 
   def tbl(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
@@ -1761,9 +1768,19 @@ object Queries {
       |AND epoch_us(CAST(b.ts AS TIMESTAMP)) BETWEEN epoch_us(CAST(a.ts AS TIMESTAMP)) - 7200000000
       |                                          AND epoch_us(CAST(a.ts AS TIMESTAMP)) + 7200000000""".stripMargin
 
-  /** `GRAFT_STREAM_BATCHES` (default 3): the micro-batches each twin replays. */
-  private def streamBatches: Int =
-    math.max(1, sys.env.getOrElse("GRAFT_STREAM_BATCHES", "3").toInt)
+  /** The micro-batches each twin replays: its split's part-file count
+    * (the flush sentinel adds one), and part of the split's cache key. */
+  private val streamBatches = 3
+
+  /** State-store partition count of a twin's replay: each streaming state
+    * partition pays a fixed open/commit/snapshot cost PER MICROBATCH, so a
+    * bounded replay wants few, large state partitions (the opposite of the
+    * batch shuffle default). Measured on the 5 heaviest twins at sf0.1
+    * (min-of-2 each): 8 parts 12.4 s, 4 parts 12.5 s, 2 parts 10.3 s,
+    * 1 part 11.1 s — 2 keeps two-way compute parallelism while halving
+    * commit count three more times; 1 serializes the state work and loses
+    * the gain. */
+  private val streamStateParts = "2"
 
   /** Every (table, flush) input a streaming twin replays through
     * [[runStream]], which refuses any other, so [[prepareStreamSplits]]
@@ -1775,52 +1792,53 @@ object Queries {
   /** Fingerprints each twin table at `dir` and builds its stream split if
     * `/tmp` lacks it, so that a twin run afterwards only looks the split up.
     * Bench and Soak call it once per run, before their first pass: the
-    * fingerprint scan (2 jobs) and a cold split build otherwise land in the
-    * timed window of the first twin per table, in one pass only. */
+    * fingerprint scan (2 jobs), the schema inference (1 job) and a cold
+    * split build otherwise land in the timed window of the first twin per
+    * table, in one pass only. */
   def prepareStreamSplits(s: SparkSession, dir: String): Unit =
-    if (streamBatches > 1) streamSplitInputs.foreach { case (table, flush) =>
-      streamSplit(s.read.parquet(s"$dir/$table.parquet"), dir, table, flush)
+    streamSplitInputs.foreach { case (table, flush) =>
+      streamSplit(s, dir, table, flush)
     }
 
-  /** The `/tmp` directory holding `raw`'s split into [[streamBatches]]
-    * time-contiguous part files (plus the flush sentinel), built on first
-    * use. `raw` is the caller's read of `$dir/$table.parquet`: a second read
-    * would run one more schema-inference job. */
-  private def streamSplit(raw: DataFrame, dir: String, table: String,
-      flush: Boolean): java.nio.file.Path = {
+  /** Content fingerprint and schema of each twin table, memoized per
+    * (dir, table, file size+mtime) for the session. Without the memo every
+    * twin re-ran a full-table hash scan to find its already-built split and
+    * a schema-inference job to read the stream; the size+mtime component
+    * closes the staleness window, since a table regenerated mid-session
+    * changes the key (the content hash still governs the split path). */
+  private val streamTables = new java.util.concurrent.ConcurrentHashMap[
+    String, (String, org.apache.spark.sql.types.StructType)]()
+
+  /** The `/tmp` directory holding `$dir/$table.parquet`'s split into
+    * [[streamBatches]] time-contiguous part files (plus the flush sentinel),
+    * built on first use, and the table's schema. The table is read only on
+    * a [[streamTables]] miss or a split build. */
+  private def streamSplit(s: SparkSession, dir: String, table: String,
+      flush: Boolean): (java.nio.file.Path, org.apache.spark.sql.types.StructType) = {
     val path = s"$dir/$table.parquet"
-    val nBatches = streamBatches
-    // the split is deterministic per (table contents, nBatches), so it is
-    // written ONCE under a content-fingerprinted stable path and reused by
-    // every twin on the same table (the q_wordcount_file discipline: a
+    lazy val raw = s.read.parquet(path)
+    // the split is deterministic per (table contents, streamBatches), so it
+    // is written ONCE under a content-fingerprinted stable path and reused
+    // by every twin on the same table (the q_wordcount_file discipline: a
     // regenerated corpus changes the fingerprint instead of silently
     // reusing a stale split; the same-filesystem directory move is atomic
     // so concurrent sessions never observe a half-written split)
     val sfTag = dir.replaceAll("[^0-9a-zA-Z.]", "_")
-    // memoized per (dir, table, file size+mtime) for the session — the
-    // lineitemStoreFp discipline: without the memo EVERY twin invocation
-    // re-ran this full-table hash scan just to find the already-built
-    // split. The size+mtime key component closes the session-scoped
-    // staleness window: a table parquet regenerated MID-SESSION changes
-    // the key, so the memo cannot hand back the old corpus's fingerprint
-    // (cheap stat calls; the content hash below still governs the split
-    // path itself).
     val srcP = java.nio.file.Paths.get(path)
     val fresh = s"${java.nio.file.Files.size(srcP)}_${
       java.nio.file.Files.getLastModifiedTime(srcP).toMillis}"
-    val fp = graft.functions.CacheKey.memoFp(
-        s"streamsplit|$dir|$table|$fresh") {
-      graft.functions.CacheKey.contentFp(raw, raw.columns.map(col): _*)
-    }
+    val (fp, schema) = streamTables.computeIfAbsent(s"$dir|$table|$fresh", _ =>
+      (graft.functions.CacheKey.contentFp(raw, raw.columns.map(col): _*),
+        raw.schema))
     // 'flush1' = the one-sentinel scheme (r16): the token is part of the
     // cache key, so split dirs written under the old two-sentinel scheme
     // ('flush') can never be replayed against the new expectations
     val base = java.nio.file.Paths.get(graft.functions.CacheKey.path(
       "streamsplit", version = 1, sfTag,
-      Seq(table, nBatches) ++ (if (flush) Seq("flush1") else Nil), fp))
+      Seq(table, streamBatches) ++ (if (flush) Seq("flush1") else Nil), fp))
     if (!java.nio.file.Files.isDirectory(base)) {
       // range-split on event time (events) / stable key (other tables)
-      // into nBatches ascending part files — partition i of
+      // into streamBatches ascending part files — partition i of
       // repartitionByRange IS range i, part file names sort by partition id
       val orderCol = table match {
         case "events"    => "ts"
@@ -1831,7 +1849,7 @@ object Queries {
       }
       val tmp = java.nio.file.Paths.get(
         base.toString + ".tmp." + java.util.UUID.randomUUID())
-      raw.repartitionByRange(nBatches, col(orderCol))
+      raw.repartitionByRange(streamBatches, col(orderCol))
         .sortWithinPartitions(orderCol)
         .write.mode("overwrite").parquet(tmp.toString)
       // the file source replays in (mtime, path) order — stamp strictly
@@ -1847,21 +1865,16 @@ object Queries {
         java.nio.file.Files.setLastModifiedTime(p,
           java.nio.file.attribute.FileTime.fromMillis(t0 + i * 60000L))
       }
-      // the sentinel is the (nBatches+1)-th replay file — its own trigger
-      if (flush) writeSentinels(raw, tmp, t0 + nBatches * 60000L)
+      // the sentinel is the (streamBatches+1)-th replay file — its own trigger
+      if (flush) writeSentinel(raw, tmp, t0 + streamBatches * 60000L)
       try java.nio.file.Files.move(tmp, base,
         java.nio.file.StandardCopyOption.ATOMIC_MOVE)
       catch { case _: java.nio.file.FileAlreadyExistsException =>
         // another session won the race — its split is identical
-        val ds2 = java.nio.file.Files.list(tmp)
-        try {
-          import scala.jdk.CollectionConverters._
-          ds2.iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-        } finally ds2.close()
-        java.nio.file.Files.deleteIfExists(tmp)
+        graft.functions.CacheKey.deleteRecursively(tmp)
       }
     }
-    base
+    (base, schema)
   }
 
   // ONE sentinel batch: the max-ts event pushed 30 days forward, tagged
@@ -1869,59 +1882,51 @@ object Queries {
   // batch N gates emissions in batch N+1 (the StreamingSpec "second
   // advance commits" discipline) — but the batch AFTER the advance does
   // not need input rows: Spark's no-data micro-batch (on by default,
-  // spark.sql.streaming.noDataMicroBatches.enabled) fires exactly when
-  // the watermark moved, and AvailableNow runs it before terminating, so
-  // the single advance still commits every trailing window. Rounds 12-15
-  // shipped TWO sentinel files (a second +60d advance to force a fed
-  // batch); the r16 per-batch A/B (each trigger's progress report,
-  // min-of-3 at sf0.1; Bench's `layers` now sums those by phase as
-  // `batch_ms`) measured each sentinel trigger at ~0.3-0.4 s of
-  // q_stream_session's ~2.9 s trigger total and the no-data batch
-  // emitting identically, so the second file bought nothing — oracle
-  // re-verified green at sf0.01 and sf0.1 on the one-sentinel scheme. Built from a real row so every
-  // column keeps the exact on-disk dtype (the streaming reader reuses
-  // raw.schema verbatim).
-  private def writeSentinels(raw: DataFrame, into: java.nio.file.Path,
-      mtime0Ms: Long): Unit = {
+  // spark.sql.streaming.noDataMicroBatches.enabled, which runStream
+  // requires) fires exactly when the watermark moved, and AvailableNow
+  // runs it before terminating, so the single advance still commits every
+  // trailing window. Rounds 12-15 shipped TWO sentinel files (a second
+  // +60d advance to force a fed batch); the r16 per-batch A/B (each
+  // trigger's progress report, min-of-3 at sf0.1; Bench's `layers` now
+  // sums those by phase as `batch_ms`) measured each sentinel trigger at
+  // ~0.3-0.4 s of q_stream_session's ~2.9 s trigger total and the no-data
+  // batch emitting identically, so the second file bought nothing — oracle
+  // re-verified green at sf0.01 and sf0.1 on the one-sentinel scheme.
+  // Built from a real row so every column keeps the exact on-disk dtype
+  // (the streaming reader reuses raw.schema verbatim).
+  private def writeSentinel(raw: DataFrame, into: java.nio.file.Path,
+      mtimeMs: Long): Unit = {
     val tsType = raw.schema("ts").dataType
-    Seq((30L, "a")).zipWithIndex.foreach {
-      case ((days, tag), i) =>
-        val shifted = (tsType match {
-          case org.apache.spark.sql.types.LongType =>
-            col("ts") + lit(days * 86400L * 1000000000L) // epoch-nanos long
-          case _ =>
-            col("ts").cast("timestamp") + expr(s"INTERVAL $days DAYS")
-        }).cast(tsType)
-        val sent = java.nio.file.Files.createTempDirectory("graft-flush")
-        raw.orderBy(col("ts").desc).limit(1)
-          .withColumn("ts", shifted)
-          .withColumn("event_type", lit("__flush"))
-          .coalesce(1).write.mode("overwrite").parquet(sent.toString)
-        val ls = java.nio.file.Files.list(sent)
-        val part = try {
-          import scala.jdk.CollectionConverters._
-          ls.iterator().asScala
-            .find(_.getFileName.toString.startsWith("part-")).get
-        } finally ls.close()
-        // 'part-zzzz' sorts after every real 'part-0000x' file, and the
-        // mtime stamps put them last in the (mtime, path) replay order
-        val dst = into.resolve(s"part-zzzz-flush-$tag.parquet")
-        java.nio.file.Files.move(part, dst,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        java.nio.file.Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(mtime0Ms + i * 60000L))
-        val ls2 = java.nio.file.Files.list(sent)
-        try {
-          import scala.jdk.CollectionConverters._
-          ls2.iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-        } finally ls2.close()
-        java.nio.file.Files.deleteIfExists(sent)
-    }
+    val shifted = (tsType match {
+      case org.apache.spark.sql.types.LongType =>
+        col("ts") + lit(30L * 86400L * 1000000000L) // epoch-nanos long
+      case _ =>
+        col("ts").cast("timestamp") + expr("INTERVAL 30 DAYS")
+    }).cast(tsType)
+    val sent = java.nio.file.Files.createTempDirectory("graft-flush")
+    raw.orderBy(col("ts").desc).limit(1)
+      .withColumn("ts", shifted)
+      .withColumn("event_type", lit("__flush"))
+      .coalesce(1).write.mode("overwrite").parquet(sent.toString)
+    val ls = java.nio.file.Files.list(sent)
+    val part = try {
+      import scala.jdk.CollectionConverters._
+      ls.iterator().asScala
+        .find(_.getFileName.toString.startsWith("part-")).get
+    } finally ls.close()
+    // 'part-zzzz' sorts after every real 'part-0000x' file, and the
+    // mtime stamp puts it last in the (mtime, path) replay order
+    val dst = into.resolve("part-zzzz-flush-a.parquet")
+    java.nio.file.Files.move(part, dst,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    java.nio.file.Files.setLastModifiedTime(dst,
+      java.nio.file.attribute.FileTime.fromMillis(mtimeMs))
+    graft.functions.CacheKey.deleteRecursively(sent)
   }
 
   /** Runs a Structured Streaming plan to completion over the table's parquet
-    * and returns the sink table. The input is split into
-    * `GRAFT_STREAM_BATCHES` (default 3) time-contiguous part files replayed
+    * and returns what its sink received, as a local DataFrame. The input is
+    * split into [[streamBatches]] time-contiguous part files replayed
     * one per trigger (`maxFilesPerTrigger=1` under AvailableNow), so every
     * stateful operator crosses ≥3 REAL micro-batch boundaries — watermarks
     * advance between batches, state carries and is merged incrementally —
@@ -1930,7 +1935,6 @@ object Queries {
     * event-time / key column) is what makes the replay a valid log: no
     * retroactively-late data, so watermark eviction provably never drops a
     * row a batch run would keep (min ts of batch k+1 ≥ max ts of batch k).
-    * `GRAFT_STREAM_BATCHES=1` restores the zero-copy single-symlink run.
     *
     * `flush = true` (events only) appends an END-OF-STREAM SENTINEL as a
     * final extra batch: one `event_type='__flush'` row 30 days past the max
@@ -1948,149 +1952,53 @@ object Queries {
     * the sentinel but no aggregate ever sees it. Production streams don't
     * end, so this is purely the bounded-replay bridge — the operator under
     * test is unchanged.
+    *
+    * The split files are staged as symlinks and replayed into a
+    * checkpointed `foreachBatch` sink that collects each batch to the
+    * driver and keeps its rows per batch id: idempotent under the replay of
+    * an uncommitted trailing batch (the same id overwrites its slot), with
+    * complete mode keeping only the newest snapshot. The result is those
+    * rows in batch order. With [[streamResume]] the replay runs as two
+    * SEPARATE queries sharing the checkpoint — every file but the last, a
+    * hard stop, then a fresh query that recovers the state store and offset
+    * log and processes only the final file (not staged until then) — and
+    * answers the same oracle: state carries exactly as if uninterrupted.
     */
   private def runStream(s: SparkSession,
       build: DataFrame => DataFrame, mode: String, dir: String,
       table: String = "events", flush: Boolean = false): DataFrame = {
+    import scala.jdk.CollectionConverters._
     require(streamSplitInputs.contains(table -> flush),
       s"($table, flush=$flush) is not in streamSplitInputs, so no run prepares its split")
-    val path = s"$dir/$table.parquet"
-    val raw = s.read.parquet(path)
-    val nBatches = streamBatches
-    // the file streaming source requires a DIRECTORY base path
-    val streamDir: java.nio.file.Path = if (nBatches == 1) {
-      // zero data copy — production points the stream at a real directory
-      val d = java.nio.file.Files.createTempDirectory("graft-stream")
-      java.nio.file.Files.createSymbolicLink(
-        d.resolve(s"$table.parquet"), java.nio.file.Paths.get(path))
-      // single-batch runs fold the sentinel into the same trigger; the
-      // post-batch watermark advance still closes every window via the
-      // trailing no-data micro-batch
-      if (flush) writeSentinels(raw, d, System.currentTimeMillis())
-      d
-    } else streamSplit(raw, dir, table, flush)
-    // ENFORCE the invariant the one-sentinel flush scheme rests on (the
-    // r16 scheme change): append-mode trailing windows commit via the
-    // no-data micro-batch that fires after the sentinel advances the
-    // watermark. That batch is on by DEFAULT, but a session/config or
-    // Spark-version change flipping it would silently drop every trailing
-    // window — the redundancy the removed second sentinel used to provide
-    // (r16 advice). Pinned here, where every twin's query starts, so both
-    // the plain and the resumable path inherit it.
-    s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    val resume = streamResumeOverride
-      .getOrElse(sys.env.get("GRAFT_STREAM_RESUME").contains("1")) && nBatches > 1
-    if (resume)
-      return runStreamResumable(s, build, mode, raw.schema, streamDir, table)
-    var reader = s.readStream.schema(raw.schema)
-    if (nBatches > 1) reader = reader.option("maxFilesPerTrigger", "1")
-    val src0 = reader.parquet(streamDir.toString)
-    val src = if (table == "events") normalizeTs(src0) else src0
-    val name = "graft_s" + java.util.UUID.randomUUID().toString.replace("-", "")
-    // state-store partition count: each streaming state partition pays a
-    // fixed open/commit/snapshot cost PER MICROBATCH, so a bounded replay
-    // wants few, large state partitions (the opposite of the batch
-    // shuffle default) — GRAFT_STREAM_PARTS overrides for measurement.
-    // Measured on the 5 heaviest twins at sf0.1 (min-of-2 each):
-    // 8 parts 12.4 s, 4 parts 12.5 s, 2 parts 10.3 s, 1 part 11.1 s —
-    // 2 keeps two-way compute parallelism while halving commit count
-    // three more times; 1 serializes the state work and loses the gain.
-    val parts = sys.env.getOrElse("GRAFT_STREAM_PARTS", "2")
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", parts)
-    // bookkeeping BEFORE the query starts: a twin that fails mid-replay
-    // has already registered its memory-sink view, and skipping this on
-    // the exception path would leave that partial sink pinned for the
-    // session — the next streaming query's release must see it
-    // (dropTempView on a never-registered name is a harmless no-op)
-    releasePrevStreamSink(s)
-    prevStreamSink = Some((name, if (nBatches == 1) Some(streamDir) else None,
-      table))
-    try {
-      val q = build(src).writeStream
-        .outputMode(mode).format("memory").queryName(name)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val fed = q.recentProgress.count(_.numInputRows > 0)
-      lastStreamBatches = fed
-      System.err.println(s"[graft-stream] table=$table mode=$mode batches=$fed")
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-    // DEFERRED sink release (bookkept above, before start): the memory
-    // sink pins the twin's full result set in driver memory and
-    // clearCache() does not free it — only dropping the temp view does.
-    // Each runStream drops its PREDECESSOR's view (and symlink dir), so at
-    // most one sink stays pinned at a time across a 240-query catalog run,
-    // while THIS query's result reads zero-copy from its sink. Contract
-    // (internal harness, every caller complies): the returned frame is
-    // consumed before the next streaming query runs. An eager
-    // localCheckpoint copy here instead measured +0.1-0.3 s per twin at
-    // sf0.1 and ~1 s on the 691k-row sf1 session cell.
-    s.table(name)
-  }
-
-  /** The ONE lineitem fingerprint shared by the kmv/hist store caches —
-    * two inlined copies coupled only by the memo key could silently drift
-    * and derive a WRONG cache path for whichever query ran second. Covers
-    * the UNION of columns its consumers read: kmv sketches l_orderkey,
-    * hist bins l_extendedprice (an orderkey-only hash would keep a stale
-    * histogram if prices changed under unchanged keys). */
-  private def lineitemStoreFp(li: DataFrame, dir: String): String =
-    graft.functions.CacheKey.memoFp(s"listore|$dir") {
-      graft.functions.CacheKey.contentFp(li,
-        col("l_orderkey"), col("l_extendedprice"))
-    }
-
-  /** Forces (Some(true)) or suppresses (Some(false)) the stop/resume replay
-    * mode of [[runStream]] regardless of the GRAFT_STREAM_RESUME env var —
-    * the spec hook (RecoverySpec). */
-  @volatile private[graft] var streamResumeOverride: Option[Boolean] = None
-
-  /** Micro-batches with input rows processed by the post-restart phase of
-    * the most recent resumable run — spec introspection: exactly 1 proves
-    * the restart resumed from checkpointed state instead of reprocessing. */
-  @volatile private[graft] var lastResumeBatches: Int = -1
-
-  /** CHECKPOINT-RECOVERY variant of [[runStream]]: replays the same split
-    * in two SEPARATE streaming queries sharing one checkpoint — batches
-    * 1..n-1, a hard stop, then a fresh query that recovers the state store
-    * and offset log from the checkpoint and processes only the final batch.
-    * Reference semantics to match: state carries exactly as if
-    * uninterrupted (the twins' oracles don't change).
-    *
-    * The memory sink can't host this (it is not fault-tolerant: a restarted
-    * query starts it empty, dropping every append-mode row emitted before
-    * the stop), so the sink is `foreachBatch` accumulating per batchId in
-    * driver memory — idempotent under the replay of an uncommitted trailing
-    * batch (same id overwrites its slot), with complete mode keeping only
-    * the newest snapshot. Result size equals what the memory sink would
-    * have pinned; the split files are staged as symlinks so phase 1 simply
-    * cannot see the final batch. */
-  private def runStreamResumable(s: SparkSession, build: DataFrame => DataFrame,
-      mode: String, schema: org.apache.spark.sql.types.StructType,
-      splitDir: java.nio.file.Path, table: String): DataFrame = {
-    import scala.jdk.CollectionConverters._
+    // the one-sentinel flush commits append-mode trailing windows in the
+    // no-data micro-batch after the sentinel's watermark advance; with it
+    // off (a session or Spark-version change) every trailing window would
+    // drop silently
+    require(s.conf.get("spark.sql.streaming.noDataMicroBatches.enabled").toBoolean,
+      "streaming twins need spark.sql.streaming.noDataMicroBatches.enabled=true")
+    val (splitDir, schema) = streamSplit(s, dir, table, flush)
     val ls = java.nio.file.Files.list(splitDir)
-    val parts = try ls.iterator().asScala
+    val files = try ls.iterator().asScala
       .filter(_.getFileName.toString.startsWith("part-")).toVector
       .sortBy(_.getFileName.toString)
     finally ls.close()
-    require(parts.size >= 2, s"resumable replay needs >= 2 split files, got ${parts.size}")
-    val staging = java.nio.file.Files.createTempDirectory("graft-resume-src")
-    val cp = java.nio.file.Files.createTempDirectory("graft-resume-cp")
-    def link(p: java.nio.file.Path): Unit =
-      java.nio.file.Files.createSymbolicLink(staging.resolve(p.getFileName), p)
+    val phases = if (streamResume) Seq(files.init, Seq(files.last)) else Seq(files)
+    def source(from: java.nio.file.Path): DataFrame = {
+      val src = s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+        .parquet(from.toString)
+      if (table == "events") normalizeTs(src) else src
+    }
+    val staging = java.nio.file.Files.createTempDirectory("graft-stream-src")
+    val cp = java.nio.file.Files.createTempDirectory("graft-stream-cp")
     val acc = new java.util.concurrent.ConcurrentHashMap[
       java.lang.Long, Array[org.apache.spark.sql.Row]]()
     @volatile var outSchema: org.apache.spark.sql.types.StructType = null
-    val parts0 = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("GRAFT_STREAM_PARTS", "2"))
-    def phase(): Int = {
-      val src0 = s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-        .parquet(staging.toString)
-      val src = if (table == "events") normalizeTs(src0) else src0
-      val q = build(src).writeStream
+    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
+    s.conf.set("spark.sql.shuffle.partitions", streamStateParts)
+    val fed = try phases.map { phase =>
+      phase.foreach(p => java.nio.file.Files.createSymbolicLink(
+        staging.resolve(p.getFileName), p))
+      val q = build(source(staging)).writeStream
         .outputMode(mode)
         .option("checkpointLocation", cp.toString)
         .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
@@ -2104,59 +2012,41 @@ object Queries {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       // stop on the exception path too: a zombie query holding the
-      // checkpoint open would race the finally-block deletion below
+      // checkpoint open would race the deletion below
       try q.awaitTermination() finally q.stop()
       q.recentProgress.count(_.numInputRows > 0)
-    }
-    try {
-      parts.init.foreach(link)
-      val fed1 = phase()
-      link(parts.last)
-      lastResumeBatches = phase()
-      lastStreamBatches = fed1 + lastResumeBatches
-      System.err.println(s"[graft-stream] table=$table mode=$mode " +
-        s"batches=$lastStreamBatches resumed_after=$fed1")
     } finally {
-      s.conf.set("spark.sql.shuffle.partitions", parts0)
-      // on the failure path too: a crashed phase must not leak the staging
-      // symlinks or the checkpoint (RocksDB state files), nor leave the
-      // predecessor twin's memory sink pinned for the session. Cleanup is
-      // best-effort — a throwing finally would MASK the phase's primary
-      // exception, the one the operator needs to see.
+      s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      // on the failure path too, so a crashed replay leaks neither the
+      // symlinks nor the checkpoint (RocksDB state files); best-effort, as
+      // a throwing finally would MASK the replay's own exception
       try {
-        releasePrevStreamSink(s)
         graft.functions.CacheKey.deleteRecursively(staging)
         graft.functions.CacheKey.deleteRecursively(cp)
       } catch { case e: Throwable =>
-        System.err.println(s"[graft-stream] resume cleanup failed: ${e.getMessage}")
+        System.err.println(s"[graft-stream] cleanup failed: ${e.getMessage}")
       }
     }
+    lastStreamPhases = fed
+    System.err.println(
+      s"[graft-stream] table=$table mode=$mode batches=${fed.mkString("+")}")
     val rows = acc.asScala.toSeq.sortBy(_._1.longValue()).flatMap(_._2)
+    // no batch ever emitted: the schema the query would have produced
     s.createDataFrame(rows.asJava,
-      if (outSchema != null) outSchema
-      else {
-        // no batch ever fired (empty split slice): derive the schema the
-        // way phase() builds the stream, normalizeTs included
-        val src0 = s.readStream.schema(schema).parquet(splitDir.toString)
-        build(if (table == "events") normalizeTs(src0) else src0).schema
-      })
+      if (outSchema != null) outSchema else build(source(splitDir)).schema)
   }
 
-  /** (view name, single-batch temp symlink dir, table) of the last
-    * streaming twin, released on the next [[runStream]] call. */
-  @volatile private var prevStreamSink
-      : Option[(String, Option[java.nio.file.Path], String)] = None
-
-  private def releasePrevStreamSink(s: SparkSession): Unit = {
-    prevStreamSink.foreach { case (view, dir, table) =>
-      s.catalog.dropTempView(view)
-      dir.foreach { d =>
-        java.nio.file.Files.deleteIfExists(d.resolve(s"$table.parquet"))
-        java.nio.file.Files.deleteIfExists(d)
-      }
+  /** The ONE lineitem fingerprint shared by the kmv/hist store caches —
+    * two inlined copies coupled only by the memo key could silently drift
+    * and derive a WRONG cache path for whichever query ran second. Covers
+    * the UNION of columns its consumers read: kmv sketches l_orderkey,
+    * hist bins l_extendedprice (an orderkey-only hash would keep a stale
+    * histogram if prices changed under unchanged keys). */
+  private def lineitemStoreFp(li: DataFrame, dir: String): String =
+    graft.functions.CacheKey.memoFp(s"listore|$dir") {
+      graft.functions.CacheKey.contentFp(li,
+        col("l_orderkey"), col("l_extendedprice"))
     }
-    prevStreamSink = None
-  }
 
   /** Streaming twin of q_window_session — the SAME session semantics through
     * the Structured Streaming `session_window` path, in the PRODUCTION

@@ -419,16 +419,6 @@ final class Stream[T](val ds: Dataset[T],
         graft.sources.AvroIO.write(ds.toDF(), path)
     }
 
-  /** Kafka producer sink (reference: `write_kafka`, src/operator/sink/kafka.rs:98):
-    * each element serialized to the `value` column. Requires a reachable
-    * broker at runtime. */
-  def writeKafka(bootstrap: String, topic: String): Unit =
-    ds.toDF().selectExpr("CAST(to_json(struct(*)) AS STRING) AS value")
-      .write.format("kafka")
-      .option("kafka.bootstrap.servers", bootstrap)
-      .option("topic", topic)
-      .save()
-
   /** Materialize once, replay in later jobs (reference: `cache_vec` /
     * `StreamCache`, src/operator/mod.rs:2264-2359). */
   def cache(): Stream[T] = sharedCache match {

@@ -92,13 +92,6 @@ final class StreamContext(val spark: SparkSession) {
         graft.sources.AvroIO.read(spark, path)
     }
 
-  /** Kafka source → Structured Streaming (reference: src/operator/source/kafka.rs:51). */
-  def streamKafka(bootstrap: String, topics: String): DataFrame =
-    spark.readStream.format("kafka")
-      .option("kafka.bootstrap.servers", bootstrap)
-      .option("subscribe", topics)
-      .load()
-
   /** Async-producer streaming source (reference:
     * src/operator/source/async_stream.rs — a futures `Stream` drained into
     * the dataflow). Spark-first shape: a driver-side pump thread awaits the

@@ -32,12 +32,6 @@ object Multimodal {
     StructField("kind", StringType, nullable = false),
     StructField("payload", BinaryType, nullable = false)))
 
-  /** Columnar metadata extraction — pure Catalyst (no decode needed):
-    * byte length + content digest. */
-  def withByteMeta(df: DataFrame, payloadCol: String): DataFrame =
-    df.withColumn("byte_len", length(col(payloadCol)).cast("long"))
-      .withColumn("digest", sha2(col(payloadCol), 256))
-
   /** STUB DECODER — deterministic fake. A real pipeline would decode the
     * codec here (JPEG/PNG/WAV headers); this derives plausible dimensions
     * from the payload so the distributed plumbing is testable end-to-end. */

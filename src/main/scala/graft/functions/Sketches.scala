@@ -200,11 +200,6 @@ object Sketches {
     pmod(shiftright(h, 15 * r), lit(width.toLong))
   }
 
-  /** Bucket of item `c` in row `r` — hashes `c` itself; prefer building on
-    * a shared [[itemHash]] column ([[cmsBucketOf]]) in multi-row plans. */
-  def cmsBucket(c: Column, r: Int, width: Int, portable: Boolean): Column =
-    cmsBucketOf(itemHash(c, portable), r, width)
-
   /** The count-min sketch of `c`: rows `(r, b, cnt)` for the non-empty
     * buckets of a depth×width grid. One hash + one explode (depth rows per
     * item) + one groupBy of at most depth·width groups — the shuffle

@@ -168,22 +168,6 @@ object TextAnalysis {
   def fingerprint(text: Column): Column =
     md5(concat_ws(" ", array_sort(array_distinct(words(text)))))
 
-  /** 64-bit Rabin-Karp rolling hashes of character k-grams — the classic
-    * fingerprinting primitive (winnowing selects min per window). Exposed as
-    * the min rolling hash per document: a cheap order-sensitive signature.
-    * Documents with fewer than 3 words hash their full word join as the
-    * single gram (array_min over no grams would be NULL, turning every
-    * short doc into one null bucket downstream). `k` is reserved for the
-    * typed character-k-gram implementation the tests exercise. */
-  def rollingMinHash(text: Column, k: Int = 16): Column =
-    coalesce(
-      array_min(transform(
-        when(size(words(text)) < 3, array().cast("array<string>"))
-          .otherwise(transform(sequence(lit(0), size(words(text)) - 3),
-            i => concat_ws(" ", slice(words(text), i + 1, lit(3))))),
-        g => xxhash64(g))),
-      xxhash64(concat_ws(" ", words(text))))
-
   /** Full per-document profile in one narrow pass. */
   /** Per-document top-`k` terms by TF-IDF — the classic per-doc keyword
     * signal (topical fingerprinting, near-dup triage, corpus drift

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.{Window => W, WindowSpec}
+import org.apache.spark.sql.expressions.{Window => W}
 
 /** Catalyst lowering of the reference's window descriptors for the
   * SQL-expressible cases (reference: src/operator/window/descr/). This is the
@@ -16,28 +16,11 @@ import org.apache.spark.sql.expressions.{Window => W, WindowSpec}
   */
 object WindowsDF {
 
-  /** Event-time tumbling window (reference: descr/event_time.rs tumbling):
-    * one shuffle on (keys, window). */
-  def tumblingEventTime(df: DataFrame, ts: String, size: String, keys: Column*): DataFrame =
-    df.groupBy((window(col(ts), size).getField("start").as("w_start_ts") +: keys): _*)
-      .agg(count(lit(1)).as("n"))
-      .withColumn("w_start", unix_micros(col("w_start_ts"))).drop("w_start_ts")
-
   /** Grouped aggregation under an event-time tumbling window, caller supplies
     * the aggregates. */
   def tumblingAgg(df: DataFrame, ts: String, size: String, keys: Seq[Column],
       aggs: Seq[Column]): DataFrame =
     df.groupBy((window(col(ts), size).getField("start").as("w_start_ts") +: keys): _*)
-      .agg(aggs.head, aggs.tail: _*)
-      .withColumn("w_start", unix_micros(col("w_start_ts"))).drop("w_start_ts")
-
-  /** Event-time sliding window (reference: descr/event_time.rs sliding) —
-    * Spark's `window(ts, size, slide)` explodes each row into size/slide
-    * windows map-side, then partial-aggregates: the shuffle carries one row
-    * per (key, window), not per event. */
-  def slidingAgg(df: DataFrame, ts: String, size: String, slide: String,
-      keys: Seq[Column], aggs: Seq[Column]): DataFrame =
-    df.groupBy((window(col(ts), size, slide).getField("start").as("w_start_ts") +: keys): _*)
       .agg(aggs.head, aggs.tail: _*)
       .withColumn("w_start", unix_micros(col("w_start_ts"))).drop("w_start_ts")
 
@@ -62,14 +45,6 @@ object WindowsDF {
     require(size > 0, s"count window needs size > 0, got $size")
     val w = W.partitionBy(keys: _*).orderBy(order: _*)
     df.withColumn("w_id", ((row_number().over(w) - 1) / size).cast("long"))
-  }
-
-  /** Last-k frame per arriving element (reference: descr/last_k.rs):
-    * `rowsBetween(-(k-1), 0)` — pure window function, no shuffle beyond the
-    * key partitioning. */
-  def lastKSpec(k: Int, keys: Seq[Column], order: Seq[Column]): WindowSpec = {
-    require(k >= 1, s"last-k window needs k >= 1, got $k")
-    W.partitionBy(keys: _*).orderBy(order: _*).rowsBetween(-(k - 1), 0)
   }
 
   /** Per-event session-ID assignment by the inactivity-gap rule — the flat

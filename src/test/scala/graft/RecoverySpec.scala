@@ -3,7 +3,7 @@ package graft
 /** Checkpoint-recovery pins for the streaming twins: the catalog's bounded
   * replay runs batches 1..n-1 in one query, HARD-STOPS it, then a fresh
   * query recovers offsets + state store from the shared checkpoint and
-  * processes only the final batch ([[Queries.runStreamResumable]]).
+  * processes only the final batch ([[Queries.streamResume]]).
   * Reference semantics to match: state carries exactly as if uninterrupted —
   * the restarted twin must satisfy the SAME oracle as its batch counterpart
   * (the uninterrupted twins' claim, now across a process-lifecycle seam).
@@ -21,20 +21,21 @@ class RecoverySpec extends SparkSpec {
     * the post-restart query processed EXACTLY one micro-batch — recovery,
     * not reprocessing. */
   private def pinResume(streamName: String, batchName: String): Unit = {
-    Queries.streamResumeOverride = Some(true)
+    val prev = Queries.streamResume
+    Queries.streamResume = true
     try {
       val st = Queries.all(streamName)(spark, dir)
       val cols = st.columns.sorted.toSeq
       val sv = st.selectExpr(cols: _*)
       val bt = Queries.all(batchName)(spark, dir).selectExpr(cols: _*)
-      assert(Queries.lastResumeBatches == 1,
-        s"restart should process only the final batch, fed ${Queries.lastResumeBatches}")
+      assert(Queries.lastStreamPhases.size == 2 && Queries.lastStreamPhases.last == 1,
+        s"restart should process only the final batch, fed ${Queries.lastStreamPhases}")
       val sOnly = sv.exceptAll(bt).count()
       val bOnly = bt.exceptAll(sv).count()
       assert(sOnly == 0 && bOnly == 0,
         s"$streamName after restart diverged from $batchName: " +
           s"streamOnly=$sOnly batchOnly=$bOnly")
-    } finally Queries.streamResumeOverride = None
+    } finally Queries.streamResume = prev
   }
 
   test("session-window twin survives a stop/resume: complete-mode state recovers from checkpoint") {

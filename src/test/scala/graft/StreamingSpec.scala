@@ -1093,14 +1093,22 @@ class StreamingSpec extends SparkSpec {
     // regression to one-batch (or a broken split cache) fails a named test
     // instead of silently weakening the incremental-state evidence
     val dir = "/root/testdata/sf0.001"
-    val streamed = Queries.q_stream_tumbling(spark, dir)
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2),
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2),
         r.getDouble(3))).toSet
-    assert(Queries.lastStreamBatches >= 3,
-      s"expected >= 3 input-fed micro-batches, got ${Queries.lastStreamBatches}")
-    val batch = Queries.q_window_tumbling(spark, dir)
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2),
-        r.getDouble(3))).toSet
-    assert(streamed == batch)
+    val parts = spark.conf.get("spark.sql.shuffle.partitions")
+    val twin = Queries.q_stream_tumbling(spark, dir)
+    val streamed = rows(twin)
+    assert(Queries.lastStreamPhases.sum >= 3,
+      s"expected >= 3 input-fed micro-batches, got ${Queries.lastStreamPhases}")
+    assert(streamed == rows(Queries.q_window_tumbling(spark, dir)))
+    // the twin leaves nothing behind in the session: no sink view, no
+    // running query, the shuffle width it replayed at restored
+    assert(!spark.catalog.listTables().collect().exists(_.name.startsWith("graft_s")))
+    assert(spark.streams.active.isEmpty)
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == parts)
+    // and its result is an ordinary local frame a later twin cannot release
+    Queries.q_stream_tumbling(spark, dir).count()
+    assert(rows(twin) == streamed)
   }
 }

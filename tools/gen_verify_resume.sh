@@ -1,8 +1,9 @@
 #!/bin/bash
 # Regenerate the stop/resume checkpoint-recovery artifacts
 # (VERIFY_RESUME.json, VERIFY_RESUME_ROCKSDB.json): every streaming twin
-# replayed through runStreamResumable (batches 1..n-1, hard stop, fresh
-# query recovering state+offsets from the checkpoint, final batch), then
+# replayed by Queries.runStream under GRAFT_STREAM_RESUME=1 (batches
+# 1..n-1, hard stop, fresh query recovering state+offsets from the
+# checkpoint, final batch), then
 # DuckDB-oracle-compared — once on the default HDFS-backed state store,
 # once composed with RocksDB. Run at a round boundary whenever the
 # streaming scheme changes (the r16 one-sentinel change is why r17
