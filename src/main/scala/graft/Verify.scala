@@ -1,7 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-import Harness.jsonString
+import Harness.json
 /** Driver-run correctness dump: each catalog cell's result (portable
   * hashing) → parquet, plus oracle_sql.json, for the driver's DuckDB
   * compare. */
@@ -32,6 +32,11 @@ object Verify {
       Some(msg)
     }
 
+  /** The oracle SQL of the selected cells only, so a compare over the
+    * output directory finds a result for every entry. */
+  def oracleFor(selected: String => Boolean): Map[String, String] =
+    SparkEntry.oracleSql.filter { case (name, _) => selected(name) }
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     // the exact session the bench times, so the oracle sweep proves the
@@ -50,14 +55,11 @@ object Verify {
       // cached data across the whole catalog (see the Bench note)
       spark.catalog.clearCache()
     }
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      json.writeValueAsString(oracleFor(Harness.selected)))
     // machine-readable failure manifest next to the results: even a reader
     // that ignores the sentinel parquet sees which entries errored and why
-    val failJson = failures
-      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/failures.json"), failJson)
+    Files.writeString(Paths.get(s"$outDir/failures.json"), json.writeValueAsString(failures))
     if (failures.nonEmpty)
       System.err.println(s"[verify] ${failures.size} queries FAILED: ${failures.keys.mkString(", ")}")
     spark.stop()

@@ -66,12 +66,18 @@ final class StreamContext(val spark: SparkSession) {
 
   /** Parquet source (reference: src/operator/source/parquet.rs:21). Spark's
     * reader is already parallel + columnar; the reference's single-reader
-    * `Replication::One` restriction does not apply. */
-  def streamParquet(path: String): DataFrame = spark.read.parquet(path)
+    * `Replication::One` restriction does not apply. Like the reference's
+    * source, it runs nothing to learn its schema: [[graft.sources.Parquet]]
+    * reads one footer on the driver (`_common_metadata`, else `_metadata`,
+    * else the first data file in path order) and converts it with Spark's
+    * own code under the session's current conf. Spark infers instead —
+    * one Spark job — for a glob path, with `mergeSchema` on, or when the
+    * path holds no file to read. */
+  def streamParquet(path: String): DataFrame = graft.sources.Parquet.read(spark, path)
 
   /** Typed parquet source — `stream_parquet_one().to_rows::<T>()`. */
   def streamParquetAs[T: Encoder](path: String): Stream[T] =
-    new Stream(spark.read.parquet(path).as[T])
+    new Stream(graft.sources.Parquet.read(spark, path).as[T])
 
   /** ORC source (beyond-reference: the other columnar format Spark ships
     * natively — predicate pushdown and column pruning work like parquet's). */
@@ -130,10 +136,6 @@ final class StreamContext(val spark: SparkSession) {
 
   /** Wrap an existing Dataset (escape hatch / interop). */
   def fromDataset[T](ds: Dataset[T]): Stream[T] = new Stream(ds)
-
-  /** Convenience: a driver-testdata table. */
-  def table(sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
 }
 
 object StreamContext {

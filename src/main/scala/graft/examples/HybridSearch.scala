@@ -1,6 +1,7 @@
 package graft.examples
 
 import graft.functions.{InvertedIndex, Similarity}
+import graft.sources.Parquet
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -44,8 +45,8 @@ object HybridSearch {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val spark = graft.api.StreamContext.localSession(8)
     spark.sparkContext.setLogLevel("WARN")
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val docs = Parquet.read(spark, s"$sfDir/documents.parquet")
+    val emb = Parquet.read(spark, s"$sfDir/embeddings.parquet")
     val index = InvertedIndex.build(docs, "doc_id", "text")
     val hits = search(index, emb, Seq("dup", "spark", "vector"),
       queryVecId = 0L)

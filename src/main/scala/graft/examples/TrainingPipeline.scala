@@ -1,6 +1,7 @@
 package graft.examples
 
 import graft.functions.{Dedup, IvfIndex, QualityClassifier, Sampling, Similarity, TextAnalysis}
+import graft.sources.Parquet
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -27,7 +28,7 @@ object TrainingPipeline {
       dsirKept: Long, mixtureTokens: Long, pplKept: Long)
 
   def run(spark: SparkSession, sfDir: String): Stats = {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = Parquet.read(spark, s"$sfDir/documents.parquet")
     val total = docs.count()
 
     // 0. line-level C4 cleaning (reported, not gated, so the stage stats
@@ -190,7 +191,7 @@ object TrainingPipeline {
     packed.unpersist()
 
     // 7. ANN index over the embeddings (build once, query many)
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val emb = Parquet.read(spark, s"$sfDir/embeddings.parquet")
     val index = IvfIndex.build(emb, "vec_id", "embedding", nlist = 8, kmeansIters = 2)
     val ann = IvfIndex.query(index, emb.filter(col("vec_id") < 10),
       "vec_id", "embedding", k = 5, nprobe = 2)

@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.sources.Parquet
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -30,7 +31,7 @@ object DigestStore {
 
   /** The full digest history: a recursive read over every increment. */
   def load(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/inc=*")
+    Parquet.read(spark, s"$path/inc=*")
 
   /** Highest increment present (the SketchStore/HistStore sibling). */
   private def latestInc(spark: SparkSession, path: String): Int = {

@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.sources.Parquet
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Persistent frozen-grid histogram store — crawl-cycle distribution
@@ -32,7 +33,7 @@ object HistStore {
 
   /** The frozen (bins, lo, hi) grid. */
   def params(spark: SparkSession, path: String): (Int, Double, Double) = {
-    val r = spark.read.parquet(s"$path/meta").head()
+    val r = Parquet.read(spark, s"$path/meta").head()
     (r.getInt(0), r.getDouble(1), r.getDouble(2))
   }
 
@@ -47,7 +48,7 @@ object HistStore {
 
   /** The current (bin, cnt) state. */
   def load(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/inc=" + latestInc(spark, path))
+    Parquet.read(spark, s"$path/inc=" + latestInc(spark, path))
 
   /** One crawl cycle: histogram the increment only on the STORED grid,
     * bin-wise-sum with the stored state, write as increment `inc` (must
@@ -61,7 +62,7 @@ object HistStore {
     val merged = Sketches.histogramMerge(
       load(spark, path), Sketches.histogram(df, c, bins, lo, hi))
     merged.write.mode("overwrite").parquet(s"$path/inc=$inc")
-    spark.read.parquet(s"$path/inc=$inc")
+    Parquet.read(spark, s"$path/inc=$inc")
   }
 
   /** Interpolated quantiles of the current state, under the stored grid.

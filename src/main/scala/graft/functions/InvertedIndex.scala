@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.sources.Parquet
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -118,7 +119,7 @@ object InvertedIndex {
   }
 
   def load(spark: SparkSession, path: String): Built = {
-    val statsDf = spark.read.parquet(s"$path/stats")
+    val statsDf = Parquet.read(spark, s"$path/stats")
     val stats = statsDf.head()
     // pre-r16 indexes persisted no bucket count — they were all written
     // with the then-fixed 64 (the Built default)
@@ -126,8 +127,8 @@ object InvertedIndex {
       if (statsDf.columns.contains("buckets"))
         stats.getInt(statsDf.columns.indexOf("buckets"))
       else TermBuckets
-    Built(spark.read.parquet(s"$path/postings"),
-      spark.read.parquet(s"$path/lens"),
+    Built(Parquet.read(spark, s"$path/postings"),
+      Parquet.read(spark, s"$path/lens"),
       stats.getLong(0), stats.getLong(1), buckets)
   }
 

@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.sources.Parquet
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -123,8 +124,8 @@ object IvfIndex {
 
   /** Reopen a saved index. */
   def load(spark: SparkSession, path: String): Built = {
-    val lists = spark.read.parquet(s"$path/lists")
-    val centroids = spark.read.parquet(s"$path/centroids")
+    val lists = Parquet.read(spark, s"$path/lists")
+    val centroids = Parquet.read(spark, s"$path/centroids")
       .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toArray)
       .sortBy(_._1).map(_._2)
     Built(lists, centroids)
@@ -259,7 +260,7 @@ object IvfIndex {
       val slice = df.filter(shardFilter(idCol, shards, sIdx))
       val built = build(slice, idCol, vecCol, nlist, kmeansIters)
       save(built, dir)
-      (sIdx.toLong, spark.read.parquet(s"$dir/lists").count(),
+      (sIdx.toLong, Parquet.read(spark, s"$dir/lists").count(),
         built.centroids.length)
     }
     val dirs = shardDirs(path, shards).zipWithIndex
@@ -283,7 +284,7 @@ object IvfIndex {
 
   /** Shard count from a sharded index's manifest. */
   def shardedManifest(spark: SparkSession, path: String): Int =
-    spark.read.parquet(s"$path/manifest")
+    Parquet.read(spark, s"$path/manifest")
       .select(max(col("shards"))).head().getInt(0)
 
   /** Append a new batch to a SAVED sharded index: each row routes to its

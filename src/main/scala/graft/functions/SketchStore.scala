@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.sources.Parquet
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -36,7 +37,7 @@ object SketchStore {
 
   /** The stored (k, portable) parameters. */
   def params(spark: SparkSession, path: String): (Int, Boolean) = {
-    val r = spark.read.parquet(s"$path/meta").head()
+    val r = Parquet.read(spark, s"$path/meta").head()
     (r.getInt(0), r.getBoolean(1))
   }
 
@@ -51,7 +52,7 @@ object SketchStore {
 
   /** The current sketch: the highest increment's k smallest hashes. */
   def load(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/inc=" + latestInc(spark, path))
+    Parquet.read(spark, s"$path/inc=" + latestInc(spark, path))
 
   /** One crawl cycle: sketch the new increment only, merge with the
     * stored sketch under the stored parameters, write the result as
@@ -66,7 +67,7 @@ object SketchStore {
     val merged = Sketches.kmvMerge(
       load(spark, path), Sketches.kmvSketch(df, c, k, portable), k)
     merged.write.mode("overwrite").parquet(s"$path/inc=$inc")
-    spark.read.parquet(s"$path/inc=$inc")
+    Parquet.read(spark, s"$path/inc=$inc")
   }
 
   /** Distinct-count estimate from the current sketch, under the stored

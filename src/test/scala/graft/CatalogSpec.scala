@@ -27,6 +27,12 @@ class CatalogSpec extends SparkSpec {
     assert(catalog.forall(_.oracleSql.trim.nonEmpty))
   }
 
+  test("Verify records the oracle SQL of the selected cells only") {
+    assert(Verify.oracleFor(Set("q1_agg", "q_tpch5")) ==
+      Map("q1_agg" -> Queries.oracle("q1_agg"), "q_tpch5" -> Queries.oracle("q_tpch5")))
+    assert(Verify.oracleFor(_ => true) == SparkEntry.oracleSql)
+  }
+
   test("portable-bench cells are hashed cells, portable headlines are bench-portable") {
     assert(tagged(Hashed).size == 26)
     assert(tagged(BenchPortable).subsetOf(tagged(Hashed)), tagged(BenchPortable) -- tagged(Hashed))

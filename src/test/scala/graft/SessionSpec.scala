@@ -35,15 +35,23 @@ class SessionSpec extends SparkSpec {
     assert(conf.last == ("spark.sql.adaptive.enabled" -> "false"))
   }
 
-  test("no hand-rolled session builders outside the recipe") {
-    val needle = "SparkSession" + ".builder"
-    val hits = Seq("src/main", "src/test").flatMap { root =>
+  /** Names of the Scala files under `roots` whose source contains `needle`. */
+  private def filesWith(needle: String, roots: String*): Seq[String] =
+    roots.flatMap { root =>
       val files = Files.walk(Paths.get(root))
       try files.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
       finally files.close()
     }.filter((p: Path) => new String(Files.readAllBytes(p), "ISO-8859-1").contains(needle))
       .map(_.getFileName.toString).sorted
+
+  test("no hand-rolled session builders outside the recipe") {
     // ExtensionsSpec needs a fresh builder for withExtensions
-    assert(hits == Seq("ExtensionsSpec.scala", "StreamContext.scala"))
+    assert(filesWith("SparkSession" + ".builder", "src/main", "src/test") ==
+      Seq("ExtensionsSpec.scala", "StreamContext.scala"))
+  }
+
+  test("no parquet read outside the one reader") {
+    // Parquet.read's fallback is the one place Spark infers a schema
+    assert(filesWith(".read" + ".parquet(", "src/main") == Seq("Parquet.scala"))
   }
 }

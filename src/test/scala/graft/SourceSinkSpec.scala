@@ -1,7 +1,10 @@
 package graft
 
 import graft.api._
+import graft.sources.Parquet
 import java.nio.file.Files
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Source/sink round-trips (reference: §2.1/§2.2 — file/csv/parquet sources,
   * write_csv/write_parquet sinks, sequential vs single-file variants). */
@@ -157,6 +160,109 @@ class SourceSinkSpec extends SparkSpec {
     assert(formatted.contains("PartitionFilters: [isnotnull(day"),
       s"day filter must prune partitions:\n$formatted")
     assert(pruned.count() == 25)
+  }
+
+  /** The parquet fixture tables (FIXTURES.md, family B). */
+  private val sf0001 = "/root/testdata/sf0.001"
+
+  /** The schema of the frame `read` builds, or the error condition it
+    * raises, and the Spark jobs that building it ran. */
+  private def built(read: => org.apache.spark.sql.DataFrame): (Either[String, StructType], Long) = {
+    val (out, layers) = Layers.measure(spark) {
+      try Right(read.schema)
+      catch { case e: org.apache.spark.SparkThrowable => Left(e.getCondition) }
+    }
+    (out, layers.jobs)
+  }
+
+  /** `Parquet.read` against Spark's own inference: the same schema or
+    * error, and no Spark job where the footer rule applies. */
+  private def matchesSpark(path: String, jobs: Long = 0L): StructType = {
+    val (ours, ourJobs) = built(Parquet.read(spark, path))
+    val (theirs, _) = built(spark.read.parquet(path))
+    assert(ours == theirs, path)
+    assert(ourJobs == jobs, path)
+    ours.toOption.orNull
+  }
+
+  test("Parquet.read learns Spark's schema from one footer and runs no Spark job") {
+    val s = imp; import s._
+    Seq("region", "nation", "customer", "supplier", "part", "orders", "lineitem",
+      "events", "documents", "embeddings")
+      .foreach(t => matchesSpark(s"$sf0001/$t.parquet"))
+    // a Spark-written directory: _SUCCESS, .crc sidecars, Spark row metadata
+    val dir = tmp() + "/typed"
+    val meta = new MetadataBuilder().putString("comment", "kept").build()
+    Seq((1L, "a"), (2L, "b")).toDF("id", "s")
+      .select(col("id"), col("s").as("s", meta),
+        col("id").cast("decimal(18,2)").as("money"), timestamp_micros(col("id")).as("ts"),
+        struct(col("id"), array(col("s")).as("arr")).as("nested"),
+        map(col("s"), col("id")).as("m"))
+      .write.parquet(dir)
+    val names = new java.io.File(dir).list().toSet
+    assert(names("_SUCCESS") && names.exists(_.endsWith(".crc")))
+    val schema = matchesSpark(dir)
+    assert(schema("s").metadata.getString("comment") == "kept")
+    assert(Parquet.read(spark, dir).orderBy("id").collect().toSeq ==
+      spark.read.parquet(dir).orderBy("id").collect().toSeq)
+    // Spark's own inference is the one-task job this reader saves
+    assert(built(spark.read.parquet(dir))._2 == 1L)
+  }
+
+  test("Parquet.read applies the session's current conf at every call") {
+    // TIMESTAMP(NANOS): an epoch-nano BIGINT under nanosAsLong, Spark's
+    // error without it; Spark cannot write this type, parquet-mr can
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.util.HadoopOutputFile
+    import org.apache.parquet.schema.MessageTypeParser
+    val nanos = tmp() + "/events.parquet"
+    val nanosType = MessageTypeParser.parseMessageType(
+      "message events { required int64 event_id; required int64 ts (TIMESTAMP(NANOS,true)); }")
+    val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(
+      new org.apache.hadoop.fs.Path(nanos), spark.sparkContext.hadoopConfiguration))
+      .withType(nanosType).build()
+    try w.write(new SimpleGroupFactory(nanosType).newGroup()
+      .append("event_id", 1L).append("ts", 1700000000000000000L))
+    finally w.close()
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    assert(withConf(key -> "true")(matchesSpark(nanos))("ts").dataType == LongType)
+    withConf(key -> "false") {
+      matchesSpark(nanos)
+      assert(built(Parquet.read(spark, nanos))._1 == Left("PARQUET_TYPE_ILLEGAL"))
+    }
+    assert(withConf(key -> "true")(matchesSpark(nanos))("ts").dataType == LongType)
+    // the fixture's timestamp[us] column follows inferTimestampNTZ
+    val events = s"$sf0001/events.parquet"
+    val ntz = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    assert(withConf(ntz -> "true")(matchesSpark(events))("ts").dataType == TimestampNTZType)
+    assert(withConf(ntz -> "false")(matchesSpark(events))("ts").dataType == TimestampType)
+  }
+
+  test("Parquet.read hands globs, mergeSchema and empty paths to Spark; recurses into partitions") {
+    val s = imp; import s._
+    val base = tmp()
+    Seq((1L, "a")).toDF("id", "s").write.parquet(s"$base/inc=0")
+    Seq((2L, "b")).toDF("id", "s").write.parquet(s"$base/inc=1")
+    matchesSpark(s"$base/inc=*", jobs = 1L)
+    // two files with different columns in one directory: off, the first
+    // file in path order; on, Spark merges them
+    val mixed = s"$base/mixed"
+    Seq((1L, "a")).toDF("id", "s").write.parquet(mixed)
+    Seq((2L, 2.5)).toDF("id", "d").write.mode("append").parquet(mixed)
+    assert(matchesSpark(mixed).fieldNames.length == 2)
+    withConf("spark.sql.parquet.mergeSchema" -> "true") {
+      assert(matchesSpark(mixed, jobs = 1L).fieldNames.toSet == Set("id", "s", "d"))
+    }
+    // a partition directory: the first data file's footer, partition
+    // columns appended by Spark, still no job
+    val parted = s"$base/parted"
+    Seq((1L, 0, "x"), (2L, 1, "y")).toDF("id", "k", "s").write.partitionBy("k").parquet(parted)
+    assert(matchesSpark(parted).fieldNames.toSeq == Seq("id", "s", "k"))
+    // nothing to read: Spark's own error
+    val empty = Files.createTempDirectory("graft-empty").toString
+    assert(built(Parquet.read(spark, empty))._1 == Left("UNABLE_TO_INFER_SCHEMA"))
+    assert(built(Parquet.read(spark, s"$base/missing"))._1 == Left("PATH_NOT_FOUND"))
   }
 
   test("csv write/read round-trip with header and typed schema") {
